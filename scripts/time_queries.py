@@ -37,8 +37,10 @@ def main() -> None:
     best: dict[str, float] = {}
     rows: dict[str, int] = {}
     for rep in range(REPS):
-        _wait_good_epoch(spark, CPUS, guard)
         for q in names:
+            # guard every query: an epoch that degrades mid-rep must not
+            # pollute the queries after it
+            _wait_good_epoch(spark, CPUS, guard)
             t0 = time.time()
             rows[q] = QUERIES[q](spark, SF_DIR).count()
             dt = time.time() - t0

@@ -1,20 +1,29 @@
-"""Vectorized geometry kernels (Arrow pandas UDFs, numpy inside).
+"""Vectorized geometry kernels (numpy) and the one Arrow refine UDF.
 
-- point_in_polygon: even-odd ray-cast, the exact test the reference gets
+- ray_cast: even-odd point-in-polygon, the exact test the reference gets
   from rasterio.features.rasterize's point sampling
   (/root/reference/terrakit/download/download_data.py:371-394). Vectorized
   across the batch AND across polygon edges; handles ragged vertex lists by
   padding with the last vertex (degenerate padded edges contribute nothing
   to the crossing count).
-- rasterize_polygons: burn a list of (polygon, class) onto a pixel grid in
-  geometry-sequence order — later shapes overwrite earlier ones, matching
-  rasterio's default burn order.
+- sat_depth: convex x convex separating-axis overlap depth.
+- clip_area / clip_area_rect: exact convex intersection area
+  (Sutherland-Hodgman); rect_cover_area adds the contained-polygon shortcut.
+- GeomIndex + refine_udf: a polygon layer's geometry held once on the
+  driver and broadcast, and the single pandas UDF that feeds any of the
+  kernels above from either that index (keys over Arrow) or a per-row
+  vertices column.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
@@ -57,102 +66,6 @@ def ray_cast(px: np.ndarray, py: np.ndarray, polys: np.ndarray) -> np.ndarray:
     return inside
 
 
-def pip_expr(px: str, py: str, verts: str):
-    """Even-odd ray-cast PIP as a PURE Spark SQL expression (higher-order
-    aggregate over polygon edges) — whole-stage codegen, zero Python, no
-    Arrow transfer. Semantically identical to the numpy ray_cast below:
-    for edge i with predecessor j: crossing iff (yi>py) != (yj>py) and
-    px < (xj-xi)*(py-yi)/(yj-yi)+xi; division guarded by CASE (the crossing
-    condition is false whenever yj == yi).
-
-    verts is a flat array<double> [x0,y0,x1,y1,...]."""
-    from pyspark.sql import functions as F
-
-    n = f"(size({verts}) div 2)"
-    xi = f"{verts}[2*i]"
-    yi = f"{verts}[2*i+1]"
-    xj = f"{verts}[2*pmod(i - 1, {n})]"
-    yj = f"{verts}[2*pmod(i - 1, {n}) + 1]"
-    crossing = (
-        f"CASE WHEN ({yi} > {py}) != ({yj} > {py}) "
-        f"THEN {px} < ({xj} - {xi}) * ({py} - {yi}) / ({yj} - {yi}) + {xi} "
-        f"ELSE false END"
-    )
-    return F.expr(
-        f"aggregate(sequence(0, {n} - 1), false, (acc, i) -> acc != ({crossing}))"
-    )
-
-
-def _ray_cast_chunked(px: np.ndarray, py: np.ndarray, polys: np.ndarray) -> np.ndarray:
-    """ray_cast over cache-resident slices — same DRAM story as the clip
-    kernels (each edge pass streams ~8 (B,) temporaries): measured 2.5x at
-    multi-million-row batches, bit-identical (pure batch split)."""
-    n = len(px)
-    if n <= _KERNEL_CHUNK:
-        return ray_cast(px, py, polys)
-    out = np.empty(n, dtype=bool)
-    for i in range(0, n, _KERNEL_CHUNK):
-        j = min(i + _KERNEL_CHUNK, n)
-        out[i:j] = ray_cast(px[i:j], py[i:j], polys[i:j])
-    return out
-
-
-def _pip_fn(px: pd.Series, py: pd.Series, verts: pd.Series) -> pd.Series:
-    if len(px) == 0:
-        return pd.Series([], dtype=bool)
-    arr = verts.to_numpy()
-    try:
-        # fast path: uniform vertex counts in the batch -> one bulk convert
-        polys = np.asarray(arr.tolist(), dtype=np.float64).reshape(len(arr), -1, 2)
-    except ValueError:
-        polys = _pad_vertices(verts)
-    return pd.Series(
-        _ray_cast_chunked(px.to_numpy(np.float64), py.to_numpy(np.float64), polys)
-    )
-
-
-_pip_udf = None
-
-
-def point_in_polygon(px, py, verts):
-    """Column expression: ray-cast PIP as an Arrow pandas UDF (lazily built —
-    pandas_udf needs an active SparkSession to parse its return type)."""
-    global _pip_udf
-    if _pip_udf is None:
-        _pip_udf = pandas_udf(_pip_fn, "boolean")
-    return _pip_udf(px, py, verts)
-
-
-def point_in_polygon_bcast(spark, keys: np.ndarray, polys: np.ndarray, key_col, px, py):
-    """Ray-cast PIP with the polygon GEOMETRY broadcast instead of shipped
-    per candidate row: the Arrow transfer carries (px, py, key) — three
-    scalars — and the UDF resolves key -> padded vertex row with one
-    vectorized searchsorted into the broadcast cube. Kills both the
-    JVM-side Arrow serialization of the nested vertex array (the measured
-    dominant cost of the refine at sf1) AND the vertex bytes in the
-    exploded polygon side's shuffle. The dimension must be driver-sized
-    (N_polys x max_nv x 2 float64 — ~21 MB at sf1's 330k polygons);
-    callers gate on a size probe, the column path remains the default.
-
-    keys MUST be sorted ascending (asserted); every key_col value must be
-    present (joined candidates came from this very polygon table)."""
-    assert len(keys) == 0 or bool(np.all(np.diff(keys) > 0))
-    b = spark.sparkContext.broadcast((keys, polys))
-
-    def f(k: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        if len(k) == 0:
-            return pd.Series([], dtype=bool)
-        bk, bp = b.value
-        idx = np.searchsorted(bk, k.to_numpy(np.int64))
-        return pd.Series(
-            _ray_cast_chunked(
-                x.to_numpy(np.float64), y.to_numpy(np.float64), bp[idx]
-            )
-        )
-
-    return pandas_udf(f, "boolean")(key_col, px, py)
-
-
 # ------------------------------------------------------- convex SAT overlap
 def sat_depth(va: np.ndarray, vb: np.ndarray) -> np.ndarray:
     """Signed separation depth for convex polygon pairs (separating-axis
@@ -193,63 +106,6 @@ def sat_depth(va: np.ndarray, vb: np.ndarray) -> np.ndarray:
             dead = (axx == 0.0) & (axy == 0.0)
             best = np.minimum(best, np.where(dead, np.inf, gap))
     return best
-
-
-def _verts_batch(verts: pd.Series) -> np.ndarray:
-    arr = verts.to_numpy()
-    try:
-        return np.asarray(arr.tolist(), dtype=np.float64).reshape(len(arr), -1, 2)
-    except ValueError:
-        return _pad_vertices(verts)
-
-
-def _overlap_fn(va: pd.Series, vb: pd.Series) -> pd.Series:
-    if len(va) == 0:
-        return pd.Series([], dtype=np.float64)
-    return pd.Series(sat_depth(_verts_batch(va), _verts_batch(vb)))
-
-
-_overlap_udf = None
-
-
-def convex_overlap_depth(verts_a, verts_b):
-    """Column expression: SAT separation depth as an Arrow pandas UDF."""
-    global _overlap_udf
-    if _overlap_udf is None:
-        _overlap_udf = pandas_udf(_overlap_fn, "double")
-    return _overlap_udf(verts_a, verts_b)
-
-
-def convex_overlap_depth_bcast(spark, keys_a: np.ndarray, cube_a: np.ndarray,
-                               keys_b: np.ndarray, cube_b: np.ndarray,
-                               key_a_col, key_b_col):
-    """SAT separation depth with BOTH polygon layers' geometry broadcast
-    (the point_in_polygon_bcast pattern, doubled): the Arrow transfer per
-    candidate pair is two int64 keys instead of two nested vertex arrays;
-    each side resolves via one vectorized searchsorted. The SAT kernel runs
-    over cache-resident slices (it streams ~6 (B,) temporaries per axis
-    pass — same DRAM story as the clip kernels). keys must be sorted
-    ascending; driver-sized layers only — callers gate on a size probe."""
-    assert len(keys_a) == 0 or bool(np.all(np.diff(keys_a) > 0))
-    assert len(keys_b) == 0 or bool(np.all(np.diff(keys_b) > 0))
-    b = spark.sparkContext.broadcast((keys_a, cube_a, keys_b, cube_b))
-
-    def f(ka: pd.Series, kb: pd.Series) -> pd.Series:
-        n = len(ka)
-        if n == 0:
-            return pd.Series([], dtype=np.float64)
-        bka, bca, bkb, bcb = b.value
-        ia = np.searchsorted(bka, ka.to_numpy(np.int64))
-        ib = np.searchsorted(bkb, kb.to_numpy(np.int64))
-        if n <= _KERNEL_CHUNK:
-            return pd.Series(sat_depth(bca[ia], bcb[ib]))
-        out = np.empty(n, dtype=np.float64)
-        for i in range(0, n, _KERNEL_CHUNK):
-            j = min(i + _KERNEL_CHUNK, n)
-            out[i:j] = sat_depth(bca[ia[i:j]], bcb[ib[i:j]])
-        return pd.Series(out)
-
-    return pandas_udf(f, "double")(key_a_col, key_b_col)
 
 
 # ------------------------------------------- convex intersection area (S-H)
@@ -414,119 +270,118 @@ def _counts_and_pad(verts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
 _KERNEL_CHUNK = 16384
 
 
-def _run_chunked(kernel, n: int, *arrays) -> np.ndarray:
-    if n <= _KERNEL_CHUNK:
-        return kernel(*arrays)
-    out = np.empty(n, dtype=np.float64)
-    for i in range(0, n, _KERNEL_CHUNK):
-        j = min(i + _KERNEL_CHUNK, n)
-        out[i:j] = kernel(*[a[i:j] for a in arrays])
+def polygon_areas(cube: np.ndarray, ns: np.ndarray) -> np.ndarray:
+    """Each padded polygon's own (shoelace, abs) area."""
+    return _shoelace(cube[..., 0], cube[..., 1], ns, np.arange(cube.shape[1])[None, :])
+
+
+class Geom(NamedTuple):
+    """Geometry of a run of candidate rows; area is None when shipped per row."""
+
+    cube: np.ndarray
+    ns: np.ndarray
+    area: np.ndarray | None
+
+    def take(self, i: int, j: int) -> Geom:
+        return Geom(self.cube[i:j], self.ns[i:j], None if self.area is None else self.area[i:j])
+
+
+def pip_kernel(g: Geom, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    return ray_cast(px, py, g.cube)
+
+
+def sat_kernel(ga: Geom, gb: Geom) -> np.ndarray:
+    return sat_depth(ga.cube, gb.cube)
+
+
+def rect_cover_area(g: Geom, x0: np.ndarray, y0: np.ndarray, x1: np.ndarray, y1: np.ndarray) -> np.ndarray:
+    """Exact polygon x axis-aligned-rect intersection area. A polygon whose
+    vertices all sit inside its rect needs no clip: it takes its own area
+    (precomputed by the index, else one shoelace pass), so only
+    boundary-crossing rows pay clip_area_rect."""
+    xs, ys = g.cube[..., 0], g.cube[..., 1]
+    inside = (xs.min(axis=1) >= x0) & (xs.max(axis=1) <= x1) & (ys.min(axis=1) >= y0) & (ys.max(axis=1) <= y1)
+    out = np.empty(len(x0), dtype=np.float64)
+    out[inside] = g.area[inside] if g.area is not None else polygon_areas(g.cube[inside], g.ns[inside])
+    c = ~inside
+    out[c] = clip_area_rect(g.cube[c], g.ns[c], x0[c], y0[c], x1[c], y1[c])
     return out
 
 
-def _area_fn(va: pd.Series, vb: pd.Series) -> pd.Series:
-    if len(va) == 0:
-        return pd.Series([], dtype=np.float64)
-    A, na = _counts_and_pad(va)
-    B_, nb = _counts_and_pad(vb)
-    return pd.Series(_run_chunked(clip_area, len(va), A, na, B_, nb))
+@dataclass(frozen=True, eq=False)
+class GeomIndex:
+    """One polygon layer's geometry on the driver, sorted by key: the padded
+    vertex cube, vertex counts, declared bboxes (xmin, ymin, xmax, ymax) and
+    each polygon's own area. Broadcast once, it lets a refine ship one key
+    per candidate instead of the nested vertex array."""
+
+    keys: np.ndarray  # (n,) int64, strictly increasing
+    cube: np.ndarray  # (n, max_nv, 2) float64, padded with the last vertex
+    ns: np.ndarray  # (n,) vertex counts
+    bbox: np.ndarray  # (n, 4)
+    area: np.ndarray  # (n,)
+
+    def __post_init__(self):
+        if not bool(np.all(np.diff(self.keys) > 0)):
+            raise ValueError("GeomIndex keys must be unique and sorted ascending")
+
+    @classmethod
+    def build(cls, keys: np.ndarray, bbox: np.ndarray, flat: np.ndarray, counts: np.ndarray) -> GeomIndex:
+        """keys and bboxes per row, every row's coordinates concatenated
+        [x0, y0, x1, y1, ...] in `flat`, and each row's coordinate count."""
+        order = np.argsort(keys, kind="stable")
+        nv = counts // 2
+        start = np.cumsum(nv) - nv
+        m = int(nv.max(initial=0))
+        pos = start[:, None] + np.minimum(np.arange(m)[None, :], nv[:, None] - 1)
+        cube = flat.reshape(-1, 2)[pos[order]]
+        return cls(keys[order], cube, nv[order], bbox[order], polygon_areas(cube, nv[order]))
+
+    def rows(self, k: np.ndarray) -> np.ndarray:
+        """Positions of keys k; a key the index does not hold raises."""
+        idx = np.searchsorted(self.keys, k)
+        ok = idx < len(self.keys)
+        ok[ok] = self.keys[idx[ok]] == k[ok]
+        if not ok.all():
+            raise ValueError(f"GeomIndex holds no geometry for key(s) {k[~ok][:5].tolist()}")
+        return idx
 
 
-_area_udf = None
+def _batch_geom(bcast, s: pd.Series) -> Geom:
+    if bcast is None:
+        return Geom(*_counts_and_pad(s), None)
+    g = bcast.value
+    r = g.rows(s.to_numpy(np.int64))
+    return Geom(g.cube[r], g.ns[r], g.area[r])
 
 
-def convex_intersection_area(verts_a, verts_b):
-    """Column expression: exact convex-pair intersection area (clip a by b).
-    b must wind CCW; a may wind either way (shoelace abs)."""
-    global _area_udf
-    if _area_udf is None:
-        _area_udf = pandas_udf(_area_fn, "double")
-    return _area_udf(verts_a, verts_b)
+def geom_ref(bcast, key: str, vertices: str):
+    """refine_udf's geometry input for one layer: its broadcast GeomIndex
+    with the key column, or (bcast None) the per-row vertices column."""
+    return (bcast, F.col(key)) if bcast is not None else F.col(vertices)
 
 
-def _rect_area_fn(
-    va: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series
-) -> pd.Series:
-    if len(va) == 0:
-        return pd.Series([], dtype=np.float64)
-    A, na = _counts_and_pad(va)
-    return pd.Series(
-        _run_chunked(
-            clip_area_rect,
-            len(va),
-            A,
-            na,
-            x0.to_numpy(np.float64),
-            y0.to_numpy(np.float64),
-            x1.to_numpy(np.float64),
-            y1.to_numpy(np.float64),
-        )
-    )
+def refine_udf(kernel, rtype: str, geoms: list, *cols) -> Column:
+    """The one Arrow refine UDF over candidate rows. Each entry of `geoms`
+    is a vertices column (geometry shipped per row) or a (broadcast
+    GeomIndex, key column) pair (geometry resolved from the index, so only
+    the key crosses the Arrow boundary). `kernel(*Geom, *float64 arrays of
+    cols)` runs over _KERNEL_CHUNK-row slices. The UDF is nondeterministic
+    so Catalyst never copies it into a pushed-down filter: each candidate
+    pays the kernel once."""
+    bcasts = [g[0] if isinstance(g, tuple) else None for g in geoms]
+    dtype = np.bool_ if rtype == "boolean" else np.float64
 
+    def f(*series: pd.Series) -> pd.Series:
+        n = len(series[0])
+        if n == 0:
+            return pd.Series(np.empty(0, dtype=dtype))
+        gs = [_batch_geom(b, s) for b, s in zip(bcasts, series)]
+        xs = [s.to_numpy(np.float64) for s in series[len(gs):]]
+        return pd.Series(np.concatenate([
+            kernel(*(g.take(i, i + _KERNEL_CHUNK) for g in gs), *(x[i : i + _KERNEL_CHUNK] for x in xs))
+            for i in range(0, n, _KERNEL_CHUNK)
+        ]))
 
-_rect_area_udf = None
-
-
-def rect_intersection_area(verts, x0, y0, x1, y1):
-    """Column expression: exact polygon x axis-aligned-rect intersection
-    area (the specialized kernel + 4-scalar Arrow transfer)."""
-    global _rect_area_udf
-    if _rect_area_udf is None:
-        _rect_area_udf = pandas_udf(_rect_area_fn, "double")
-    return _rect_area_udf(verts, x0, y0, x1, y1)
-
-
-def rect_intersection_area_bcast(spark, keys: np.ndarray, polys: np.ndarray,
-                                 ns: np.ndarray, key_col, x0, y0, x1, y1):
-    """rect_intersection_area with the polygon geometry broadcast (the
-    point_in_polygon_bcast pattern): the Arrow transfer per pair is
-    (key + 4 rect scalars) instead of the nested vertex array; geometry
-    resolves via one vectorized searchsorted into the broadcast padded
-    cube. keys must be sorted ascending; driver-sized dimensions only —
-    callers gate on a size probe."""
-    assert len(keys) == 0 or bool(np.all(np.diff(keys) > 0))
-    b = spark.sparkContext.broadcast((keys, polys, ns))
-
-    def f(k: pd.Series, rx0: pd.Series, ry0: pd.Series,
-          rx1: pd.Series, ry1: pd.Series) -> pd.Series:
-        if len(k) == 0:
-            return pd.Series([], dtype=np.float64)
-        bk, bp, bn = b.value
-        idx = np.searchsorted(bk, k.to_numpy(np.int64))
-        return pd.Series(
-            _run_chunked(
-                clip_area_rect,
-                len(k),
-                bp[idx],
-                bn[idx],
-                rx0.to_numpy(np.float64),
-                ry0.to_numpy(np.float64),
-                rx1.to_numpy(np.float64),
-                ry1.to_numpy(np.float64),
-            )
-        )
-
-    return pandas_udf(f, "double")(key_col, x0, y0, x1, y1)
-
-
-def _poly_area_fn(va: pd.Series) -> pd.Series:
-    if len(va) == 0:
-        return pd.Series([], dtype=np.float64)
-    A, na = _counts_and_pad(va)
-    L = A.shape[1]
-    curx = np.ascontiguousarray(A[..., 0])
-    cury = np.ascontiguousarray(A[..., 1])
-    return pd.Series(_shoelace(curx, cury, na, np.arange(L)[None, :]))
-
-
-_poly_area_udf = None
-
-
-def polygon_area(verts):
-    """Column expression: a polygon's own (shoelace, abs) area — runs ONCE
-    per polygon row, so callers can reuse it across candidate pairs (the
-    fully-contained fast path skips the clip kernel entirely)."""
-    global _poly_area_udf
-    if _poly_area_udf is None:
-        _poly_area_udf = pandas_udf(_poly_area_fn, "double")
-    return _poly_area_udf(verts)
+    inputs = [g[1] if isinstance(g, tuple) else g for g in geoms]
+    return pandas_udf(f, rtype).asNondeterministic()(*inputs, *cols)

@@ -9,11 +9,12 @@ vectorized Sutherland-Hodgman kernel (functions/geometry.py:clip_area_rect)
 chips worth keeping (coverage thresholds, class balance by area).
 
 Plan: window grid (pure codegen explode) -> geo tile bboxes -> coarse-cell
-equi-join to labels (salting probe-driven) -> canonical-cell dedup + bbox
-prefilter (JVM-side) -> split: polygons whose bbox sits fully inside the
-tile take a JVM-only fast path (area = the polygon's OWN area, computed
-once per polygon before the explode), the rest go through the Arrow
-rect-clip refine -> per-tile aggregate.
+equi-join to labels (salt fan decided on the driver from both layers'
+pulled bboxes when they fit, else by the probe_salts job) -> canonical-cell
+dedup + bbox prefilter (JVM-side) -> ONE Arrow refine per candidate, whose
+kernel (rect_cover_area) gives a polygon lying inside its tile its own
+area, precomputed once per polygon by the layer's GeomIndex, and sends
+only boundary-crossing pairs through the rect clip -> per-tile aggregate.
 
 Cross-engine determinism: per-pair areas are scaled to exact integer
 micro-deg^2 (round(area * 1e6)) before the rollup, so the group sums are
@@ -30,11 +31,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terrakit_spark.dialect import DUCK
-from terrakit_spark.functions.cells import cell_id, with_cover_cells
-from terrakit_spark.functions.geometry import polygon_area, rect_intersection_area
+from terrakit_spark.functions.cells import cell_id, replicate_salts, with_cover_cells, with_salt
+from terrakit_spark.functions.geometry import geom_ref, rect_cover_area, refine_udf
 from terrakit_spark.operators.spatial_join import (
     _diamond_polys,
     _register_views,
+    bbox_salts,
+    geom_index,
+    layer_bboxes,
     probe_salts,
     salted_partitions,
 )
@@ -55,54 +59,35 @@ def tile_coverage_join(
 ) -> DataFrame:
     """tiles(txmin..tymax axis-aligned rects) x polys(xmin..ymax bbox,
     vertices) -> pairs + exact intersection `area` (only area > 0 pairs
-    survive).
+    survive; the output never carries `vertices`).
 
     n_salts: hotspot-cell lever for dense regions — same combinatorial-
     skew class as convex_overlap_join (a hot cell's tile x label product
     is ONE join key, invisible to AQE's byte-keyed skew handling); the
     salted partitioning must be pinned with explicit numPartitions for
     the same reason (AQE coalescing merges salted keys back). None
-    (default) decides from the probe_salts density probe.
+    (default) decides on the driver (bbox_salts) when the polygon layer
+    has a GeomIndex and the tiles' bboxes fit the same byte cap, else by
+    the probe_salts job.
 
-    The refine splits on bbox containment: a polygon fully inside the tile
-    needs no clip — its area was computed ONCE per polygon (one Arrow pass
-    over the unexploded layer), so those pairs never pay the clip kernel or
-    its Arrow transfer. Only boundary-crossing pairs hit clip_area_rect."""
-    polys = polys.withColumn("_parea", polygon_area(F.col("vertices")))
-    bcast_geom = None
-    if verts_via == "auto":
-        from terrakit_spark.operators.spatial_join import VERTS_BCAST_MAX_ROWS, _polys_rows
-
-        verts_via = (
-            "broadcast"
-            if verts_key in polys.columns and _polys_rows(polys) <= VERTS_BCAST_MAX_ROWS
-            else "column"
-        )
-    if verts_via == "broadcast":
-        # broadcast-geometry refine (the cell_pip_join pattern): the clip
-        # kernel resolves vertices from a broadcast (keys, cube, counts)
-        # triple via vectorized searchsorted, so the Arrow transfer per
-        # crossing pair is (key + 4 rect scalars) — the nested vertex
-        # array neither serializes per pair nor rides the salted shuffle.
-        import numpy as np
-        import pandas as pd
-
-        from terrakit_spark.functions.geometry import _pad_vertices
-
-        rows = polys.select(verts_key, "vertices").collect()
-        rows.sort(key=lambda r: r[0])
-        keys = np.array([r[0] for r in rows], dtype=np.int64)
-        ns = np.array([len(r[1]) // 2 for r in rows], dtype=np.int64)
-        cube = _pad_vertices(pd.Series([list(r[1]) for r in rows]))
-        bcast_geom = (keys, cube, ns)
+    One candidate join feeds one Arrow refine. Its kernel splits on
+    containment: a polygon whose vertices all lie inside the tile takes its
+    own area (from the GeomIndex, or one shoelace pass on the column path),
+    so only boundary-crossing pairs pay clip_area_rect. verts_via is as in
+    cell_pip_join; both modes return the same rows."""
+    geo, bcast = geom_index(polys, verts_key, verts_via)
+    if geo is not None:
         polys = polys.drop("vertices")
     t = with_cover_cells(tiles, "txmin", "tymin", "txmax", "tymax", out="_cell", cell_deg=cell_deg)
     g = with_cover_cells(polys, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
     if n_salts is None:
-        n_salts = probe_salts(t, g)
+        tb = layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax")) if geo is not None else None
+        n_salts = (
+            bbox_salts(tb, geo.bbox, cell_deg, tiles.sparkSession.sparkContext.defaultParallelism)
+            if tb is not None
+            else probe_salts(t, g)
+        )
     if n_salts > 0:
-        from terrakit_spark.functions.cells import replicate_salts, with_salt
-
         t = with_salt(t, "_cell", n_salts, F.col("txmin") + F.col("tymax"), out="_salt")
         g = replicate_salts(g, n_salts, out="_salt")
         p = salted_partitions(t, n_salts)
@@ -123,32 +108,9 @@ def tile_coverage_join(
         & (F.col("tymin") <= F.col("ymax"))
         & (F.col("ymin") <= F.col("tymax"))
     )
-    contained = (
-        (F.col("xmin") >= F.col("txmin"))
-        & (F.col("xmax") <= F.col("txmax"))
-        & (F.col("ymin") >= F.col("tymin"))
-        & (F.col("ymax") <= F.col("tymax"))
-    )
-    # split, don't when/otherwise: a conditional over an Arrow UDF still
-    # ships and evaluates EVERY row through Python — only a filter split
-    # actually skips the kernel for contained pairs (the common case:
-    # labels are <= 1.25 deg wide vs 2-deg tiles)
-    inside = cand.filter(contained).withColumn("area", F.col("_parea"))
-    if bcast_geom is not None:
-        from terrakit_spark.functions.geometry import rect_intersection_area_bcast
-
-        area_col = rect_intersection_area_bcast(
-            tiles.sparkSession, bcast_geom[0], bcast_geom[1], bcast_geom[2],
-            F.col(verts_key),
-            F.col("txmin"), F.col("tymin"), F.col("txmax"), F.col("tymax"),
-        )
-    else:
-        area_col = rect_intersection_area(
-            F.col("vertices"), F.col("txmin"), F.col("tymin"), F.col("txmax"), F.col("tymax")
-        )
-    crossing = cand.filter(~contained).withColumn("area", area_col)
-    out = inside.unionByName(crossing)
-    return out.filter(F.col("area") > 0.0).drop("_cell", "_parea")
+    rect = [F.col(c) for c in ("txmin", "tymin", "txmax", "tymax")]
+    area = refine_udf(rect_cover_area, "double", [geom_ref(bcast, verts_key, "vertices")], *rect)
+    return cand.withColumn("area", area).filter(F.col("area") > 0.0).drop("_cell", "vertices")
 
 
 def _geo_tiles(spark: SparkSession, scene_pred: str) -> DataFrame:
@@ -160,20 +122,18 @@ def _geo_tiles(spark: SparkSession, scene_pred: str) -> DataFrame:
         SELECT scene_id, win_index,
                txmin, tymin, txmin + win_w * {RES_SQL} AS txmax, tymin + win_h * {RES_SQL} AS tymax
         FROM (
-          SELECT w.scene_id, w.win_index, w.win_w, w.win_h,
-                 s.xmin + w.win_x * {RES_SQL} AS txmin,
-                 s.ymin + w.win_y * {RES_SQL} AS tymin
-          FROM (SELECT scene_id, win_index, win_x, win_y, win_w, win_h
-                FROM (SELECT scene_id, width, height,
-                             CAST((x div 256) * ((height - 1) div 256 + 1) + (y div 256) AS INT) AS win_index,
-                             CAST(CASE WHEN x + 256 > width THEN width - 256 ELSE x END AS INT) AS win_x,
-                             CAST(CASE WHEN y + 256 > height THEN height - 256 ELSE y END AS INT) AS win_y,
-                             256 AS win_w, 256 AS win_h
-                      FROM scenes
-                      LATERAL VIEW explode(sequence(0, CAST(width - 1 AS BIGINT), 256)) _x AS x
-                      LATERAL VIEW explode(sequence(0, CAST(height - 1 AS BIGINT), 256)) _y AS y) _wg
-                WHERE {scene_pred}) w
-          JOIN scenes s ON w.scene_id = s.scene_id
+          SELECT scene_id, win_index, win_w, win_h,
+                 xmin + win_x * {RES_SQL} AS txmin,
+                 ymin + win_y * {RES_SQL} AS tymin
+          FROM (SELECT scene_id, xmin, ymin,
+                       CAST((x div 256) * ((height - 1) div 256 + 1) + (y div 256) AS INT) AS win_index,
+                       CAST(CASE WHEN x + 256 > width THEN width - 256 ELSE x END AS INT) AS win_x,
+                       CAST(CASE WHEN y + 256 > height THEN height - 256 ELSE y END AS INT) AS win_y,
+                       256 AS win_w, 256 AS win_h
+                FROM scenes
+                LATERAL VIEW explode(sequence(0, CAST(width - 1 AS BIGINT), 256)) _x AS x
+                LATERAL VIEW explode(sequence(0, CAST(height - 1 AS BIGINT), 256)) _y AS y) _wg
+          WHERE {scene_pred}
         ) _t
         """
     )

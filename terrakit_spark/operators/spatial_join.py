@@ -16,12 +16,24 @@ salted repartitioning for the polygon side when it must shuffle."""
 
 from __future__ import annotations
 
+import math
+import threading
+from collections import OrderedDict
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terrakit_spark.dialect import DUCK, SPARK, D
-from terrakit_spark.functions.cells import replicate_salts, with_cover_cells, with_point_cell, with_salt
-from terrakit_spark.functions.geometry import point_in_polygon
+from terrakit_spark.functions.cells import (
+    _ny,
+    cell_id,
+    replicate_salts,
+    with_cover_cells,
+    with_point_cell,
+    with_salt,
+)
+from terrakit_spark.functions.geometry import GeomIndex, geom_ref, pip_kernel, refine_udf, sat_kernel
 from terrakit_spark.registry import ensure_base_views, register_df, with_synth
 from terrakit_spark.synth import ALL_TABLES
 
@@ -50,7 +62,6 @@ def cell_pip_join(
     px: str = "mx",
     py: str = "my",
     vertices: str = "vertices",
-    broadcast_polys: bool = False,
     n_salts: int = 0,
     cell_deg: float | None = None,
     candidate_filter=None,
@@ -58,7 +69,8 @@ def cell_pip_join(
     verts_key: str = "label_id",
 ) -> DataFrame:
     """points(px, py, ...) x polys(xmin..ymax bbox cols, vertices flat
-    [x0,y0,...], ...) -> matched pairs (all columns from both sides).
+    [x0,y0,...], ...) -> matched pairs (all columns from both sides but
+    `vertices`, which the output never carries).
 
     cell_deg=None (default) picks the grid from MEASURED point density via
     adaptive_cell_deg — the round-4 sf1 lesson promoted to the default
@@ -68,41 +80,19 @@ def cell_pip_join(
     pass cell_deg explicitly) for the fixed FIXED_CELL_DEG grid. The grid
     is a candidate-generation device: every resolution yields the same
     refined output (the shared oracle across spatial_join_pip/_salted/
-    _adaptive is the invariance proof)."""
+    _adaptive is the invariance proof).
+
+    verts_via picks where the refine reads geometry: "broadcast" from the
+    layer's GeomIndex (the Arrow transfer per candidate is key, px, py and
+    the vertex bytes never ride the explode or shuffle), "column" from the
+    vertices column per row, "auto" (default) the index when geom_index
+    admits the layer."""
     if cell_deg is None:
         cell_deg = (
             adaptive_cell_deg(points, px, py, polys) if _adaptive_default() else FIXED_CELL_DEG
         )
-    bcast_geom = None
-    if verts_via == "auto":
-        # auto: broadcast the geometry when the polygon dimension is
-        # driver-sized (memoized count probe, the labels_via pattern) and
-        # a sortable key exists; column path otherwise. 2M quads pad to a
-        # ~128 MB cube — comfortably under executor broadcast budgets.
-        verts_via = (
-            "broadcast"
-            if verts_key in polys.columns and _polys_rows(polys) <= VERTS_BCAST_MAX_ROWS
-            else "column"
-        )
-    if verts_via == "broadcast":
-        # verts_via="broadcast": the refine resolves geometry from a
-        # broadcast (keys, padded-vertex-cube) pair instead of shipping the
-        # nested vertex array per candidate row — kills the dominant Arrow
-        # serialization cost of the refine AND removes the vertex bytes
-        # from the exploded polygon side's shuffle. Driver-sized dimension
-        # only (~21 MB at sf1's 330k polygons); the output drops the
-        # vertices column. Same refined rows at any setting — the shared
-        # oracle across the spatial_join_pip variants is the proof.
-        import numpy as np
-        import pandas as pd
-
-        from terrakit_spark.functions.geometry import _pad_vertices
-
-        rows = polys.select(verts_key, vertices).collect()
-        rows.sort(key=lambda r: r[0])
-        keys = np.array([r[0] for r in rows], dtype=np.int64)
-        cube = _pad_vertices(pd.Series([list(r[1]) for r in rows]))
-        bcast_geom = (keys, cube)
+    geo, bcast = geom_index(polys, verts_key, verts_via, vertices)
+    if geo is not None:
         polys = polys.drop(vertices)
     p = with_point_cell(points, px, py, out="_cell", cell_deg=cell_deg)
     g = with_cover_cells(polys, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
@@ -112,11 +102,9 @@ def cell_pip_join(
         on = ["_cell", "_salt"]
     else:
         on = ["_cell"]
-    # No forced broadcast: at fine cell resolutions the exploded polygon
-    # side carries vertex arrays and grows past broadcast-worthy; AQE
-    # converts the shuffle join to broadcast at runtime when it IS small.
-    right = F.broadcast(g) if broadcast_polys and n_salts == 0 else g
-    cand = p.join(right, on=on, how="inner")
+    # No forced broadcast: AQE converts the shuffle join to broadcast at
+    # runtime when the exploded polygon side IS small.
+    cand = p.join(g, on=on, how="inner")
     if candidate_filter is not None:
         # join-key-only predicate applied BEFORE the refine: the sampled
         # join skips the ray-cast (and the output) for unsampled pairs
@@ -124,7 +112,7 @@ def cell_pip_join(
     # JVM-side point-in-bbox prefilter BEFORE the Arrow refine: a cell is
     # coarser than a polygon's bbox, so cell-candidates include points the
     # bbox alone rejects — filtering them in whole-stage codegen means the
-    # Arrow transfer (px, py, AND the vertex array) never pays for them.
+    # Arrow transfer never pays for them.
     cand = cand.filter(
         (F.col(px) >= F.col("xmin"))
         & (F.col(px) <= F.col("xmax"))
@@ -133,21 +121,10 @@ def cell_pip_join(
     )
     # exact refine: Arrow-batched ray-cast UDF. (A pure-SQL higher-order
     # ray-cast was measured 4x SLOWER — Spark HOFs don't codegen; the Arrow
-    # round-trip beats interpreted per-edge lambdas. Spark only ships the
-    # UDF's input columns to Python, so the transfer is px, py, verts —
-    # or px, py, key in the broadcast-geometry mode.)
-    if bcast_geom is not None:
-        from terrakit_spark.functions.geometry import point_in_polygon_bcast
-
-        hit = cand.filter(
-            point_in_polygon_bcast(
-                points.sparkSession, bcast_geom[0], bcast_geom[1],
-                F.col(verts_key), F.col(px), F.col(py),
-            )
-        )
-    else:
-        hit = cand.filter(point_in_polygon(F.col(px), F.col(py), F.col(vertices)))
-    return hit.drop("_cell", "_salt") if n_salts > 0 else hit.drop("_cell")
+    # round-trip beats interpreted per-edge lambdas.)
+    geom = geom_ref(bcast, verts_key, vertices)
+    hit = cand.filter(refine_udf(pip_kernel, "boolean", [geom], F.col(px), F.col(py)))
+    return hit.drop("_cell", "_salt", vertices)
 
 
 def _diamond_polys(spark: SparkSession) -> DataFrame:
@@ -341,8 +318,6 @@ def adaptive_cell_deg(
     same tables — a bench repeat, a pipeline stage re-run — pay the scan
     once. At 100 TB the probe is one map-combinable aggregate per distinct
     input, amortized across every join that reuses it."""
-    import math
-
     try:
         key = (
             points.sparkSession.sparkContext.applicationId,
@@ -383,30 +358,6 @@ def adaptive_cell_deg(
 
 
 _SALT_CACHE: dict = {}
-_NROWS_CACHE: dict = {}
-VERTS_BCAST_MAX_ROWS = 2_000_000  # ~128 MB padded quad cube
-
-
-def _polys_rows(polys: DataFrame) -> int:
-    """Memoized row-count probe (per application + semantic plan): the
-    verts_via='auto' gate. One count job per distinct polygon layer,
-    amortized across every join that reuses it — same contract as
-    probe_salts/adaptive_cell_deg."""
-    try:
-        key = (
-            polys.sparkSession.sparkContext.applicationId,
-            polys._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _NROWS_CACHE:
-        return _NROWS_CACHE[key]
-    n = polys.count()
-    if key is not None:
-        if len(_NROWS_CACHE) > 256:
-            _NROWS_CACHE.clear()
-        _NROWS_CACHE[key] = n
-    return n
 
 
 def probe_salts(a_cells: DataFrame, b_cells: DataFrame, max_salts: int = 64) -> int:
@@ -427,10 +378,9 @@ def probe_salts(a_cells: DataFrame, b_cells: DataFrame, max_salts: int = 64) -> 
     (capped) so the hot cell's work spreads across ~need tasks.
 
     Memoized per (application, semantic input plans): repeated joins over
-    the same layers — a bench repeat, both halves of a coverage query —
-    pay the probe once."""
-    import math
-
+    the same layers — a bench repeat — pay the probe once. Layers that
+    geom_index admits skip this job: bbox_salts makes the same decision
+    from the pulled bboxes on the driver."""
     try:
         key = (
             a_cells.sparkSession.sparkContext.applicationId,
@@ -451,17 +401,120 @@ def probe_salts(a_cells: DataFrame, b_cells: DataFrame, max_salts: int = 64) -> 
         .agg(F.max("_p").alias("hot"), F.sum("_p").alias("total"))
         .collect()[0]
     )
-    par = a_cells.sparkSession.sparkContext.defaultParallelism
-    if not row.total or not row.hot:
-        n = 0
-    else:
-        need = row.hot * par / row.total
-        n = 0 if need <= 2.0 else int(min(2 ** math.ceil(math.log2(need)), max_salts))
+    n = _salt_fan(row.hot, row.total, a_cells.sparkSession.sparkContext.defaultParallelism, max_salts)
     if key is not None:
         if len(_SALT_CACHE) > 256:
             _SALT_CACHE.clear()
         _SALT_CACHE[key] = n
     return n
+
+
+def _salt_fan(hot: int, total: int, par: int, max_salts: int) -> int:
+    """need = hot / (total / par): salt only when the hottest cell's
+    candidate product exceeds two fair task shares (see probe_salts)."""
+    if not total or not hot:
+        return 0
+    need = hot * par / total
+    return 0 if need <= 2.0 else int(min(2 ** math.ceil(math.log2(need)), max_salts))
+
+
+def _cell_counts(bbox: np.ndarray, cell_deg: float) -> tuple[np.ndarray, np.ndarray]:
+    """with_cover_cells in numpy: every (n, 4) bbox row's cover-cell ids by
+    the same float formula, then (distinct cells, rows per cell)."""
+    x0, y0, x1, y1 = (
+        np.floor((bbox[:, i] + off) / cell_deg).astype(np.int64)
+        for i, off in enumerate((180.0, 90.0, 180.0, 90.0))
+    )
+    h = y1 - y0 + 1
+    per = (x1 - x0 + 1) * h
+    row = np.repeat(np.arange(len(bbox)), per)
+    off = np.arange(len(row)) - np.repeat(np.cumsum(per) - per, per)
+    cells = (x0[row] + off // h[row]) * _ny(cell_deg) + y0[row] + off % h[row]
+    return np.unique(cells, return_counts=True)
+
+
+def bbox_salts(bbox_a: np.ndarray, bbox_b: np.ndarray, cell_deg: float, par: int, max_salts: int = 64) -> int:
+    """probe_salts' decision, made on the driver from two layers' bboxes."""
+    ca, na = _cell_counts(bbox_a, cell_deg)
+    cb, nb = _cell_counts(bbox_b, cell_deg)
+    _, ia, ib = np.intersect1d(ca, cb, assume_unique=True, return_indices=True)
+    prod = na[ia] * nb[ib]
+    return _salt_fan(int(prod.max(initial=0)), int(prod.sum()), par, max_salts)
+
+
+# ------------------------------------------------------ driver-side layers
+# A layer small enough for the driver is pulled ONCE per (application,
+# semantic plan, byte cap) with one Arrow job; the join then plans its salt
+# fan and reads its refine geometry from numpy instead of running probe and
+# collect jobs on every call.
+INDEX_MAX_BYTES = 128 << 20  # padded vertex cube (rows x max vertices x 16)
+BBOX = ("xmin", "ymin", "xmax", "ymax")
+_LAYERS: OrderedDict = OrderedDict()  # memo -> (pulled value | None, broadcast | None)
+_LAYERS_MAX = 16
+_LAYERS_LOCK = threading.Lock()
+
+
+def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float):
+    """Memoized (value, broadcast) of build(layer[cols] as Arrow, max_bytes);
+    value is None when the layer is over max_bytes. Spark's own plan size
+    estimate (the one it trusts before collecting a broadcast-join side)
+    screens out layers too big to pull; `build` applies the exact gate to
+    the pulled arrays and keeps numpy only. A GeomIndex is broadcast once;
+    the least recently used entries beyond _LAYERS_MAX are unpersisted.
+    The memo keys on the plan, not the data: a layer's inputs must not be
+    rewritten in place while its application runs."""
+    df = layer.select(*cols)
+    sc = layer.sparkSession.sparkContext
+    qe = df._jdf.queryExecution()
+    memo = (sc.applicationId, qe.analyzed().semanticHash(), max_bytes)
+    with _LAYERS_LOCK:
+        if memo not in _LAYERS:
+            est = int(qe.optimizedPlan().stats().sizeInBytes())
+            value = build(df.toArrow(), max_bytes) if est <= max_bytes else None
+            _LAYERS[memo] = (value, sc.broadcast(value) if isinstance(value, GeomIndex) else None)
+            for k in [k for k in _LAYERS if k[0] != memo[0]]:
+                del _LAYERS[k]  # a stopped application's broadcasts went with it
+            while len(_LAYERS) > _LAYERS_MAX:
+                _, (_, old) = _LAYERS.popitem(last=False)
+                if old is not None:
+                    old.unpersist()
+        _LAYERS.move_to_end(memo)
+        return _LAYERS[memo]
+
+
+def geom_index(layer: DataFrame, key: str, verts_via: str = "auto", vertices: str = "vertices"):
+    """(GeomIndex, its broadcast) of a polygon layer, or (None, None) for the
+    per-row path: verts_via="column", no `key` column, keys that are null or
+    not unique, or — under "auto" — an estimated cube over INDEX_MAX_BYTES."""
+    if verts_via == "column" or key not in layer.columns:
+        return None, None
+
+    def build(t, max_bytes):
+        v, k = t.column(vertices).combine_chunks(), t.column(key)
+        counts = v.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
+        if v.null_count or k.null_count or len(counts) * (counts.max(initial=0) // 2) * 16 > max_bytes:
+            return None
+        keys = k.to_numpy().astype(np.int64)
+        if len(np.unique(keys)) < len(keys):
+            return None
+        bbox = np.column_stack([t.column(c).to_numpy() for c in BBOX])
+        return GeomIndex.build(keys, bbox, v.flatten().to_numpy(), counts)
+
+    cap = math.inf if verts_via == "broadcast" else INDEX_MAX_BYTES
+    return _pull(layer, [key, *BBOX, vertices], build, cap)
+
+
+def layer_bboxes(layer: DataFrame, cols: tuple[str, str, str, str]) -> np.ndarray | None:
+    """(n, 4) float64 bboxes (cols = xmin, ymin, xmax, ymax) of a layer
+    without geometry, e.g. tiles, or None over INDEX_MAX_BYTES — the
+    salt-decision input for that side."""
+
+    def build(t, max_bytes):
+        if t.num_rows * 32 > max_bytes:
+            return None
+        return np.column_stack([t.column(c).to_numpy() for c in cols])
+
+    return _pull(layer, list(cols), build, INDEX_MAX_BYTES)[0]
 
 
 def spatial_join_pip_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,47 +655,27 @@ def convex_overlap_join(
 
     n_salts=None (default) decides from the probe_salts density probe —
     the measured hottest-cell candidate product, same pattern as
-    adaptive_cell_deg. Pass 0 to force unsalted, >0 to force a fan."""
-    bcast_geom = None
-    if verts_via == "auto":
-        verts_via = (
-            "broadcast"
-            if verts_key in polys_a.columns
-            and verts_key in polys_b.columns
-            and _polys_rows(polys_a) <= VERTS_BCAST_MAX_ROWS
-            and _polys_rows(polys_b) <= VERTS_BCAST_MAX_ROWS
-            else "column"
-        )
-    if verts_via == "broadcast":
-        # broadcast-geometry refine, BOTH sides: each candidate pair ships
-        # two int64 keys over Arrow instead of two nested vertex arrays,
-        # and neither layer's vertex bytes ride the cover-cell explode or
-        # the salted shuffle. Driver-sized layers only (gated above).
-        import numpy as np
-        import pandas as pd
+    adaptive_cell_deg — decided on the driver by bbox_salts when both
+    layers have a GeomIndex. Pass 0 to force unsalted, >0 to force a fan.
 
-        from terrakit_spark.functions.geometry import _pad_vertices
-
-        def _collect(layer):
-            rows = layer.select(verts_key, "vertices").collect()
-            rows.sort(key=lambda r: r[0])
-            keys = np.array([r[0] for r in rows], dtype=np.int64)
-            cube = _pad_vertices(pd.Series([list(r[1]) for r in rows]))
-            return keys, cube
-
-        ka, ca = _collect(polys_a)
-        kb, cb = _collect(polys_b)
-        bcast_geom = (ka, ca, kb, cb)
+    verts_via applies per side as in cell_pip_join: with both indexes the
+    Arrow transfer per candidate pair is two int64 keys. The output never
+    carries `vertices`/`vertices_b`."""
+    geo_a, bcast_a = geom_index(polys_a, verts_key, verts_via)
+    geo_b, bcast_b = geom_index(polys_b, verts_key, verts_via)
+    if geo_a is not None:
         polys_a = polys_a.drop("vertices")
+    if geo_b is not None:
         polys_b = polys_b.drop("vertices")
     b = polys_b.select([F.col(c).alias(f"{c}_b") for c in polys_b.columns])
     a_cells = with_cover_cells(polys_a, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
     b_cells = with_cover_cells(b, "xmin_b", "ymin_b", "xmax_b", "ymax_b", out="_cell", cell_deg=cell_deg)
-    from terrakit_spark.functions.cells import cell_id
-    from terrakit_spark.functions.geometry import convex_overlap_depth
-
     if n_salts is None:
-        n_salts = probe_salts(a_cells, b_cells)
+        n_salts = (
+            bbox_salts(geo_a.bbox, geo_b.bbox, cell_deg, polys_a.sparkSession.sparkContext.defaultParallelism)
+            if geo_a is not None and geo_b is not None
+            else probe_salts(a_cells, b_cells)
+        )
     if n_salts > 0:
         a_cells = with_salt(a_cells, "_cell", n_salts, F.col("xmin") + F.col("ymax"), out="_salt")
         b_cells = replicate_salts(b_cells, n_salts, out="_salt")
@@ -672,17 +705,9 @@ def convex_overlap_join(
         & (F.col("ymin") <= F.col("ymax_b"))
         & (F.col("ymin_b") <= F.col("ymax"))
     )
-    if bcast_geom is not None:
-        from terrakit_spark.functions.geometry import convex_overlap_depth_bcast
-
-        depth = convex_overlap_depth_bcast(
-            polys_a.sparkSession, bcast_geom[0], bcast_geom[1], bcast_geom[2], bcast_geom[3],
-            F.col(verts_key), F.col(f"{verts_key}_b"),
-        )
-    else:
-        depth = convex_overlap_depth(F.col("vertices"), F.col("vertices_b"))
-    hit = cand.filter(depth > F.lit(eps))
-    return hit.drop("_cell")
+    geoms = [geom_ref(bcast_a, verts_key, "vertices"), geom_ref(bcast_b, f"{verts_key}_b", "vertices_b")]
+    depth = refine_udf(sat_kernel, "double", geoms)
+    return cand.filter(depth > F.lit(eps)).drop("_cell", "vertices", "vertices_b")
 
 
 def polygon_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:

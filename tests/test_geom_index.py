@@ -1,0 +1,153 @@
+"""The driver-side geometry index and the plan shape it buys: one Arrow
+pull per index-sized layer (none when warm), one Arrow refine per
+candidate, loud lookups, a size-independent output schema, and the same
+rows whichever path (index or per-row vertices, driver or Spark salt
+decision) the byte gate picks."""
+
+from __future__ import annotations
+
+from collections import OrderedDict
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from terrakit_spark.functions.geometry import GeomIndex, pip_kernel, refine_udf
+from terrakit_spark.operators import coverage as cv
+from terrakit_spark.operators import spatial_join as sj
+from terrakit_spark.registry import QUERIES
+
+
+@pytest.fixture
+def layers(synth, spark, sf_dir):
+    sj._register_views(spark, sf_dir)
+    d = sj._diamond_polys(spark).select("label_id", "labelclass", "xmin", "ymin", "xmax", "ymax", "vertices")
+    tiles = cv._geo_tiles(spark, cv.COVERAGE_SCENE_PRED)
+    return d, tiles
+
+
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _executed_plan(df) -> str:
+    df.count()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_geom_index_build_and_lookup():
+    # ragged: a triangle and a square, given out of key order
+    flat = np.array([0, 0, 2, 0, 2, 2, 0, 2, 0, 0, 1, 0, 0, 1], dtype=np.float64)
+    bbox = np.array([[0, 0, 2, 2], [0, 0, 1, 1]], dtype=np.float64)
+    g = GeomIndex.build(np.array([9, 4]), bbox, flat, np.array([8, 6]))
+    assert g.keys.tolist() == [4, 9]
+    assert g.ns.tolist() == [3, 4]
+    assert g.area.tolist() == [0.5, 4.0]
+    assert g.cube[0, 3].tolist() == [0.0, 1.0]  # padded with the last vertex
+    assert g.bbox[0].tolist() == [0, 0, 1, 1]
+    assert g.rows(np.array([9, 4, 9])).tolist() == [1, 0, 1]
+    for missing in ([5], [10], [3]):
+        with pytest.raises(ValueError, match="no geometry"):
+            g.rows(np.array(missing))
+    with pytest.raises(ValueError, match="sorted"):
+        GeomIndex(np.array([9, 4]), g.cube, g.ns, g.bbox, g.area)
+
+
+def test_missing_key_raises_in_the_action(layers):
+    """A candidate whose key was filtered out of the layer after the index
+    was built must fail the action, not resolve to a neighbour's polygon."""
+    d, _ = layers
+    _, bcast = sj.geom_index(d.filter("label_id % 3 != 0"), "label_id", "broadcast")
+    ref = (bcast, F.col("label_id"))
+    hit = d.filter(refine_udf(pip_kernel, "boolean", [ref], F.col("xmin"), F.col("ymin")))
+    with pytest.raises(Exception, match="GeomIndex holds no geometry"):
+        hit.collect()
+
+
+def test_schema_and_rows_do_not_depend_on_verts_via(layers, spark):
+    d, tiles = layers
+    a, b = d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1")
+    points = spark.table("media").select("media_ref", "mx", "my")
+    cases = {
+        "pip": lambda via: sj.cell_pip_join(points, d, cell_deg=0.125, verts_via=via),
+        "overlap": lambda via: sj.convex_overlap_join(a, b, verts_via=via),
+        "coverage": lambda via: cv.tile_coverage_join(tiles, d, verts_via=via),
+    }
+    for name, join in cases.items():
+        col, bc = join("column"), join("broadcast")
+        assert col.schema == bc.schema, name
+        assert not any(c.startswith("vertices") for c in col.columns), name
+    # the coverage kernel's contained/crossing split runs in both modes
+    got = _rows(cases["coverage"]("column"))
+    assert got == _rows(cases["coverage"]("broadcast")) and got
+
+
+def test_one_arrow_refine_per_plan(layers, spark, sf_dir):
+    d, tiles = layers
+    overlap = sj.convex_overlap_join(d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1"))
+    coverage = cv.tile_coverage_join(tiles, d)
+    for df in (overlap, coverage):
+        assert _executed_plan(df).count("ArrowEvalPython") == 1
+    # the rollup on top of the coverage pairs must not copy the UDF either
+    assert _executed_plan(QUERIES["tile_label_coverage"](spark, sf_dir)).count("ArrowEvalPython") == 1
+
+
+def test_planning_jobs_cold_then_warm(layers, monkeypatch):
+    """Cold: one Arrow pull per index-sized input layer and nothing else
+    (the salt fan is decided on the driver). Warm: no job at all."""
+    d, tiles = layers
+    sc = d.sparkSession.sparkContext
+    monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
+    calls = {
+        "overlap": lambda: sj.convex_overlap_join(d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1")),
+        "coverage": lambda: cv.tile_coverage_join(tiles, d),
+    }
+    try:
+        for name, call in calls.items():
+            for phase, most in (("cold", 2), ("warm", 0)):
+                group = f"test_geom_index:{name}:{phase}"
+                sc.setJobGroup(group, group)
+                call()
+                assert len(sc.statusTracker().getJobIdsForGroup(group)) <= most, (name, phase)
+    finally:
+        sc.setJobGroup("", "")
+
+
+@pytest.mark.parametrize("cell_deg", [0.25, 1.0, 2.0])
+def test_driver_salt_decision_matches_probe(layers, cell_deg):
+    d, tiles = layers
+    a, b = d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1")
+    par = d.sparkSession.sparkContext.defaultParallelism
+
+    def cells(df, *box):
+        return sj.with_cover_cells(df, *box, out="_cell", cell_deg=cell_deg)
+
+    bb = [sj.geom_index(x, "label_id")[0].bbox for x in (a, b, d)]
+    tb = sj.layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax"))
+    assert sj.bbox_salts(bb[0], bb[1], cell_deg, par) == sj.probe_salts(cells(a, *sj.BBOX), cells(b, *sj.BBOX))
+    t = cells(tiles, "txmin", "tymin", "txmax", "tymax")
+    assert sj.bbox_salts(tb, bb[2], cell_deg, par) == sj.probe_salts(t, cells(d, *sj.BBOX))
+
+
+def test_byte_gate_low_takes_column_and_probe_paths(synth, spark, sf_dir, duck, monkeypatch):
+    """With the cap forced to zero no layer is pulled: the refine reads the
+    vertices column and the salt fan comes from the probe_salts job; both
+    queries still match their oracles."""
+    from terrakit_spark.registry import ORACLES
+    from tests.util import assert_match
+
+    probe, probes = sj.probe_salts, []
+
+    def counted(*args, **kw):
+        probes.append(1)
+        return probe(*args, **kw)
+
+    monkeypatch.setattr(sj, "INDEX_MAX_BYTES", 0)
+    monkeypatch.setattr(sj, "probe_salts", counted)
+    monkeypatch.setattr(cv, "probe_salts", counted)
+    for q in ("polygon_overlap_join", "tile_label_coverage"):
+        df = QUERIES[q](spark, sf_dir)
+        assert "vertices" in _executed_plan(df).split("ArrowEvalPython", 1)[1].split("\n", 1)[0]
+        assert_match(df, duck, ORACLES[q])
+    assert len(probes) == 2
