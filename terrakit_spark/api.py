@@ -86,7 +86,9 @@ def chip_and_label_data(
     """Burn + edge-clamped 256-window chipping of data and label cubes with
     the SAME window list (chip/tiling.py:298-345), returning (chips,
     dataset_stats or None) — the reference's chip list + stats-roundtrip
-    pair (K8)."""
+    pair (K8). With working_dir this runs the chip stage, which chips the
+    scenes of that dir's committed download matches: call
+    download_data(..., working_dir=working_dir) first (SystemExit if not)."""
     if not active:
         return None
     from terrakit_spark.pipeline import chip_pipeline, dataset_stats

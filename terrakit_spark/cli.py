@@ -2,8 +2,10 @@
 (/root/reference/terrakit/__main__.py:47-101: labels -> download -> chip ->
 store, each stage validated, executed, and lineage-recorded). Here every
 stage is one Spark job writing a snapshot-committed table under the working
-dir; filename conventions become key columns; re-runs resume from committed
-partitions (the reference's file-presence idempotence upgraded to snapshot
+dir and reading its predecessor's committed table (chip reads download's
+matches and needs download to have run; store reads the chips); filename
+conventions become key columns; re-runs resume from committed partitions
+(the reference's file-presence idempotence upgraded to snapshot
 checkpoints).
 
   python -m terrakit_spark labels   --sf-dir D --working-dir W
@@ -100,25 +102,26 @@ def stage_chip(
     scene_pred: str = DEFAULT_PRED,
     transforms: list[str] | None = None,
 ) -> dict:
-    """chip stage: burn + edge-clamped 256 windows + stats; resumable by
-    scene_date partition (chip/tiling.py:228-372)."""
+    """chip stage: burn + edge-clamped 256 windows + stats
+    (chip/tiling.py:228-372) over the scenes of the download stage's
+    committed matches (dates read on the driver, no as-of re-run), so chip
+    requires download. Resumable by scene_date: dates with committed chips
+    are dropped at the SCENES input, below the mapInPandas chipper."""
     from terrakit_spark.pipeline import chip_pipeline, dataset_stats, matched_scenes
 
+    matched = _table(working_dir, "matched")
+    if not matched.snapshots():
+        raise SystemExit("download stage has not run")
     table = _table(working_dir, "chips")
     done = table.committed_partitions()
+    dates = sorted(matched.committed_partitions() - done)
+    if done and not dates:
+        return {"chips_rows": 0, "resumed": True}  # every matched date is chipped: no job
     if done:
-        # Resume skips committed scene_date partitions at the SCENES input —
-        # below the mapInPandas chipper — so a resumed run never re-burns or
-        # re-chips committed work (an anti-join above the chipper cannot be
-        # pushed down past the UDF).
-        quoted = ", ".join(f"'{k}'" for k in sorted(done))
-        scene_pred = f"({scene_pred}) AND scene_date_str NOT IN ({quoted})"
-        from terrakit_spark.operators.spatial_join import _register_views
-
         _register_views(spark, sf_dir)
-        if matched_scenes(spark, scene_pred).limit(1).count() == 0:
+        if matched_scenes(spark, scene_pred, matched_dates=dates).limit(1).count() == 0:
             return {"chips_rows": 0, "resumed": True}
-    chips = chip_pipeline(spark, sf_dir, scene_pred=scene_pred, transforms=transforms)
+    chips = chip_pipeline(spark, sf_dir, scene_pred=scene_pred, transforms=transforms, matched_dates=dates)
     snap = table.commit(chips, step="chip", partition_col="scene_date_str")
     stats = dataset_stats(table.read(spark)).collect()
     props = {

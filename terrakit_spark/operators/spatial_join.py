@@ -459,8 +459,8 @@ def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float):
     value is None when the layer is over max_bytes. Spark's own plan size
     estimate (the one it trusts before collecting a broadcast-join side)
     screens out layers too big to pull; `build` applies the exact gate to
-    the pulled arrays and keeps numpy only. A GeomIndex is broadcast once;
-    the least recently used entries beyond _LAYERS_MAX are unpersisted.
+    the pulled arrays and keeps numpy only. A built value is broadcast
+    once; the least recently used entries beyond _LAYERS_MAX are unpersisted.
     The memo keys on the plan, not the data: a layer's inputs must not be
     rewritten in place while its application runs."""
     df = layer.select(*cols)
@@ -471,7 +471,7 @@ def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float):
         if memo not in _LAYERS:
             est = int(qe.optimizedPlan().stats().sizeInBytes())
             value = build(df.toArrow(), max_bytes) if est <= max_bytes else None
-            _LAYERS[memo] = (value, sc.broadcast(value) if isinstance(value, GeomIndex) else None)
+            _LAYERS[memo] = (value, None if value is None else sc.broadcast(value))
             for k in [k for k in _LAYERS if k[0] != memo[0]]:
                 del _LAYERS[k]  # a stopped application's broadcasts went with it
             while len(_LAYERS) > _LAYERS_MAX:

@@ -21,6 +21,7 @@ mapInPandas stages so one fat-dim scene run doesn't serialize a thread."""
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -30,9 +31,9 @@ from pyspark.sql import functions as F
 
 from terrakit_spark.operators.asof import _asof_join
 from terrakit_spark.operators.rasterize import burn_image, scene_label_pairs
-from terrakit_spark.operators.spatial_join import _register_views
+from terrakit_spark.operators.spatial_join import _pull, _register_views
 from terrakit_spark.sources.raster import scene_pixels
-from terrakit_spark.synth import CHIP, RES
+from terrakit_spark.synth import CHIP
 
 
 def _windows(w: int, h: int, c: int = CHIP) -> list[tuple[int, int, int]]:
@@ -48,14 +49,19 @@ def _windows(w: int, h: int, c: int = CHIP) -> list[tuple[int, int, int]]:
     return out
 
 
-def matched_scenes(spark: SparkSession, scene_pred: str, scenes_df: DataFrame | None = None) -> DataFrame:
+def matched_scenes(
+    spark: SparkSession, scene_pred: str, scenes_df: DataFrame | None = None, matched_dates: list[str] | None = None
+) -> DataFrame:
     """Scenes that win the as-of join for at least one label date.
     scenes_df overrides the catalog scan (streaming micro-batches feed
-    their arrivals here; the as-of filter still applies)."""
+    their arrivals here; the as-of filter still applies). matched_dates
+    (a staged job's committed download matches) replaces the as-of join."""
+    scenes = scenes_df.filter(scene_pred) if scenes_df is not None else spark.sql(f"SELECT * FROM scenes WHERE {scene_pred}")
+    if matched_dates is not None:
+        return scenes.filter(F.col("scene_date_str").isin(list(matched_dates)))
     asof = spark.sql(
         "SELECT DISTINCT scene_date_str FROM (" + _asof_join("spark") + ") WHERE scene_date_str IS NOT NULL"
     )
-    scenes = scenes_df.filter(scene_pred) if scenes_df is not None else spark.sql(f"SELECT * FROM scenes WHERE {scene_pred}")
     return scenes.join(F.broadcast(asof), "scene_date_str")
 
 
@@ -86,21 +92,18 @@ def register_transform(name: str, fn) -> None:
     TRANSFORMS[name] = fn
 
 
-_LABEL_BYTES_CACHE: dict[tuple[str, str], int] = {}
 _LABEL_ROW_BYTES = 48  # 6 numeric cols x 8 B: the broadcast dict's payload
 
 
-def _label_bytes(spark: SparkSession, sf_dir: str) -> int:
-    """Estimated driver/broadcast footprint of the label dimension: one
-    map-combinable count (memoized per application+sf_dir — the label layer
-    is immutable within a run) times the fixed numeric row width. The probe
-    is what makes labels_via='auto' safe at 100 TB: a 2 MB layer broadcasts,
-    a 2 GB one takes the cover-cell join, and nobody has to know which."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LABEL_BYTES_CACHE:
-        n = spark.sql("SELECT count(*) AS n FROM labels").collect()[0].n
-        _LABEL_BYTES_CACHE[key] = int(n) * _LABEL_ROW_BYTES
-    return _LABEL_BYTES_CACHE[key]
+def _label_arrays(t, max_bytes: float) -> dict | None:
+    """The broadcast label layer: numpy columns in geom_seq order, or None
+    when rows x _LABEL_ROW_BYTES is over max_bytes."""
+    if t.num_rows * _LABEL_ROW_BYTES > max_bytes:
+        return None
+    order = np.argsort(t.column("geom_seq").to_numpy(), kind="stable")
+    out = {c: t.column(c).to_numpy()[order].astype(np.float64) for c in ("cx", "cy", "rx", "ry")}
+    out["cls"] = t.column("labelclass").to_numpy()[order].astype(np.int32)
+    return out
 
 
 def chip_pipeline(
@@ -114,16 +117,18 @@ def chip_pipeline(
     memoize_burns: bool = True,
     scenes_df: DataFrame | None = None,
     broadcast_max_bytes: int = 64 << 20,
+    matched_dates: list[str] | None = None,
 ) -> DataFrame:
     """Returns the chip table: one row per (scene, window) with data chip,
-    label chip, and per-band integer stat partials.
+    label chip, and per-band integer stat partials. matched_dates: the
+    scenes are already matched (see matched_scenes).
 
     labels_via:
-      - "auto" (default): probe the label-side size (one map-combinable
-        count, memoized per application+sf_dir) and pick broadcast when the
-        estimated driver footprint fits broadcast_max_bytes, else join.
-        The driver-side toPandas() below is correct at 2 MB and wrong at
-        2 GB — the threshold must be measured, not assumed.
+      - "auto" (default): broadcast the label layer when it fits
+        broadcast_max_bytes, else join. The layer is pulled once per
+        (application, semantic plan, budget) by the memoized `_pull`: Spark's
+        plan size estimate screens it, then the exact rows x 48 B gate —
+        no count probe, and a second call pulls and broadcasts nothing.
       - "broadcast": the label layer is the small dimension — it
         ships to every chipper task as numpy arrays (sorted by geom_seq) and
         candidate selection is a vectorized bbox overlap inside the UDF.
@@ -133,30 +138,15 @@ def chip_pipeline(
       - "join": cover-cell equi-join + per-scene collect_list — the path
         for a label side too big to broadcast (salted/AQE at scale)."""
     _register_views(spark, sf_dir)
-    scenes = matched_scenes(spark, scene_pred, scenes_df=scenes_df)
+    scenes = matched_scenes(spark, scene_pred, scenes_df=scenes_df, matched_dates=matched_dates)
     n_parts = shuffle_parts or spark.sparkContext.defaultParallelism
 
-    if labels_via == "auto":
-        labels_via = (
-            "broadcast"
-            if _label_bytes(spark, sf_dir) <= broadcast_max_bytes
-            else "join"
-        )
+    bc = None
+    if labels_via != "join":
+        cap = math.inf if labels_via == "broadcast" else broadcast_max_bytes
+        _, bc = _pull(spark.table("labels"), ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"], _label_arrays, cap)
 
-    if labels_via == "broadcast":
-        lab = (
-            spark.sql("SELECT geom_seq, labelclass, cx, cy, rx, ry FROM labels ORDER BY geom_seq")
-            .toPandas()
-        )
-        bc = spark.sparkContext.broadcast(
-            {
-                "cx": lab["cx"].to_numpy(np.float64),
-                "cy": lab["cy"].to_numpy(np.float64),
-                "rx": lab["rx"].to_numpy(np.float64),
-                "ry": lab["ry"].to_numpy(np.float64),
-                "cls": lab["labelclass"].to_numpy(np.int32),
-            }
-        )
+    if bc is not None:
         # cost-striped partitioning: order scenes by pixel cost desc and
         # stripe round-robin across partitions (longest-processing-time
         # placement) — a plain hash repartition leaves fat-dim stragglers
@@ -174,7 +164,6 @@ def chip_pipeline(
             .drop("_p")
         )
     else:
-        bc = None
         # -- J2: candidate labels per scene, collected per scene for the burn
         pairs = scene_label_pairs(spark, scene_pred).join(
             F.broadcast(scenes.select("scene_id")), "scene_id", "left_semi"

@@ -30,7 +30,6 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -72,7 +71,10 @@ class SnapshotTable:
     # ------------------------------------------------------------ commit
     def commit(self, df: DataFrame, step: str, partition_col: str | None = None) -> Snapshot:
         """Write df as a new snapshot. Data first, manifest last (atomic
-        rename) — the commit point is the rename.
+        rename) — the commit point is the rename. The written data is read
+        back with df's known schema (no inference job) by ONE query: the
+        per-partition group-by, whose counts sum to n_rows, or a count()
+        without a partition column.
 
         The data dir carries a fresh uuid suffix so commit is
         crash-retryable: a writer that dies after writing data but before
@@ -95,13 +97,12 @@ class SnapshotTable:
         data_dir = os.path.join(self.root, "data", f"snap={sid}-{uuid.uuid4().hex[:8]}")
         df.write.mode("errorifexists").parquet(data_dir)
 
-        spark = df.sparkSession
-        committed = spark.read.parquet(data_dir)
-        n_rows = committed.count()
-        part_rows: dict[str, int] = {}
-        if partition_col is not None:
-            for r in committed.groupBy(partition_col).count().collect():
-                part_rows[str(r[0])] = r[1]
+        committed = df.sparkSession.read.schema(df.schema).parquet(data_dir)
+        if partition_col is None:
+            n_rows, part_rows = committed.count(), {}
+        else:
+            part_rows = {str(k): n for k, n in committed.groupBy(partition_col).count().collect()}
+            n_rows = sum(part_rows.values())
 
         manifest = Snapshot(
             snapshot_id=sid,
@@ -137,11 +138,18 @@ class SnapshotTable:
     # ------------------------------------------------------------ read
     def read(self, spark: SparkSession, as_of: int | None = None) -> DataFrame | None:
         """Read the committed table; with ``as_of`` only snapshots with
-        snapshot_id <= as_of are visible (Iceberg time-travel semantics)."""
-        dirs = [s.data_dir for s in self.snapshots() if as_of is None or s.snapshot_id <= as_of]
-        if not dirs:
+        snapshot_id <= as_of are visible (Iceberg time-travel semantics).
+        The latest visible manifest's schema (by the evolution guard, a
+        superset of every earlier one) is passed to the reader, so a read
+        launches no job and a column added by a later snapshot reads as
+        NULL in earlier files; manifests without a schema infer it."""
+        snaps = [s for s in self.snapshots() if as_of is None or s.snapshot_id <= as_of]
+        if not snaps:
             return None
-        return spark.read.parquet(*dirs)
+        reader = spark.read
+        if snaps[-1].schema is not None:
+            reader = reader.schema(", ".join(f"`{c.replace('`', '``')}` {t}" for c, t in snaps[-1].schema.items()))
+        return reader.parquet(*[s.data_dir for s in snaps])
 
     def remove_orphans(self, grace_seconds: float = 3600.0) -> list[str]:
         """Iceberg-maintenance analogue (remove_orphan_files): delete data

@@ -8,6 +8,7 @@ import os
 
 from terrakit_spark.cli import stage_chip, stage_download, stage_labels, stage_store
 from terrakit_spark.plans.snapshots import SnapshotTable
+from tests.util import jobs_launched
 
 
 def test_cli_stages_end_to_end(synth, spark, sf_dir, tmp_path):
@@ -25,9 +26,9 @@ def test_cli_stages_end_to_end(synth, spark, sf_dir, tmp_path):
     props = json.load(open(os.path.join(wd, "dataset_properties.json")))
     assert props["bands"] and all("mean" in b for b in props["bands"])
 
-    # re-run: everything committed -> resumed, nothing recomputed
-    r3b = stage_chip(spark, sf_dir, wd, scene_pred="(scene_id % 25) IN (15, 20)")
-    assert r3b["resumed"] and r3b["chips_rows"] == 0
+    # re-run: every matched date committed -> resumed without a Spark job
+    r3b, jobs = jobs_launched(spark, lambda: stage_chip(spark, sf_dir, wd, scene_pred="(scene_id % 25) IN (15, 20)"))
+    assert r3b == {"chips_rows": 0, "resumed": True} and jobs == 0
 
     r4 = stage_store(spark, sf_dir, wd)
     assert r4["dataset_rows"] == r3["chips_rows"]
@@ -38,6 +39,24 @@ def test_cli_stages_end_to_end(synth, spark, sf_dir, tmp_path):
     assert [r.step for r in lin] == ["chip"]
     labels_lin = SnapshotTable(os.path.join(wd, "labels")).lineage_df(spark).collect()
     assert labels_lin[0].n_rows == r1["labels_rows"]
+
+
+def test_chip_stage_reads_download_matches(synth, spark, sf_dir, tmp_path):
+    """The chip stage chips only dates the download stage committed (here
+    under a cloud-cover filter) and refuses to run before download."""
+    import pytest
+
+    from terrakit_spark import api
+
+    pred = "(scene_id % 25) IN (15, 20)"
+    with pytest.raises(SystemExit, match="download stage has not run"):
+        stage_chip(spark, sf_dir, str(tmp_path / "empty"), scene_pred=pred)
+    wd = str(tmp_path / "wd")
+    api.download_data(spark, sf_dir, max_cloud_cover=30, working_dir=wd)
+    matched = SnapshotTable(os.path.join(wd, "matched")).committed_partitions()
+    assert stage_chip(spark, sf_dir, wd, scene_pred=pred)["chips_rows"] > 0
+    chips = SnapshotTable(os.path.join(wd, "chips")).read(spark)
+    assert {r[0] for r in chips.select("scene_date_str").distinct().collect()} <= matched
 
 
 def test_cli_config_file_and_tifs(spark, sf_dir, tmp_path):

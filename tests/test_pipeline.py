@@ -105,5 +105,33 @@ def test_labels_via_auto_probes_size(synth, spark, sf_dir, monkeypatch):
     assert rows(labels_via="auto", broadcast_max_bytes=0) == expected
     monkeypatch.undo()
     # the default budget keeps the small synthetic layer on the broadcast path
-    assert P._label_bytes(spark, sf_dir) <= 64 << 20
+    pulls = _spy_pull(monkeypatch)
     assert rows(labels_via="auto") == expected
+    assert pulls and pulls[-1][1] is not None
+
+
+def _spy_pull(monkeypatch) -> list:
+    """Record every (value, broadcast) chip_pipeline's label pull returns."""
+    import terrakit_spark.pipeline as P
+
+    pulls, real = [], P._pull
+
+    def spy(*args):
+        pulls.append(real(*args))
+        return pulls[-1]
+
+    monkeypatch.setattr(P, "_pull", spy)
+    return pulls
+
+
+def test_label_layer_pulled_once_per_application(synth, spark, sf_dir, monkeypatch):
+    """A second chip_pipeline call in the same application launches no job
+    (no label pull) and ships the same broadcast."""
+    from tests.util import jobs_launched
+
+    pulls = _spy_pull(monkeypatch)
+    chip_pipeline(spark, sf_dir, scene_pred="(scene_id % 25) = 15")
+    _, jobs = jobs_launched(spark, lambda: chip_pipeline(spark, sf_dir, scene_pred="(scene_id % 25) = 15"))
+    assert jobs == 0
+    first, second = (bc._jbroadcast.id() for _, bc in pulls)
+    assert first == second

@@ -27,6 +27,23 @@ def test_commit_read_and_lineage(spark, tmp_path):
     assert [r.step_order for r in lin] == [0, 1]
 
 
+def test_commit_reads_back_with_one_query_and_read_runs_none(spark, tmp_path):
+    """Beyond its write, a partitioned commit runs exactly the per-partition
+    group-by over the written files (no schema inference, no count); a
+    read launches no job."""
+    from tests.util import jobs_launched
+
+    df = spark.range(10).withColumn("p", (F.col("id") % 2).cast("string"))
+    path = str(tmp_path / "plain")
+    _, write = jobs_launched(spark, lambda: df.write.parquet(path))
+    _, back = jobs_launched(spark, lambda: spark.read.schema(df.schema).parquet(path).groupBy("p").count().collect())
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    snap, commit = jobs_launched(spark, lambda: t.commit(df, step="s", partition_col="p"))
+    assert commit == write + back and snap.n_rows == 10
+    got, read = jobs_launched(spark, lambda: t.read(spark))
+    assert read == 0 and got.count() == 10
+
+
 def test_crashed_writer_invisible(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "tbl"))
     t.commit(spark.range(5).withColumn("p", F.lit("a")), step="s", partition_col="p")
@@ -101,9 +118,9 @@ def test_time_travel_read(spark, tmp_path):
 
 
 def test_schema_evolution_guard(spark, tmp_path):
-    """Adding columns is allowed (union-by-position readers get NULLs via
-    parquet schema merge); changing a committed column's type or dropping
-    it is refused at commit time."""
+    """Adding columns is allowed (reads use the latest manifest's schema,
+    so earlier snapshots' rows get NULLs); changing a committed column's
+    type or dropping it is refused at commit time."""
     import pytest
 
     t = SnapshotTable(str(tmp_path / "tbl"))
@@ -114,6 +131,9 @@ def test_schema_evolution_guard(spark, tmp_path):
         step="s",
         partition_col="p",
     )
+    got = t.read(spark)
+    assert got.columns == ["id", "p", "extra"]
+    assert sorted((r.p, r.extra) for r in got.collect()) == [("a", None)] * 3 + [("b", 1.5)] * 3
     # type change on a committed column -> refused, nothing committed
     bad = spark.range(3).withColumn("p", F.lit(7))  # p was string
     with pytest.raises(ValueError, match="incompatible schema change"):

@@ -87,3 +87,19 @@ def _approx_eq(a, b, tol):
         elif x != y:
             return False
     return True
+
+
+def jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted by job group once
+    the listener bus has recorded every job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_launched-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
