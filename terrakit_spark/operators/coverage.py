@@ -9,12 +9,17 @@ vectorized Sutherland-Hodgman kernel (functions/geometry.py:clip_area_rect)
 chips worth keeping (coverage thresholds, class balance by area).
 
 Plan: window grid (pure codegen explode) -> geo tile bboxes -> coarse-cell
-equi-join to labels (salt fan decided on the driver from both layers'
-pulled bboxes when they fit, else by the probe_salts job) -> canonical-cell
-dedup + bbox prefilter (JVM-side) -> ONE Arrow refine per candidate, whose
-kernel (rect_cover_area) gives a polygon lying inside its tile its own
-area, precomputed once per polygon by the layer's GeomIndex, and sends
-only boundary-crossing pairs through the rect clip -> per-tile aggregate.
+equi-join to labels -> canonical-cell dedup + bbox prefilter (JVM-side) ->
+ONE Arrow refine per candidate, whose kernel (rect_cover_area) gives a
+polygon lying inside its tile its own area, precomputed once per polygon
+by the layer's GeomIndex, and sends only boundary-crossing pairs through
+the rect clip -> per-tile aggregate. When both layers fit the byte gate,
+each is pulled once per application and that pull serves everything: the
+salt fan is decided on the driver from the pulled bboxes, and the join
+reads both sides from the pulled rows (in-memory relations the planner
+broadcasts by their exact size) instead of re-scanning the scenes and
+labels files on every call. Over the gate, the join scans the layers and
+the probe_salts job decides the fan.
 
 Cross-engine determinism: per-pair areas are scaled to exact integer
 micro-deg^2 (round(area * 1e6)) before the rollup, so the group sums are
@@ -68,20 +73,24 @@ def tile_coverage_join(
     the same reason (AQE coalescing merges salted keys back). None
     (default) decides on the driver (bbox_salts) when the polygon layer
     has a GeomIndex and the tiles' bboxes fit the same byte cap, else by
-    the probe_salts job.
+    the probe_salts job. Each layer that fits is read from its pull, not
+    re-scanned.
 
     One candidate join feeds one Arrow refine. Its kernel splits on
     containment: a polygon whose vertices all lie inside the tile takes its
     own area (from the GeomIndex, or one shoelace pass on the column path),
     so only boundary-crossing pairs pay clip_area_rect. verts_via is as in
     cell_pip_join; both modes return the same rows."""
-    geo, bcast = geom_index(polys, verts_key, verts_via)
+    geo, bcast, rel = geom_index(polys, verts_key, verts_via)
+    tb = None
     if geo is not None:
-        polys = polys.drop("vertices")
+        polys = rel
+        tb, _, tiles_rel = layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax"))
+        if tb is not None:
+            tiles = tiles_rel
     t = with_cover_cells(tiles, "txmin", "tymin", "txmax", "tymax", out="_cell", cell_deg=cell_deg)
     g = with_cover_cells(polys, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
     if n_salts is None:
-        tb = layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax")) if geo is not None else None
         n_salts = (
             bbox_salts(tb, geo.bbox, cell_deg, tiles.sparkSession.sparkContext.defaultParallelism)
             if tb is not None

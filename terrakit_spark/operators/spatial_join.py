@@ -19,8 +19,10 @@ from __future__ import annotations
 import math
 import threading
 from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,9 +93,9 @@ def cell_pip_join(
         cell_deg = (
             adaptive_cell_deg(points, px, py, polys) if _adaptive_default() else FIXED_CELL_DEG
         )
-    geo, bcast = geom_index(polys, verts_key, verts_via, vertices)
+    geo, bcast, rel = geom_index(polys, verts_key, verts_via, vertices)
     if geo is not None:
-        polys = polys.drop(vertices)
+        polys = rel
     p = with_point_cell(points, px, py, out="_cell", cell_deg=cell_deg)
     g = with_cover_cells(polys, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
     if n_salts > 0:
@@ -102,8 +104,10 @@ def cell_pip_join(
         on = ["_cell", "_salt"]
     else:
         on = ["_cell"]
-    # No forced broadcast: AQE converts the shuffle join to broadcast at
-    # runtime when the exploded polygon side IS small.
+    # No forced broadcast: an index-sized polygon side is an in-memory
+    # relation whose exact size lets the planner broadcast it up front;
+    # over the gate, AQE converts the shuffle join to broadcast at runtime
+    # when the exploded polygon side IS small.
     cand = p.join(g, on=on, how="inner")
     if candidate_filter is not None:
         # join-key-only predicate applied BEFORE the refine: the sampled
@@ -205,6 +209,9 @@ def materialize_synth(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
         else:
             df.write.mode("overwrite").parquet(path)
         spark.read.parquet(path).createOrReplaceTempView(name)
+    # the tables were rewritten in place (same paths, same plans): layers
+    # pulled before now would serve the old rows
+    release_layers(spark)
     app = spark.sparkContext.applicationId
     _MATERIALIZED[(app, sf_dir)] = work_dir
     _active_synth[app] = sf_dir
@@ -444,50 +451,92 @@ def bbox_salts(bbox_a: np.ndarray, bbox_b: np.ndarray, cell_deg: float, par: int
 
 # ------------------------------------------------------ driver-side layers
 # A layer small enough for the driver is pulled ONCE per (application,
-# semantic plan, byte cap) with one Arrow job; the join then plans its salt
-# fan and reads its refine geometry from numpy instead of running probe and
-# collect jobs on every call.
+# semantic plan, byte cap) with one Arrow job. The same pull feeds the
+# join's salt fan and refine geometry (numpy) AND becomes the join's input:
+# an in-memory relation of the pulled rows, so a warm call neither probes,
+# collects nor re-reads the layer's files. Spark plans that relation as a
+# LocalRelation with exact size statistics, so its own planner picks the
+# broadcast side of the candidate join.
 INDEX_MAX_BYTES = 128 << 20  # padded vertex cube (rows x max vertices x 16)
 BBOX = ("xmin", "ymin", "xmax", "ymax")
-_LAYERS: OrderedDict = OrderedDict()  # memo -> (pulled value | None, broadcast | None)
+_LAYERS: OrderedDict = OrderedDict()  # memo -> Pulled
 _LAYERS_MAX = 16
 _LAYERS_LOCK = threading.Lock()
 
 
-def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float):
-    """Memoized (value, broadcast) of build(layer[cols] as Arrow, max_bytes);
-    value is None when the layer is over max_bytes. Spark's own plan size
-    estimate (the one it trusts before collecting a broadcast-join side)
-    screens out layers too big to pull; `build` applies the exact gate to
-    the pulled arrays and keeps numpy only. A built value is broadcast
-    once; the least recently used entries beyond _LAYERS_MAX are unpersisted.
-    The memo keys on the plan, not the data: a layer's inputs must not be
-    rewritten in place while its application runs."""
-    df = layer.select(*cols)
-    sc = layer.sparkSession.sparkContext
+class Pulled(NamedTuple):
+    """A memoized layer pull: the built value (None when over the cap), its
+    broadcast, and the pulled rows as an in-memory DataFrame (None when the
+    caller asked for no relation or the layer is over the cap)."""
+
+    value: object
+    bcast: Broadcast | None
+    rel: DataFrame | None
+
+
+_NOT_PULLED = Pulled(None, None, None)
+
+
+def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float, keep: list[str] | None = None) -> Pulled:
+    """Memoized Pulled of build(layer[cols] as Arrow, max_bytes); value is
+    None when the layer is over max_bytes. Spark's own plan size estimate
+    (the one it trusts before collecting a broadcast-join side) screens out
+    layers too big to pull; `build` applies the exact gate to the pulled
+    arrays and keeps numpy only. With `keep`, the pull reads the whole
+    layer and its `keep` columns also become `rel`, a DataFrame over the
+    pulled Arrow table with layer.select(*keep)'s schema (column order and
+    types); without it, the pull reads `cols` only. A built value is
+    broadcast once; the least recently used entries beyond _LAYERS_MAX are
+    unpersisted and their relations dropped. The memo keys on the plan, not
+    the data: a layer's inputs must not be rewritten in place while its
+    application runs (materialize_synth releases its application's entries)."""
+    df = layer if keep is not None else layer.select(*cols)
+    spark = layer.sparkSession
+    sc = spark.sparkContext
     qe = df._jdf.queryExecution()
-    memo = (sc.applicationId, qe.analyzed().semanticHash(), max_bytes)
+    memo = (sc.applicationId, qe.analyzed().semanticHash(), tuple(cols), tuple(keep or ()), max_bytes)
     with _LAYERS_LOCK:
         if memo not in _LAYERS:
             est = int(qe.optimizedPlan().stats().sizeInBytes())
-            value = build(df.toArrow(), max_bytes) if est <= max_bytes else None
-            _LAYERS[memo] = (value, None if value is None else sc.broadcast(value))
+            t = df.toArrow() if est <= max_bytes else None
+            value = None if t is None else build(t.select(cols), max_bytes)
+            _LAYERS[memo] = _NOT_PULLED if value is None else Pulled(
+                value,
+                sc.broadcast(value),
+                None if keep is None else spark.createDataFrame(t.select(keep), schema=layer.select(*keep).schema),
+            )
             for k in [k for k in _LAYERS if k[0] != memo[0]]:
                 del _LAYERS[k]  # a stopped application's broadcasts went with it
             while len(_LAYERS) > _LAYERS_MAX:
-                _, (_, old) = _LAYERS.popitem(last=False)
-                if old is not None:
-                    old.unpersist()
+                _release(next(iter(_LAYERS)))
         _LAYERS.move_to_end(memo)
         return _LAYERS[memo]
 
 
-def geom_index(layer: DataFrame, key: str, verts_via: str = "auto", vertices: str = "vertices"):
-    """(GeomIndex, its broadcast) of a polygon layer, or (None, None) for the
-    per-row path: verts_via="column", no `key` column, keys that are null or
-    not unique, or — under "auto" — an estimated cube over INDEX_MAX_BYTES."""
-    if verts_via == "column" or key not in layer.columns:
-        return None, None
+def _release(memo) -> None:
+    """Drop a _LAYERS entry, relation included, and unpersist its broadcast."""
+    old = _LAYERS.pop(memo).bcast
+    if old is not None:
+        old.unpersist()
+
+
+def release_layers(spark: SparkSession) -> None:
+    """Forget every layer this application pulled: its tables were
+    rewritten in place, at the same plans."""
+    app = spark.sparkContext.applicationId
+    with _LAYERS_LOCK:
+        for k in [k for k in _LAYERS if k[0] == app]:
+            _release(k)
+
+
+def geom_index(layer: DataFrame, key: str, verts_via: str = "auto", vertices: str = "vertices") -> Pulled:
+    """Pulled(GeomIndex, its broadcast, the layer without `vertices`) of a
+    polygon layer, or all None for the per-row path: verts_via="column", no
+    `key` column, keys that are null or not unique, or — under "auto" — an
+    estimated cube over INDEX_MAX_BYTES."""
+    columns = layer.columns
+    if verts_via == "column" or key not in columns:
+        return _NOT_PULLED
 
     def build(t, max_bytes):
         v, k = t.column(vertices).combine_chunks(), t.column(key)
@@ -501,20 +550,22 @@ def geom_index(layer: DataFrame, key: str, verts_via: str = "auto", vertices: st
         return GeomIndex.build(keys, bbox, v.flatten().to_numpy(), counts)
 
     cap = math.inf if verts_via == "broadcast" else INDEX_MAX_BYTES
-    return _pull(layer, [key, *BBOX, vertices], build, cap)
+    keep = [c for c in columns if c != vertices]
+    return _pull(layer, [key, *BBOX, vertices], build, cap, keep)
 
 
-def layer_bboxes(layer: DataFrame, cols: tuple[str, str, str, str]) -> np.ndarray | None:
-    """(n, 4) float64 bboxes (cols = xmin, ymin, xmax, ymax) of a layer
-    without geometry, e.g. tiles, or None over INDEX_MAX_BYTES — the
-    salt-decision input for that side."""
+def layer_bboxes(layer: DataFrame, cols: tuple[str, str, str, str]) -> Pulled:
+    """Pulled((n, 4) float64 bboxes, their broadcast, the whole layer) of a
+    layer without geometry, e.g. tiles (cols = xmin, ymin, xmax, ymax), or
+    all None over INDEX_MAX_BYTES. The bboxes are the salt-decision input
+    for that side."""
 
     def build(t, max_bytes):
         if t.num_rows * 32 > max_bytes:
             return None
         return np.column_stack([t.column(c).to_numpy() for c in cols])
 
-    return _pull(layer, list(cols), build, INDEX_MAX_BYTES)[0]
+    return _pull(layer, list(cols), build, INDEX_MAX_BYTES, layer.columns)
 
 
 def spatial_join_pip_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -661,12 +712,12 @@ def convex_overlap_join(
     verts_via applies per side as in cell_pip_join: with both indexes the
     Arrow transfer per candidate pair is two int64 keys. The output never
     carries `vertices`/`vertices_b`."""
-    geo_a, bcast_a = geom_index(polys_a, verts_key, verts_via)
-    geo_b, bcast_b = geom_index(polys_b, verts_key, verts_via)
+    geo_a, bcast_a, rel_a = geom_index(polys_a, verts_key, verts_via)
+    geo_b, bcast_b, rel_b = geom_index(polys_b, verts_key, verts_via)
     if geo_a is not None:
-        polys_a = polys_a.drop("vertices")
+        polys_a = rel_a
     if geo_b is not None:
-        polys_b = polys_b.drop("vertices")
+        polys_b = rel_b
     b = polys_b.select([F.col(c).alias(f"{c}_b") for c in polys_b.columns])
     a_cells = with_cover_cells(polys_a, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
     b_cells = with_cover_cells(b, "xmin_b", "ymin_b", "xmax_b", "ymax_b", out="_cell", cell_deg=cell_deg)

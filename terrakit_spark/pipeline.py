@@ -144,7 +144,7 @@ def chip_pipeline(
     bc = None
     if labels_via != "join":
         cap = math.inf if labels_via == "broadcast" else broadcast_max_bytes
-        _, bc = _pull(spark.table("labels"), ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"], _label_arrays, cap)
+        bc = _pull(spark.table("labels"), ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"], _label_arrays, cap).bcast
 
     if bc is not None:
         # cost-striped partitioning: order scenes by pixel cost desc and

@@ -1,8 +1,8 @@
 """The driver-side geometry index and the plan shape it buys: one Arrow
-pull per index-sized layer (none when warm), one Arrow refine per
-candidate, loud lookups, a size-independent output schema, and the same
-rows whichever path (index or per-row vertices, driver or Spark salt
-decision) the byte gate picks."""
+pull per index-sized layer (none when warm) that is also the join's input,
+one Arrow refine per candidate, loud lookups, a size-independent output
+schema, released layers, and the same rows whichever path (index or per-row
+vertices, driver or Spark salt decision) the byte gate picks."""
 
 from __future__ import annotations
 
@@ -36,6 +36,15 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _stage_tasks(spark, fn) -> list[int]:
+    """Tasks of every stage of every job fn launched."""
+    from tests.util import job_ids_launched
+
+    st = spark.sparkContext.statusTracker()
+    stages = [st.getStageInfo(s) for j in job_ids_launched(spark, fn)[1] for s in st.getJobInfo(j).stageIds]
+    return [s.numTasks for s in stages if s is not None]
+
+
 def test_geom_index_build_and_lookup():
     # ragged: a triangle and a square, given out of key order
     flat = np.array([0, 0, 2, 0, 2, 2, 0, 2, 0, 0, 1, 0, 0, 1], dtype=np.float64)
@@ -58,7 +67,7 @@ def test_missing_key_raises_in_the_action(layers):
     """A candidate whose key was filtered out of the layer after the index
     was built must fail the action, not resolve to a neighbour's polygon."""
     d, _ = layers
-    _, bcast = sj.geom_index(d.filter("label_id % 3 != 0"), "label_id", "broadcast")
+    bcast = sj.geom_index(d.filter("label_id % 3 != 0"), "label_id", "broadcast").bcast
     ref = (bcast, F.col("label_id"))
     hit = d.filter(refine_udf(pip_kernel, "boolean", [ref], F.col("xmin"), F.col("ymin")))
     with pytest.raises(Exception, match="GeomIndex holds no geometry"):
@@ -93,6 +102,74 @@ def test_one_arrow_refine_per_plan(layers, spark, sf_dir):
     assert _executed_plan(QUERIES["tile_label_coverage"](spark, sf_dir)).count("ArrowEvalPython") == 1
 
 
+def test_pulled_layers_are_the_join_input(layers, spark, sf_dir):
+    """Both layers index-sized: the joins plan over the pulled rows
+    (LocalTableScan) and never re-read the layers' files. Unsalted, a warm
+    call's refine stage runs at most defaultParallelism tasks (a salted
+    call pins n_salts x defaultParallelism by design, see test_salting)."""
+    for q in ("polygon_overlap_join", "tile_label_coverage"):
+        plan = _executed_plan(QUERIES[q](spark, sf_dir))
+        assert plan.count("LocalTableScan") == 2 and "Scan parquet" not in plan, (q, plan)
+    d, tiles = layers
+    par = spark.sparkContext.defaultParallelism
+    joins = {
+        "overlap": lambda: sj.convex_overlap_join(d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1"), n_salts=0),
+        "coverage": lambda: cv.tile_coverage_join(tiles, d, n_salts=0),
+    }
+    for name, join in joins.items():
+        join().count()  # cold: pull both layers
+        tasks = _stage_tasks(spark, join().count)
+        assert tasks and max(tasks) <= par, (name, tasks, par)
+
+
+def test_evicted_layer_is_released_and_repulled(layers, spark, monkeypatch):
+    """With room for one layer, pulling a second unpersists the first one's
+    broadcast and drops its relation; the first join then re-pulls with one
+    job and returns the same rows."""
+    from tests.util import jobs_launched
+
+    d, _ = layers
+    points = spark.table("media").select("media_ref", "mx", "my")
+    monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
+    monkeypatch.setattr(sj, "_LAYERS_MAX", 1)
+    join = lambda: sj.cell_pip_join(points, d, cell_deg=0.125)  # noqa: E731
+    first = _rows(join())
+    ((memo, pulled),) = sj._LAYERS.items()
+    unpersisted, real = [], pulled.bcast.unpersist
+    monkeypatch.setattr(pulled.bcast, "unpersist", lambda *a: unpersisted.append(a) or real(*a))
+    assert sj.geom_index(d.filter("label_id % 2 = 0"), "label_id").rel is not None
+    assert unpersisted and memo not in sj._LAYERS
+    assert all(p.rel is not pulled.rel for p in sj._LAYERS.values())
+    df, jobs = jobs_launched(spark, join)
+    assert jobs == 1 and first and _rows(df) == first
+
+
+def test_materialize_synth_releases_the_applications_layers(layers, spark, sf_dir, tmp_path, monkeypatch):
+    """materialize_synth rewrites tables in place, at the same plans: no
+    layer the application pulled before may survive it."""
+    from terrakit_spark.synth import register_synth_views
+
+    d, tiles = layers
+    app = spark.sparkContext.applicationId
+    monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
+    sj.geom_index(d, "label_id")
+    sj.layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax"))
+    unpersisted = []
+    for p in sj._LAYERS.values():
+        monkeypatch.setattr(p.bcast, "unpersist", lambda *a, real=p.bcast.unpersist: unpersisted.append(a) or real(*a))
+    assert len(unpersisted) == 0 and len(sj._LAYERS) == 2
+    monkeypatch.setattr(sj, "ALL_TABLES", {"labels": sj.ALL_TABLES["labels"]})
+    try:
+        sj.materialize_synth(spark, sf_dir, str(tmp_path / "stored"))
+        assert not any(k[0] == app for k in sj._LAYERS)
+        assert len(unpersisted) == 2
+    finally:
+        # re-point the views at the on-the-fly synth derivations
+        sj._MATERIALIZED.pop((app, sf_dir), None)
+        sj._active_synth.pop(app, None)
+        register_synth_views(spark, sf_dir)
+
+
 def test_planning_jobs_cold_then_warm(layers, monkeypatch):
     """Cold: one Arrow pull per index-sized input layer and nothing else
     (the salt fan is decided on the driver). Warm: no job at all."""
@@ -124,16 +201,16 @@ def test_driver_salt_decision_matches_probe(layers, cell_deg):
         return sj.with_cover_cells(df, *box, out="_cell", cell_deg=cell_deg)
 
     bb = [sj.geom_index(x, "label_id")[0].bbox for x in (a, b, d)]
-    tb = sj.layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax"))
+    tb = sj.layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax")).value
     assert sj.bbox_salts(bb[0], bb[1], cell_deg, par) == sj.probe_salts(cells(a, *sj.BBOX), cells(b, *sj.BBOX))
     t = cells(tiles, "txmin", "tymin", "txmax", "tymax")
     assert sj.bbox_salts(tb, bb[2], cell_deg, par) == sj.probe_salts(t, cells(d, *sj.BBOX))
 
 
 def test_byte_gate_low_takes_column_and_probe_paths(synth, spark, sf_dir, duck, monkeypatch):
-    """With the cap forced to zero no layer is pulled: the refine reads the
-    vertices column and the salt fan comes from the probe_salts job; both
-    queries still match their oracles."""
+    """With the cap forced to zero no layer is pulled: the joins scan the
+    layers' files, the refine reads the vertices column and the salt fan
+    comes from the probe_salts job; both queries still match their oracles."""
     from terrakit_spark.registry import ORACLES
     from tests.util import assert_match
 
@@ -148,6 +225,8 @@ def test_byte_gate_low_takes_column_and_probe_paths(synth, spark, sf_dir, duck, 
     monkeypatch.setattr(cv, "probe_salts", counted)
     for q in ("polygon_overlap_join", "tile_label_coverage"):
         df = QUERIES[q](spark, sf_dir)
-        assert "vertices" in _executed_plan(df).split("ArrowEvalPython", 1)[1].split("\n", 1)[0]
+        plan = _executed_plan(df)
+        assert "vertices" in plan.split("ArrowEvalPython", 1)[1].split("\n", 1)[0]
+        assert "LocalTableScan" not in plan and "Scan parquet" in plan, plan
         assert_match(df, duck, ORACLES[q])
     assert len(probes) == 2

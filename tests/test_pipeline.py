@@ -111,7 +111,7 @@ def test_labels_via_auto_probes_size(synth, spark, sf_dir, monkeypatch):
 
 
 def _spy_pull(monkeypatch) -> list:
-    """Record every (value, broadcast) chip_pipeline's label pull returns."""
+    """Record every Pulled chip_pipeline's label pull returns."""
     import terrakit_spark.pipeline as P
 
     pulls, real = [], P._pull
@@ -133,5 +133,5 @@ def test_label_layer_pulled_once_per_application(synth, spark, sf_dir, monkeypat
     chip_pipeline(spark, sf_dir, scene_pred="(scene_id % 25) = 15")
     _, jobs = jobs_launched(spark, lambda: chip_pipeline(spark, sf_dir, scene_pred="(scene_id % 25) = 15"))
     assert jobs == 0
-    first, second = (bc._jbroadcast.id() for _, bc in pulls)
+    first, second = (p.bcast._jbroadcast.id() for p in pulls)
     assert first == second

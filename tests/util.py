@@ -89,8 +89,8 @@ def _approx_eq(a, b, tol):
     return True
 
 
-def jobs_launched(spark, fn):
-    """(fn(), number of Spark jobs fn launched), counted by job group once
+def job_ids_launched(spark, fn):
+    """(fn(), ids of the Spark jobs fn launched), found by job group once
     the listener bus has recorded every job."""
     import uuid
 
@@ -102,4 +102,10 @@ def jobs_launched(spark, fn):
     finally:
         sc.setJobGroup("", "")
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs fn launched)."""
+    out, ids = job_ids_launched(spark, fn)
+    return out, len(ids)
