@@ -6,7 +6,9 @@ dir and reading its predecessor's committed table (chip reads download's
 matches and needs download to have run; store reads the chips); filename
 conventions become key columns; re-runs resume from committed partitions
 (the reference's file-presence idempotence upgraded to snapshot
-checkpoints).
+checkpoints). The stored input layers (labels, scenes) come from the
+application's pulled layers (`stored_layer`: read once, then served from
+memory when they fit the driver); committed tables are read as before.
 
   python -m terrakit_spark labels   --sf-dir D --working-dir W
   python -m terrakit_spark download --sf-dir D --working-dir W
@@ -24,7 +26,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from terrakit_spark.operators.spatial_join import _register_views
+from terrakit_spark.operators.spatial_join import _register_views, stored_layer
 from terrakit_spark.plans.snapshots import SnapshotTable
 from terrakit_spark.session import get_spark
 from terrakit_spark.validate import validate_date_range
@@ -38,25 +40,29 @@ def _table(working_dir: str, name: str) -> SnapshotTable:
 
 def labels_frames(spark: SparkSession, sf_dir: str) -> tuple:
     """(labels, grouped-bbox) frames — the single definition both the labels
-    stage and api.process_labels plan from (transform/labels.py:477-591)."""
+    stage and api.process_labels plan from (transform/labels.py:477-591),
+    over the application's pulled label layer."""
     _register_views(spark, sf_dir)
+    layer = stored_layer(spark, "labels")
     labels = spark.sql(
         """
         SELECT label_id, geom_seq, datetime, labelclass, filename,
                cx, cy, rx, ry,
                cx - rx AS xmin, cy - ry AS ymin, cx + rx AS xmax, cy + ry AS ymax
-        FROM labels
-        """
+        FROM {labels}
+        """,
+        labels=layer,
     )
     bboxes = spark.sql(
         """
         SELECT dc.datetime, dc.labelclass, env.xmin, env.ymin, env.xmax, env.ymax
-        FROM (SELECT DISTINCT datetime, labelclass FROM labels) dc
+        FROM (SELECT DISTINCT datetime, labelclass FROM {labels}) dc
         JOIN (SELECT datetime, min(cx - rx) AS xmin, min(cy - ry) AS ymin,
                      max(cx + rx) AS xmax, max(cy + ry) AS ymax
-              FROM labels GROUP BY datetime) env
+              FROM {labels} GROUP BY datetime) env
           ON dc.datetime = env.datetime
-        """
+        """,
+        labels=layer,
     )
     return labels, bboxes
 
@@ -80,11 +86,12 @@ def stage_labels(spark: SparkSession, sf_dir: str, working_dir: str, write_shp: 
 
 def matched_frame(spark: SparkSession, sf_dir: str, scene_filter: str = "true") -> "DataFrame":
     """J1 as-of matched table; scene_filter is the F2 cloud-cover pushdown
-    seam (download_data.py:219-324)."""
+    seam (download_data.py:219-324). Plans over the application's pulled
+    label and scene layers."""
     _register_views(spark, sf_dir)
-    from terrakit_spark.operators.asof import _asof_join
+    from terrakit_spark.pipeline import asof_matches
 
-    return spark.sql(_asof_join("spark", scene_filter)).filter("scene_date_str IS NOT NULL")
+    return asof_matches(spark, scene_filter)
 
 
 def stage_download(spark: SparkSession, sf_dir: str, working_dir: str, scene_filter: str = "true") -> dict:

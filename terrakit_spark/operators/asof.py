@@ -23,11 +23,13 @@ from terrakit_spark.registry import register_sql
 from terrakit_spark.synth import POST_DAYS, PRE_DAYS
 
 
-def _asof_join(dialect: str, scene_filter: str = "true") -> str:
+def _asof_join(dialect: str, scene_filter: str = "true", labels: str = "labels", scenes: str = "scenes") -> str:
     """scene_filter pre-filters the scene side before the DISTINCT — the F2
     cloud-cover pushdown seam api.download_data threads max_cloud_cover
-    through (download_data.py:506-643). Default 'true' keeps the registered
-    query/oracle text unchanged."""
+    through (download_data.py:506-643). labels/scenes name the two input
+    relations: the staged job passes "{labels}"/"{scenes}" placeholders and
+    the pulled layers as spark.sql arguments. The defaults ('true', the
+    catalog views) keep the registered query/oracle text unchanged."""
     d = D(dialect)
     ldate = "b.dt"
     lo = d.date_add(ldate, f"-{PRE_DAYS}")
@@ -41,8 +43,8 @@ FROM (
          {diff} AS abs_diff,
          row_number() OVER (PARTITION BY b.datetime
                             ORDER BY {diff} ASC NULLS LAST, s.scene_date ASC NULLS LAST) AS rn
-  FROM (SELECT DISTINCT datetime, {d.to_date("datetime")} AS dt FROM labels) b
-  LEFT JOIN (SELECT DISTINCT scene_date FROM scenes WHERE {scene_filter}) s
+  FROM (SELECT DISTINCT datetime, {d.to_date("datetime")} AS dt FROM {labels}) b
+  LEFT JOIN (SELECT DISTINCT scene_date FROM {scenes} WHERE {scene_filter}) s
     ON s.scene_date >= {lo} AND s.scene_date <= {hi}
 ) ranked
 WHERE rn = 1

@@ -456,7 +456,8 @@ def bbox_salts(bbox_a: np.ndarray, bbox_b: np.ndarray, cell_deg: float, par: int
 # an in-memory relation of the pulled rows, so a warm call neither probes,
 # collects nor re-reads the layer's files. Spark plans that relation as a
 # LocalRelation with exact size statistics, so its own planner picks the
-# broadcast side of the candidate join.
+# broadcast side of the candidate join. `stored_layer` serves a whole
+# stored table the same way (rows only, no value, no broadcast).
 INDEX_MAX_BYTES = 128 << 20  # padded vertex cube (rows x max vertices x 16)
 BBOX = ("xmin", "ymin", "xmax", "ymax")
 _LAYERS: OrderedDict = OrderedDict()  # memo -> Pulled
@@ -465,9 +466,10 @@ _LAYERS_LOCK = threading.Lock()
 
 
 class Pulled(NamedTuple):
-    """A memoized layer pull: the built value (None when over the cap), its
-    broadcast, and the pulled rows as an in-memory DataFrame (None when the
-    caller asked for no relation or the layer is over the cap)."""
+    """A memoized layer pull: the built value (None when over the cap or
+    nothing was built), its broadcast (None without a value), and the pulled
+    rows as an in-memory DataFrame (None when the caller asked for no
+    relation or the layer is over the cap)."""
 
     value: object
     bcast: Broadcast | None
@@ -482,13 +484,15 @@ def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float, keep: list
     None when the layer is over max_bytes. Spark's own plan size estimate
     (the one it trusts before collecting a broadcast-join side) screens out
     layers too big to pull; `build` applies the exact gate to the pulled
-    arrays and keeps numpy only. With `keep`, the pull reads the whole
-    layer and its `keep` columns also become `rel`, a DataFrame over the
-    pulled Arrow table with layer.select(*keep)'s schema (column order and
-    types); without it, the pull reads `cols` only. A built value is
-    broadcast once; the least recently used entries beyond _LAYERS_MAX are
-    unpersisted and their relations dropped. The memo keys on the plan, not
-    the data: a layer's inputs must not be rewritten in place while its
+    arrays and keeps numpy only. build=None builds no value: the exact gate
+    is the pulled Arrow table's nbytes <= max_bytes, and an admitted pull
+    yields `rel` only (no value, no broadcast). With `keep`, the pull reads
+    the whole layer and its `keep` columns also become `rel`, a DataFrame
+    over the pulled Arrow table with layer.select(*keep)'s schema (column
+    order and types); without it, the pull reads `cols` only. A built value
+    is broadcast once; the least recently used entries beyond _LAYERS_MAX
+    are unpersisted and their relations dropped. The memo keys on the plan,
+    not the data: a layer's inputs must not be rewritten in place while its
     application runs (materialize_synth releases its application's entries)."""
     df = layer if keep is not None else layer.select(*cols)
     spark = layer.sparkSession
@@ -499,10 +503,11 @@ def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float, keep: list
         if memo not in _LAYERS:
             est = int(qe.optimizedPlan().stats().sizeInBytes())
             t = df.toArrow() if est <= max_bytes else None
-            value = None if t is None else build(t.select(cols), max_bytes)
-            _LAYERS[memo] = _NOT_PULLED if value is None else Pulled(
+            value = None if t is None or build is None else build(t.select(cols), max_bytes)
+            admitted = value is not None or (build is None and t is not None and t.nbytes <= max_bytes)
+            _LAYERS[memo] = _NOT_PULLED if not admitted else Pulled(
                 value,
-                sc.broadcast(value),
+                None if value is None else sc.broadcast(value),
                 None if keep is None else spark.createDataFrame(t.select(keep), schema=layer.select(*keep).schema),
             )
             for k in [k for k in _LAYERS if k[0] != memo[0]]:
@@ -566,6 +571,16 @@ def layer_bboxes(layer: DataFrame, cols: tuple[str, str, str, str]) -> Pulled:
         return np.column_stack([t.column(c).to_numpy() for c in cols])
 
     return _pull(layer, list(cols), build, INDEX_MAX_BYTES, layer.columns)
+
+
+def stored_layer(spark: SparkSession, name: str) -> DataFrame:
+    """The stored table `name` as pulled rows (an in-memory relation with
+    the view's schema) when it fits INDEX_MAX_BYTES, else the view itself.
+    Pulled on first use, once per application; the staged chip job's stages
+    plan over it instead of re-reading the table's files."""
+    layer = spark.table(name)
+    rel = _pull(layer, [], None, INDEX_MAX_BYTES, layer.columns).rel
+    return layer if rel is None else rel
 
 
 def spatial_join_pip_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from terrakit_spark.operators.asof import _asof_join
 from terrakit_spark.operators.rasterize import burn_image, scene_label_pairs
-from terrakit_spark.operators.spatial_join import _pull, _register_views
+from terrakit_spark.operators.spatial_join import _pull, _register_views, stored_layer
 from terrakit_spark.sources.raster import scene_pixels
 from terrakit_spark.synth import CHIP
 
@@ -49,19 +49,27 @@ def _windows(w: int, h: int, c: int = CHIP) -> list[tuple[int, int, int]]:
     return out
 
 
+def asof_matches(spark: SparkSession, scene_filter: str = "true") -> DataFrame:
+    """J1 as-of matches (datetime, scene_date_str, abs_diff) of the label
+    dates that match a scene, over the application's pulled label and scene
+    layers (`stored_layer`); scene_filter as in _asof_join."""
+    text = _asof_join("spark", scene_filter, labels="{labels}", scenes="{scenes}")
+    asof = spark.sql(text, labels=stored_layer(spark, "labels"), scenes=stored_layer(spark, "scenes"))
+    return asof.filter("scene_date_str IS NOT NULL")
+
+
 def matched_scenes(
     spark: SparkSession, scene_pred: str, scenes_df: DataFrame | None = None, matched_dates: list[str] | None = None
 ) -> DataFrame:
-    """Scenes that win the as-of join for at least one label date.
-    scenes_df overrides the catalog scan (streaming micro-batches feed
-    their arrivals here; the as-of filter still applies). matched_dates
-    (a staged job's committed download matches) replaces the as-of join."""
-    scenes = scenes_df.filter(scene_pred) if scenes_df is not None else spark.sql(f"SELECT * FROM scenes WHERE {scene_pred}")
+    """Scenes that win the as-of join for at least one label date, over
+    the application's pulled scene layer (`stored_layer`). scenes_df
+    overrides that layer (streaming micro-batches feed their arrivals
+    here; the as-of filter still applies). matched_dates (a staged job's
+    committed download matches) replaces the as-of join."""
+    scenes = (scenes_df if scenes_df is not None else stored_layer(spark, "scenes")).filter(scene_pred)
     if matched_dates is not None:
         return scenes.filter(F.col("scene_date_str").isin(list(matched_dates)))
-    asof = spark.sql(
-        "SELECT DISTINCT scene_date_str FROM (" + _asof_join("spark") + ") WHERE scene_date_str IS NOT NULL"
-    )
+    asof = asof_matches(spark).select("scene_date_str").distinct()
     return scenes.join(F.broadcast(asof), "scene_date_str")
 
 
@@ -125,10 +133,12 @@ def chip_pipeline(
 
     labels_via:
       - "auto" (default): broadcast the label layer when it fits
-        broadcast_max_bytes, else join. The layer is pulled once per
-        (application, semantic plan, budget) by the memoized `_pull`: Spark's
-        plan size estimate screens it, then the exact rows x 48 B gate —
-        no count probe, and a second call pulls and broadcasts nothing.
+        broadcast_max_bytes, else join. The label arrays are pulled once per
+        (application, semantic plan, budget) by the memoized `_pull` from
+        the application's pulled label layer (`stored_layer`, in memory when
+        it fits, so no file is re-read): Spark's plan size estimate screens
+        it, then the exact rows x 48 B gate — no count probe, and a second
+        call pulls and broadcasts nothing.
       - "broadcast": the label layer is the small dimension — it
         ships to every chipper task as numpy arrays (sorted by geom_seq) and
         candidate selection is a vectorized bbox overlap inside the UDF.
@@ -144,7 +154,8 @@ def chip_pipeline(
     bc = None
     if labels_via != "join":
         cap = math.inf if labels_via == "broadcast" else broadcast_max_bytes
-        bc = _pull(spark.table("labels"), ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"], _label_arrays, cap).bcast
+        labels = stored_layer(spark, "labels")
+        bc = _pull(labels, ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"], _label_arrays, cap).bcast
 
     if bc is not None:
         # cost-striped partitioning: order scenes by pixel cost desc and

@@ -16,6 +16,7 @@ from terrakit_spark.functions.geometry import GeomIndex, pip_kernel, refine_udf
 from terrakit_spark.operators import coverage as cv
 from terrakit_spark.operators import spatial_join as sj
 from terrakit_spark.registry import QUERIES
+from tests.util import executed_plan
 
 
 @pytest.fixture
@@ -29,11 +30,6 @@ def layers(synth, spark, sf_dir):
 def _rows(df):
     cols = sorted(df.columns)
     return sorted(tuple(r) for r in df.select(*cols).collect())
-
-
-def _executed_plan(df) -> str:
-    df.count()
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _stage_tasks(spark, fn) -> list[int]:
@@ -97,9 +93,9 @@ def test_one_arrow_refine_per_plan(layers, spark, sf_dir):
     overlap = sj.convex_overlap_join(d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1"))
     coverage = cv.tile_coverage_join(tiles, d)
     for df in (overlap, coverage):
-        assert _executed_plan(df).count("ArrowEvalPython") == 1
+        assert executed_plan(df).count("ArrowEvalPython") == 1
     # the rollup on top of the coverage pairs must not copy the UDF either
-    assert _executed_plan(QUERIES["tile_label_coverage"](spark, sf_dir)).count("ArrowEvalPython") == 1
+    assert executed_plan(QUERIES["tile_label_coverage"](spark, sf_dir)).count("ArrowEvalPython") == 1
 
 
 def test_pulled_layers_are_the_join_input(layers, spark, sf_dir):
@@ -108,7 +104,7 @@ def test_pulled_layers_are_the_join_input(layers, spark, sf_dir):
     call's refine stage runs at most defaultParallelism tasks (a salted
     call pins n_salts x defaultParallelism by design, see test_salting)."""
     for q in ("polygon_overlap_join", "tile_label_coverage"):
-        plan = _executed_plan(QUERIES[q](spark, sf_dir))
+        plan = executed_plan(QUERIES[q](spark, sf_dir))
         assert plan.count("LocalTableScan") == 2 and "Scan parquet" not in plan, (q, plan)
     d, tiles = layers
     par = spark.sparkContext.defaultParallelism
@@ -225,7 +221,7 @@ def test_byte_gate_low_takes_column_and_probe_paths(synth, spark, sf_dir, duck, 
     monkeypatch.setattr(cv, "probe_salts", counted)
     for q in ("polygon_overlap_join", "tile_label_coverage"):
         df = QUERIES[q](spark, sf_dir)
-        plan = _executed_plan(df)
+        plan = executed_plan(df)
         assert "vertices" in plan.split("ArrowEvalPython", 1)[1].split("\n", 1)[0]
         assert "LocalTableScan" not in plan and "Scan parquet" in plan, plan
         assert_match(df, duck, ORACLES[q])

@@ -109,3 +109,9 @@ def jobs_launched(spark, fn):
     """(fn(), number of Spark jobs fn launched)."""
     out, ids = job_ids_launched(spark, fn)
     return out, len(ids)
+
+
+def executed_plan(df) -> str:
+    """The executed physical plan of df, after one action on it."""
+    df.count()
+    return df._jdf.queryExecution().executedPlan().toString()
