@@ -16,7 +16,9 @@ salted repartitioning for the polygon side when it must shuffle."""
 
 from __future__ import annotations
 
+import json
 import math
+import os
 import threading
 from collections import OrderedDict
 from typing import NamedTuple
@@ -36,7 +38,7 @@ from terrakit_spark.functions.cells import (
     with_salt,
 )
 from terrakit_spark.functions.geometry import GeomIndex, geom_ref, pip_kernel, refine_udf, sat_kernel
-from terrakit_spark.registry import ensure_base_views, register_df, with_synth
+from terrakit_spark.registry import _BASE_TABLES, _active_base, ensure_base_views, read_parquet, register_df, with_synth
 from terrakit_spark.synth import ALL_TABLES
 
 
@@ -53,8 +55,6 @@ def salted_partitions(df: DataFrame, n_salts: int) -> int:
 
 
 def _adaptive_default() -> bool:
-    import os
-
     return os.environ.get("TERRAKIT_ADAPTIVE_CELLS", "1") != "0"
 
 
@@ -160,29 +160,52 @@ _PARTITION_SPEC: dict[str, tuple[str, str]] = {
 }
 
 
+# materialize_synth's record of the views it registered: view name ->
+# the schema Spark inferred on read-back (StructType.jsonValue()).
+_CATALOG = "_catalog.json"
+
+
+def _read_catalog(work_dir: str | None) -> dict:
+    """The work dir's catalog, or {} when there is none."""
+    if work_dir is None:
+        return {}
+    try:
+        with open(os.path.join(work_dir, _CATALOG)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return {}
+
+
 def _register_views(spark: SparkSession, sf_dir: str) -> None:
     """Point the base AND derived-synth views at sf_dir. Memoized on the
     ACTIVE sf_dir per session (not ever-registered): a session that
     materialized one scale factor and is then queried at another must
     re-point, not silently serve the old tables (measured: an sf1 query
     returning sf0.1 rows). Switching back re-points at the already
-    materialized parquet — no rewrite."""
-    import os
+    materialized parquet — no rewrite.
 
+    An application that materialized sf_dir (`_MATERIALIZED`) attaches the
+    stored tables from the work dir's catalog: the base views and each
+    stored table are read with their recorded schemas, the stored tables
+    with their files listed on the driver for that read only, so attaching
+    launches no Spark job. A view missing from the catalog, or a work dir
+    without one (written before the catalog existed), is inferred."""
     app = spark.sparkContext.applicationId
+    if _active_base.get(app) == sf_dir and _active_synth.get(app) == sf_dir:
+        return
+    work = _MATERIALIZED.get((app, sf_dir))
+    catalog = _read_catalog(work)
     # Base views FIRST, before the synth early-return: ensure_base_views is
     # called directly by other operator families (dedup/similarity/registry),
     # so the base views can have been re-pointed at another sf_dir since this
     # memo last ran — returning early on _active_synth alone would serve
-    # synth views over mixed-scale base tables. ensure_base_views is itself
-    # memoized on the ACTIVE sf_dir, so the common path stays free.
-    ensure_base_views(spark, sf_dir)
+    # synth views over mixed-scale base tables.
+    ensure_base_views(spark, sf_dir, catalog)
     if _active_synth.get(app) == sf_dir:
         return
-    work = _MATERIALIZED.get((app, sf_dir))
     if work is not None:
         for name in ALL_TABLES:
-            spark.read.parquet(os.path.join(work, name)).createOrReplaceTempView(name)
+            read_parquet(spark, os.path.join(work, name), catalog.get(name)).createOrReplaceTempView(name)
     else:
         for name, fn in ALL_TABLES.items():
             spark.sql(fn(SPARK)).createOrReplaceTempView(name)
@@ -193,10 +216,20 @@ def materialize_synth(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
     """Write the derived synthetic tables to parquet once and re-point the
     views at them — the bench measures the engine against stored tables
     (as a real deployment reads Iceberg), not the on-the-fly derivation.
-    Tables in _PARTITION_SPEC are written partitionBy(p_date, p_cx)."""
-    import os
+    Tables in _PARTITION_SPEC are written partitionBy(p_date, p_cx).
 
+    Last, it writes work_dir/_catalog.json, which maps every view it
+    registered (the stored tables and the base tables) to the schema Spark
+    inferred on read-back; _register_views attaches from it without a job.
+    The catalog holds names and schemas only, no paths, so a renamed work
+    dir stays valid. It is deleted first and written last (tmp +
+    os.replace): a materialize that fails midway leaves no catalog, and a
+    catalog never describes files rewritten after it."""
+    catalog = os.path.join(work_dir, _CATALOG)
+    if os.path.exists(catalog):
+        os.remove(catalog)
     ensure_base_views(spark, sf_dir)
+    schemas = {t: spark.table(t).schema.jsonValue() for t in _BASE_TABLES}
     for name, fn in ALL_TABLES.items():
         path = os.path.join(work_dir, name)
         df = spark.sql(fn(SPARK))
@@ -208,13 +241,18 @@ def materialize_synth(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
             df.write.mode("overwrite").partitionBy("p_date", "p_cx").parquet(path)
         else:
             df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).createOrReplaceTempView(name)
+        stored = spark.read.parquet(path)
+        stored.createOrReplaceTempView(name)
+        schemas[name] = stored.schema.jsonValue()
     # the tables were rewritten in place (same paths, same plans): layers
     # pulled before now would serve the old rows
     release_layers(spark)
     app = spark.sparkContext.applicationId
     _MATERIALIZED[(app, sf_dir)] = work_dir
     _active_synth[app] = sf_dir
+    with open(catalog + ".tmp", "w") as fh:
+        json.dump(schemas, fh)
+    os.replace(catalog + ".tmp", catalog)
 
 
 def spatial_join_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,12 +564,16 @@ def _release(memo) -> None:
 
 
 def release_layers(spark: SparkSession) -> None:
-    """Forget every layer this application pulled: its tables were
-    rewritten in place, at the same plans."""
+    """Forget every layer this application pulled, and the cell sizes and
+    salt fans it probed: its tables were rewritten in place, at the same
+    plans."""
     app = spark.sparkContext.applicationId
     with _LAYERS_LOCK:
         for k in [k for k in _LAYERS if k[0] == app]:
             _release(k)
+    for memo in (_DEG_CACHE, _SALT_CACHE):
+        for k in [k for k in memo if k[0] == app]:
+            del memo[k]
 
 
 def geom_index(layer: DataFrame, key: str, verts_via: str = "auto", vertices: str = "vertices") -> Pulled:

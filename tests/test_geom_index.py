@@ -142,12 +142,15 @@ def test_evicted_layer_is_released_and_repulled(layers, spark, monkeypatch):
 
 def test_materialize_synth_releases_the_applications_layers(layers, spark, sf_dir, tmp_path, monkeypatch):
     """materialize_synth rewrites tables in place, at the same plans: no
-    layer the application pulled before may survive it."""
+    layer, cell size or salt fan the application probed before may survive
+    it; another application's choices do."""
     from terrakit_spark.synth import register_synth_views
 
     d, tiles = layers
     app = spark.sparkContext.applicationId
     monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
+    monkeypatch.setattr(sj, "_DEG_CACHE", {(app, 1, 2): 0.5, ("other", 1, 2): 0.5})
+    monkeypatch.setattr(sj, "_SALT_CACHE", {(app, 1, 2, 64): 8, ("other", 1, 2, 64): 8})
     sj.geom_index(d, "label_id")
     sj.layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax"))
     unpersisted = []
@@ -159,6 +162,8 @@ def test_materialize_synth_releases_the_applications_layers(layers, spark, sf_di
         sj.materialize_synth(spark, sf_dir, str(tmp_path / "stored"))
         assert not any(k[0] == app for k in sj._LAYERS)
         assert len(unpersisted) == 2
+        assert list(sj._DEG_CACHE) == [("other", 1, 2)]
+        assert list(sj._SALT_CACHE) == [("other", 1, 2, 64)]
     finally:
         # re-point the views at the on-the-fly synth derivations
         sj._MATERIALIZED.pop((app, sf_dir), None)

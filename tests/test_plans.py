@@ -4,8 +4,21 @@ nested-loop joins in the spatial path, codegen on the relational glue)."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, IntegerType
+
 import terrakit_spark.operators  # noqa: F401
+from terrakit_spark import registry
+from terrakit_spark.operators import spatial_join as sj
 from terrakit_spark.registry import QUERIES
+from terrakit_spark.synth import ALL_TABLES, register_synth_views
+from tests.util import jobs_launched
 
 
 def _plan(df) -> str:
@@ -106,6 +119,119 @@ def test_partition_pruning_on_stored_tables(synth, spark, sf_dir, tmp_path):
         sj._MATERIALIZED.pop((app, sf_dir), None)
         sj._active_synth.pop(app, None)
         register_synth_views(spark, sf_dir)
+
+
+def _restore_views(spark, sf_dir) -> None:
+    """Re-point the views at the on-the-fly synth derivations, so later
+    tests in this session see the canonical schemas."""
+    app = spark.sparkContext.applicationId
+    sj._MATERIALIZED.pop((app, sf_dir), None)
+    sj._active_synth.pop(app, None)
+    register_synth_views(spark, sf_dir)
+
+
+@pytest.fixture(scope="module")
+def stored(synth, spark, sf_dir, tmp_path_factory):
+    """A work dir materialize_synth built under another name and that was
+    then renamed, as perfbench builds its cache; the views are restored."""
+    root = tmp_path_factory.mktemp("catalog")
+    try:
+        sj.materialize_synth(spark, sf_dir, str(root / "a"))
+        os.replace(root / "a", root / "b")
+    finally:
+        _restore_views(spark, sf_dir)
+    return str(root / "b")
+
+
+def _attach(spark, sf_dir, work) -> int:
+    """Jobs launched attaching work's tables as a new application does."""
+    app = spark.sparkContext.applicationId
+    sj._active_synth.pop(app, None)
+    registry._active_base.pop(app, None)
+    sj._MATERIALIZED[(app, sf_dir)] = work
+    return jobs_launched(spark, lambda: sj._register_views(spark, sf_dir))[1]
+
+
+def _inferred(spark, sf_dir, work) -> dict:
+    """view -> the schema spark.read.parquet infers from its files."""
+    paths = {t: f"{sf_dir}/{t}.parquet" for t in registry._BASE_TABLES}
+    paths.update({n: os.path.join(work, n) for n in ALL_TABLES})
+    return {v: spark.read.parquet(p).schema for v, p in paths.items()}
+
+
+def _views(spark, names) -> dict:
+    return {v: spark.table(v).schema for v in names}
+
+
+def _digest(df) -> tuple:
+    """(rows, order-independent sum of a 48-bit md5 prefix per row)."""
+    h = F.conv(F.substring(F.md5(F.to_json(F.struct(*df.columns))), 1, 12), 16, 10).cast("long")
+    return tuple(df.agg(F.count("*"), F.sum(h)).first())
+
+
+def test_attach_from_catalog_launches_no_job(stored, spark, sf_dir):
+    """A work dir with a catalog attaches with no Spark job: every view has
+    the schema inference would give (partition columns typed), reads the
+    renamed dir's files and the same rows, and the listing threshold is
+    left as it was."""
+    before = spark.conf.get(registry._LISTING_THRESHOLD, None)
+    try:
+        assert _attach(spark, sf_dir, stored) == 0
+        assert spark.conf.get(registry._LISTING_THRESHOLD, None) == before
+        inferred = _inferred(spark, sf_dir, stored)
+        assert len(inferred) == 16 and _views(spark, inferred) == inferred
+        for name in ("labels", "scenes", "media"):
+            assert inferred[name]["p_date"].dataType == DateType()
+            assert inferred[name]["p_cx"].dataType == IntegerType()
+        for name in ALL_TABLES:
+            files = [os.path.normpath(f.removeprefix("file:")) for f in spark.table(name).inputFiles()]
+            assert files and all(f.startswith(stored + os.sep) for f in files), name
+        for name in ("labels", "scenes"):
+            assert _digest(spark.table(name)) == _digest(spark.read.parquet(os.path.join(stored, name)))
+    finally:
+        _restore_views(spark, sf_dir)
+
+
+def test_attach_infers_what_the_catalog_lacks(stored, spark, sf_dir):
+    """A view missing from the catalog, or a work dir with no catalog,
+    takes the inference path and gets the same schemas."""
+    catalog = os.path.join(stored, "_catalog.json")
+    with open(catalog) as fh:
+        saved = fh.read()
+    try:
+        inferred = _inferred(spark, sf_dir, stored)
+        partial = json.loads(saved)
+        del partial["labels"], partial["events"]
+        with open(catalog, "w") as fh:
+            json.dump(partial, fh)
+        some = _attach(spark, sf_dir, stored)
+        assert _views(spark, inferred) == inferred
+        os.remove(catalog)
+        every = _attach(spark, sf_dir, stored)
+        assert _views(spark, inferred) == inferred
+        assert 0 < some < every
+    finally:
+        with open(catalog, "w") as fh:
+            fh.write(saved)
+        _restore_views(spark, sf_dir)
+
+
+def test_failed_materialize_leaves_no_catalog(stored, spark, sf_dir, tmp_path, monkeypatch):
+    """The catalog is deleted first and written last: a materialize that
+    raises midway leaves none, even over a work dir an earlier run left
+    one in."""
+    work = tmp_path / "w"
+    work.mkdir()
+    shutil.copy(os.path.join(stored, "_catalog.json"), work / "_catalog.json")
+    try:
+        with monkeypatch.context() as m:
+            m.setitem(ALL_TABLES, "scenes", lambda d: "SELECT no_such_column FROM labels")
+            with pytest.raises(AnalysisException):
+                sj.materialize_synth(spark, sf_dir, str(work))
+        assert (work / "labels").is_dir()  # it wrote a table before it raised
+        assert not (work / "_catalog.json").exists()
+    finally:
+        _restore_views(spark, sf_dir)
 
 
 def test_new_joins_are_equi_hash(synth, spark, sf_dir):
