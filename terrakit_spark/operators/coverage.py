@@ -46,6 +46,7 @@ from terrakit_spark.operators.spatial_join import (
     layer_bboxes,
     probe_salts,
     salted_partitions,
+    stored_layer,
 )
 from terrakit_spark.registry import register_df, with_synth
 from terrakit_spark.synth import RES_SQL
@@ -125,7 +126,10 @@ def tile_coverage_join(
 def _geo_tiles(spark: SparkSession, scene_pred: str) -> DataFrame:
     """Chip windows in geo coordinates (scene xmin/ymin + window offset *
     RES). Tile bounds are exact binary doubles (origins are 0.25-multiples,
-    RES = 2^-7), so the DuckDB oracle reproduces them bit-for-bit."""
+    RES = 2^-7), so the DuckDB oracle reproduces them bit-for-bit. Reads
+    the application's pulled scene layer (`stored_layer`), so the tile
+    layer is pulled from memory, not from the table's files; over
+    INDEX_MAX_BYTES it reads the view."""
     return spark.sql(
         f"""
         SELECT scene_id, win_index,
@@ -139,12 +143,13 @@ def _geo_tiles(spark: SparkSession, scene_pred: str) -> DataFrame:
                        CAST(CASE WHEN x + 256 > width THEN width - 256 ELSE x END AS INT) AS win_x,
                        CAST(CASE WHEN y + 256 > height THEN height - 256 ELSE y END AS INT) AS win_y,
                        256 AS win_w, 256 AS win_h
-                FROM scenes
+                FROM {{scenes}}
                 LATERAL VIEW explode(sequence(0, CAST(width - 1 AS BIGINT), 256)) _x AS x
                 LATERAL VIEW explode(sequence(0, CAST(height - 1 AS BIGINT), 256)) _y AS y) _wg
           WHERE {scene_pred}
         ) _t
-        """
+        """,
+        scenes=stored_layer(spark, "scenes"),
     )
 
 

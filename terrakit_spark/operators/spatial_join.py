@@ -133,14 +133,19 @@ def cell_pip_join(
 
 def _diamond_polys(spark: SparkSession) -> DataFrame:
     """Synthetic label diamonds as generic polygons (flat vertex list) —
-    the engine never sees the closed form, only vertices."""
+    the engine never sees the closed form, only vertices. Reads the
+    application's pulled label layer (`stored_layer`), so every derived
+    polygon layer (halves, filters, the coverage side) is pulled from
+    memory, not from the table's files; over INDEX_MAX_BYTES it reads the
+    view."""
     return spark.sql(
         """
         SELECT label_id, labelclass, geom_seq, datetime,
                cx - rx AS xmin, cy - ry AS ymin, cx + rx AS xmax, cy + ry AS ymax,
                array(cx - rx, cy, cx, cy - ry, cx + rx, cy, cx, cy + ry) AS vertices
-        FROM labels
-        """
+        FROM {labels}
+        """,
+        labels=stored_layer(spark, "labels"),
     )
 
 
@@ -619,6 +624,7 @@ def stored_layer(spark: SparkSession, name: str) -> DataFrame:
     """The stored table `name` as pulled rows (an in-memory relation with
     the view's schema) when it fits INDEX_MAX_BYTES, else the view itself.
     Pulled on first use, once per application; the staged chip job's stages
+    and the spatial joins' derived layers (`_diamond_polys`, `_geo_tiles`)
     plan over it instead of re-reading the table's files."""
     layer = spark.table(name)
     rel = _pull(layer, [], None, INDEX_MAX_BYTES, layer.columns).rel

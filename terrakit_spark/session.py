@@ -4,6 +4,18 @@ Local-mode settings mirror what we would set on a real cluster: AQE on
 (runtime re-plan + skew-join splitting), Arrow enabled for the pandas-UDF
 hot path, shuffle partitions sized to cores (not the 200 default), UTC
 session timezone so date/timestamp semantics match the DuckDB oracle.
+
+PySpark's DataFrame call-site capture is off
+(`spark.python.sql.dataFrameDebugging.enabled=false`). When on, every
+`functions.*` and `Column` call records the caller's `file:line` for
+DataFrame error contexts, and pays for it on the driver: about 5 py4j round
+trips per call (active session, a JVM class lookup, a conf read, the origin
+set and clear), plus a one-time `import IPython` when IPython is installed
+(0.58 s measured on a 4-core box, and ~25 MB of driver RSS). Planning the
+spatial joins makes hundreds of such calls. With capture off, an error
+context names a JVM frame instead of the user's line. To get the line back,
+pass `extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`
+to get_spark or set it in spark-defaults.conf.
 """
 
 from __future__ import annotations
@@ -77,6 +89,11 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")
+        # call-site capture off (see the module docstring); extra_conf can
+        # turn it back on. PySpark reads the flag once per driver process,
+        # on the first wrapped API call, and caches it: sessions built later
+        # in the same process keep the first one's value.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     jar = iceberg_jar()
     if jar:

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections import OrderedDict
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -18,7 +19,7 @@ from terrakit_spark import registry
 from terrakit_spark.operators import spatial_join as sj
 from terrakit_spark.registry import QUERIES
 from terrakit_spark.synth import ALL_TABLES, register_synth_views
-from tests.util import jobs_launched
+from tests.util import job_ids_launched, jobs_launched
 
 
 def _plan(df) -> str:
@@ -230,6 +231,53 @@ def test_failed_materialize_leaves_no_catalog(stored, spark, sf_dir, tmp_path, m
                 sj.materialize_synth(spark, sf_dir, str(work))
         assert (work / "labels").is_dir()  # it wrote a table before it raised
         assert not (work / "_catalog.json").exists()
+    finally:
+        _restore_views(spark, sf_dir)
+
+
+def _stored_scans(spark, work, fn) -> dict:
+    """{stored table: SQL executions that ran a job fn launched and whose
+    physical plan scans that table's files under work}."""
+    sq = spark._jsparkSession.sharedState().statusStore()
+    conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def recent(k):  # the store keeps the latest executions, by id
+        return list(conv.asJava(sq.executionsList(max(0, sq.executionsCount() - k), k)))
+
+    last = max((e.executionId() for e in recent(1)), default=-1)
+    _, jobs = job_ids_launched(spark, fn)
+    scans = {t: 0 for t in ("labels", "scenes")}
+    new = [e for e in recent(512) if e.executionId() > last]
+    assert len(new) < 512
+    for e in new:
+        if not set(jobs) & {int(j) for j in conv.asJava(e.jobs().keySet())}:
+            continue
+        plan = e.physicalPlanDescription()
+        for t in scans:
+            scans[t] += os.path.join(work, t) in plan
+    return scans
+
+
+def test_cold_pass_reads_each_stored_table_once(stored, spark, sf_dir, duck, monkeypatch):
+    """Planned and run cold over stored tables, the polygon overlap join and
+    the tile coverage read `labels` and `scenes` from their files once each
+    (one pull per table; every derived layer is pulled from memory); warm,
+    they read neither. Over no byte cap both take the view path and still
+    match their oracles."""
+    from terrakit_spark.registry import ORACLES
+    from tests.util import assert_match
+
+    queries = ("polygon_overlap_join", "tile_label_coverage")
+    run = lambda: [QUERIES[q](spark, sf_dir).count() for q in queries]  # noqa: E731
+    try:
+        assert _attach(spark, sf_dir, stored) == 0
+        monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
+        assert _stored_scans(spark, stored, run) == {"labels": 1, "scenes": 1}
+        assert _stored_scans(spark, stored, run) == {"labels": 0, "scenes": 0}
+        monkeypatch.setattr(sj, "INDEX_MAX_BYTES", 0)
+        check = lambda: [assert_match(QUERIES[q](spark, sf_dir), duck, ORACLES[q]) for q in queries]  # noqa: E731
+        scans = _stored_scans(spark, stored, check)
+        assert scans["labels"] >= 2 and scans["scenes"] >= 1, scans
     finally:
         _restore_views(spark, sf_dir)
 

@@ -1,0 +1,55 @@
+"""get_spark's driver-side defaults. PySpark reads the call-site capture
+flag once per driver process and caches it, so each case runs in its own
+interpreter."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_SCRIPT = """\
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from terrakit_spark.session import get_spark
+spark = get_spark(master="local[2]", shuffle_partitions=2, extra_conf={conf!r})
+if {plan!r}:
+    import terrakit_spark.operators
+    from terrakit_spark.registry import QUERIES
+    QUERIES["polygon_overlap_join"](spark, {sf_dir!r})
+df = spark.range(1).select((F.col("id") + 1) / F.lit(0))
+try:
+    df.collect()
+    msg = ""
+except Exception as e:
+    msg = str(e)
+print(json.dumps({{"ipython": "IPython" in sys.modules, "error": msg}}))
+"""
+# the script's file and the line that builds the failing column
+_SITE = "callsite.py:%d" % next(i for i, line in enumerate(_SCRIPT.splitlines(), 1) if "F.lit(0)" in line)
+
+
+def _run(tmp_path, sf_dir, conf: dict, plan: bool) -> dict:
+    script = tmp_path / "callsite.py"
+    script.write_text(_SCRIPT.format(repo=REPO, conf=conf, plan=plan, sf_dir=sf_dir))
+    out = subprocess.run(
+        [sys.executable, str(script)], capture_output=True, text=True, timeout=300, check=True
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def test_call_site_capture_is_off_by_default(tmp_path, sf_dir):
+    """Planning a spatial join never imports IPython (pyspark's call-site
+    capture would), and an error context carries no Python call site."""
+    got = _run(tmp_path, sf_dir, {}, plan=True)
+    assert not got["ipython"]
+    assert "DIVIDE_BY_ZERO" in got["error"] and _SITE not in got["error"]
+
+
+def test_spark_conf_turns_call_site_capture_back_on(tmp_path, sf_dir):
+    got = _run(tmp_path, sf_dir, {"spark.python.sql.dataFrameDebugging.enabled": "true"}, plan=False)
+    assert "DIVIDE_BY_ZERO" in got["error"] and _SITE in got["error"], got["error"]
