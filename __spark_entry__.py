@@ -42,7 +42,6 @@ _PRIORITY = [
     "coverage_class_balance",  # NEW this round (exercises varying labelclass)
     "quadkey_pyramid",  # NEW this round (cascade-vs-direct cross-plan proof)
     "zonal_stats",  # NEW this round (burn-mask pixel-value stats)
-    "spatial_join_pip_bcastverts",  # NEW this round (broadcast-geometry refine)
     "burn_histogram",  # labelclass now varies: burn overwrite order load-bearing
     "burn_histogram_nodata",
     "polygon_overlap_join",  # salting now probe-driven

@@ -72,8 +72,11 @@ def with_salt(df: DataFrame, cell: str, n_salts: int, key: Column, out: str = "s
     """Hotspot-cell salting: split one hot cell's rows across n_salts shuffle
     keys. The polygon side replicates per salt (explode), the point side
     hashes into one salt — the classic skew-salting pattern the north rule
-    asks for. Used when the polygon side is too big to broadcast."""
-    return df.withColumn(out, F.pmod(F.xxhash64(key), F.lit(n_salts)))
+    asks for. Used when the polygon side is too big to broadcast. The salt
+    is an int, the type replicate_salts gives the other side: a join key of
+    two types hashes apart, and the join would re-shuffle the replicated
+    side on the cast key after its pinned repartition."""
+    return df.withColumn(out, F.pmod(F.xxhash64(key), F.lit(n_salts)).cast("int"))
 
 
 def replicate_salts(df: DataFrame, n_salts: int, out: str = "salt") -> DataFrame:

@@ -36,16 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terrakit_spark.dialect import DUCK
-from terrakit_spark.functions.cells import cell_id, replicate_salts, with_cover_cells, with_salt
 from terrakit_spark.functions.geometry import geom_ref, rect_cover_area, refine_udf
 from terrakit_spark.operators.spatial_join import (
+    BBOX,
     _diamond_polys,
     _register_views,
-    bbox_salts,
+    cell_pair_join,
     geom_index,
     layer_bboxes,
-    probe_salts,
-    salted_partitions,
     stored_layer,
 )
 from terrakit_spark.registry import register_df, with_synth
@@ -53,6 +51,7 @@ from terrakit_spark.synth import RES_SQL
 
 TILE_CELL_DEG = 1.0  # chip windows are 2 deg; the 0.125-deg point grid would
 #                      explode each tile to 17x17 cover cells for no pruning
+TILE_BOX = ("txmin", "tymin", "txmax", "tymax")
 
 
 def tile_coverage_join(
@@ -67,60 +66,31 @@ def tile_coverage_join(
     vertices) -> pairs + exact intersection `area` (only area > 0 pairs
     survive; the output never carries `vertices`).
 
-    n_salts: hotspot-cell lever for dense regions — same combinatorial-
-    skew class as convex_overlap_join (a hot cell's tile x label product
-    is ONE join key, invisible to AQE's byte-keyed skew handling); the
-    salted partitioning must be pinned with explicit numPartitions for
-    the same reason (AQE coalescing merges salted keys back). None
-    (default) decides on the driver (bbox_salts) when the polygon layer
-    has a GeomIndex and the tiles' bboxes fit the same byte cap, else by
-    the probe_salts job. Each layer that fits is read from its pull, not
-    re-scanned.
+    n_salts: the hotspot-cell lever of cell_pair_join — same combinatorial-
+    skew class as convex_overlap_join (a hot cell's tile x label product is
+    ONE join key). None (default) decides on the driver (bbox_salts) when
+    the polygon layer has a GeomIndex and the tiles' bboxes fit the same
+    byte cap, else by the probe_salts job. Each layer that fits is read from
+    its pull, not re-scanned.
 
-    One candidate join feeds one Arrow refine. Its kernel splits on
-    containment: a polygon whose vertices all lie inside the tile takes its
-    own area (from the GeomIndex, or one shoelace pass on the column path),
-    so only boundary-crossing pairs pay clip_area_rect. verts_via is as in
+    One candidate join (cell_pair_join, tiles as its a side) feeds one
+    Arrow refine. Its kernel splits on containment: a polygon whose
+    vertices all lie inside the tile takes its own area (from the
+    GeomIndex, or one shoelace pass on the column path), so only
+    boundary-crossing pairs pay clip_area_rect. verts_via is as in
     cell_pip_join; both modes return the same rows."""
     geo, bcast, rel = geom_index(polys, verts_key, verts_via)
     tb = None
     if geo is not None:
         polys = rel
-        tb, _, tiles_rel = layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax"))
+        tb, _, tiles_rel = layer_bboxes(tiles, TILE_BOX)
         if tb is not None:
             tiles = tiles_rel
-    t = with_cover_cells(tiles, "txmin", "tymin", "txmax", "tymax", out="_cell", cell_deg=cell_deg)
-    g = with_cover_cells(polys, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
-    if n_salts is None:
-        n_salts = (
-            bbox_salts(tb, geo.bbox, cell_deg, tiles.sparkSession.sparkContext.defaultParallelism)
-            if tb is not None
-            else probe_salts(t, g)
-        )
-    if n_salts > 0:
-        t = with_salt(t, "_cell", n_salts, F.col("txmin") + F.col("tymax"), out="_salt")
-        g = replicate_salts(g, n_salts, out="_salt")
-        p = salted_partitions(t, n_salts)
-        t = t.repartition(p, "_cell", "_salt")
-        g = g.repartition(p, "_cell", "_salt")
-        cand = t.join(g, on=["_cell", "_salt"], how="inner").drop("_salt")
-    else:
-        cand = t.join(g, on="_cell", how="inner")
-    canonical = cell_id(
-        F.greatest(F.col("txmin"), F.col("xmin")),
-        F.greatest(F.col("tymin"), F.col("ymin")),
-        cell_deg,
-    )
-    cand = cand.filter(F.col("_cell") == canonical)
-    cand = cand.filter(
-        (F.col("txmin") <= F.col("xmax"))
-        & (F.col("xmin") <= F.col("txmax"))
-        & (F.col("tymin") <= F.col("ymax"))
-        & (F.col("ymin") <= F.col("tymax"))
-    )
-    rect = [F.col(c) for c in ("txmin", "tymin", "txmax", "tymax")]
+    bboxes = None if tb is None else (tb, geo.bbox)
+    cand = cell_pair_join(tiles, polys, TILE_BOX, BBOX, cell_deg, n_salts, bboxes)
+    rect = [F.col(c) for c in TILE_BOX]
     area = refine_udf(rect_cover_area, "double", [geom_ref(bcast, verts_key, "vertices")], *rect)
-    return cand.withColumn("area", area).filter(F.col("area") > 0.0).drop("_cell", "vertices")
+    return cand.withColumn("area", area).filter(F.col("area") > 0.0).drop("vertices")
 
 
 def _geo_tiles(spark: SparkSession, scene_pred: str) -> DataFrame:

@@ -6,9 +6,10 @@ with set_no_data), class id per polygon, later shapes overwriting earlier
 (rasterio default). Spark plan:
 
   scenes --cover cells--> x labels --cover cells--> : cell equi-join
-  (never a nested-loop theta join), distinct (scene,label) pairs, exact
-  bbox-overlap refine, groupBy(scene) -> applyInPandas burn (vectorized
-  ray-cast per polygon in geom_seq order) -> per-class pixel histograms.
+  (never a nested-loop theta join), canonical-cell dedup and exact
+  bbox-overlap filter (cell_pair_join), groupBy(scene) -> applyInPandas
+  burn (vectorized ray-cast per polygon in geom_seq order) -> per-class
+  pixel histograms.
 
 The histogram (not the full image) is the query output so the oracle stays
 tractable; the burn itself produces full label images in the chipping
@@ -23,10 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terrakit_spark.dialect import DUCK
-from terrakit_spark.functions.cells import with_cover_cells
 from terrakit_spark.functions.geometry import ray_cast
 from terrakit_spark.operators.chips import SMALL_PRED_SQL
-from terrakit_spark.operators.spatial_join import _register_views
+from terrakit_spark.operators.spatial_join import BBOX, _register_views, adaptive_cell_deg, cell_pair_join
 from terrakit_spark.registry import register_df, with_synth
 from terrakit_spark.synth import RES, RES_SQL
 
@@ -408,20 +408,18 @@ def _burn_image_painter(
 
 
 def scene_label_pairs(spark: SparkSession, scenes_sql_pred: str) -> DataFrame:
-    """Candidate (scene, label) pairs via cover-cell equi-join + exact
-    bbox-overlap refine — candidate pruning where the reference brute-forces
-    every label against every raster. Both sides explode to cover cells;
-    the join is a hash equi-join on cell (broadcast while the label side is
-    small, shuffled+AQE-skew-split at scale).
+    """Candidate (scene, label) pairs whose bboxes overlap, each exactly
+    once: cell_pair_join with the scenes as its a side — candidate pruning
+    where the reference brute-forces every label against every raster. The
+    join is a hash equi-join on cell (broadcast while the label side is
+    small, shuffled+AQE-skew-split at scale), and canonical-cell dedup
+    emits each pair once with no distinct shuffle.
 
     The cell resolution comes from the density-adaptive selector (labels
     as the density side, scenes as the extent floor — scene bboxes are the
     big geometry, so the floor keeps their cover-cell replication bounded);
     cell size is a pruning knob only, every resolution yields the same
-    refined pairs (burn_histogram's oracle is the invariance proof).
-    TERRAKIT_ADAPTIVE_CELLS=0 restores the fixed 1-degree grid."""
-    from terrakit_spark.operators.spatial_join import _adaptive_default, adaptive_cell_deg
-
+    refined pairs (burn_histogram's oracle is the invariance proof)."""
     scenes = spark.sql(
         f"SELECT scene_id, width, height, xmin, ymin, xmax, ymax FROM scenes WHERE {scenes_sql_pred}"
     )
@@ -432,30 +430,11 @@ def scene_label_pairs(spark: SparkSession, scenes_sql_pred: str) -> DataFrame:
         FROM labels
         """
     )
-    deg = (
-        adaptive_cell_deg(labels, "cx", "cy", scenes, target_per_cell=256.0)
-        if _adaptive_default()
-        else 1.0
-    )
-    s = with_cover_cells(scenes, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=deg)
-    l_cells = with_cover_cells(labels, "lxmin", "lymin", "lxmax", "lymax", out="_cell", cell_deg=deg)
-    # No forced broadcast hint: at sf0.1 the exploded label-cell side is a
-    # few MB and AQE converts the shuffle join to broadcast at runtime; at
-    # sf1+ it exceeds Spark's 8 GB broadcast hard cap (a forced hint
-    # ERRORS outright — measured in round 5) and the join must shuffle.
-    return (
-        s.join(l_cells, "_cell")
-        .filter(
-            (F.col("lxmin") <= F.col("xmax"))
-            & (F.col("lxmax") >= F.col("xmin"))
-            & (F.col("lymin") <= F.col("ymax"))
-            & (F.col("lymax") >= F.col("ymin"))
-        )
-        .dropDuplicates(["scene_id", "label_id"])
-        .select(
-            "scene_id", "width", "height", "xmin", "ymax",
-            "label_id", "labelclass", "geom_seq", "cx", "cy", "rx", "ry",
-        )
+    deg = adaptive_cell_deg(labels, "cx", "cy", scenes, target_per_cell=256.0)
+    pairs = cell_pair_join(scenes, labels, BBOX, ("lxmin", "lymin", "lxmax", "lymax"), deg)
+    return pairs.select(
+        "scene_id", "width", "height", "xmin", "ymax",
+        "label_id", "labelclass", "geom_seq", "cx", "cy", "rx", "ry",
     )
 
 

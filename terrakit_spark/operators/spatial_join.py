@@ -4,15 +4,14 @@ The reference's only true spatial join is the per-pixel rasterize
 (/root/reference/terrakit/download/download_data.py:326-396) — an O(pixels x
 polygons) Python-side loop. Here it becomes:
 
-  polygons --explode--> cover cells  (small side; broadcast, or salted
-                                      shuffle-hash when too big)
+  polygons --explode--> cover cells
   points   --keyed by--> containing cell
   equi-join on cell  ->  exact ray-cast PIP refine (Arrow pandas UDF)
 
-A point lies in exactly one cell and a polygon's cover cells are distinct,
-so the equi-join yields each candidate pair at most once — no dedup needed.
-Skew: hotspot cells go through AQE skew-join splitting; `salt` adds explicit
-salted repartitioning for the polygon side when it must shuffle."""
+`cell_pair_join` is that candidate join, shared by every spatial operator
+here and in coverage.py and rasterize.py: cover-cell explode, salt decision,
+pinned salted repartition, cell equi-join, canonical-cell dedup and the JVM
+bbox prefilter. Each operator adds its own refine."""
 
 from __future__ import annotations
 
@@ -29,20 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terrakit_spark.dialect import DUCK, SPARK, D
-from terrakit_spark.functions.cells import (
-    _ny,
-    cell_id,
-    replicate_salts,
-    with_cover_cells,
-    with_point_cell,
-    with_salt,
-)
+from terrakit_spark.functions.cells import _ny, cell_id, replicate_salts, with_cover_cells, with_point_cell, with_salt
 from terrakit_spark.functions.geometry import GeomIndex, geom_ref, pip_kernel, refine_udf, sat_kernel
 from terrakit_spark.registry import _BASE_TABLES, _active_base, ensure_base_views, read_parquet, register_df, with_synth
 from terrakit_spark.synth import ALL_TABLES
-
-
-FIXED_CELL_DEG = 0.125  # fallback grid when the adaptive selector is off
 
 
 def salted_partitions(df: DataFrame, n_salts: int) -> int:
@@ -54,8 +43,70 @@ def salted_partitions(df: DataFrame, n_salts: int) -> int:
     return n_salts * df.sparkSession.sparkContext.defaultParallelism
 
 
-def _adaptive_default() -> bool:
-    return os.environ.get("TERRAKIT_ADAPTIVE_CELLS", "1") != "0"
+def cell_pair_join(
+    a: DataFrame,
+    b: DataFrame,
+    a_box: tuple[str, str, str, str],
+    b_box: tuple[str, str, str, str],
+    cell_deg: float,
+    n_salts: int | None = 0,
+    bboxes: tuple[np.ndarray, np.ndarray] | None = None,
+) -> DataFrame:
+    """Every (a, b) row pair whose boxes overlap (closed intervals), exactly
+    once, with both sides' columns: the candidate join under every spatial
+    operator. Boxes are (xmin, ymin, xmax, ymax) column names, and the two
+    sides' column names must be distinct.
+
+    Both sides explode to the cells their boxes cover and equi-join on the
+    cell. A pair whose boxes overlap meets in every shared cover cell; only
+    the cell holding the intersection's lower-left corner (greatest(xmin),
+    greatest(ymin)) emits it. That corner lies inside both boxes, so the
+    pair survives exactly once, with no distinct shuffle. An a_box of
+    (x, y, x, y) makes the a side points: each point keys by the one cell
+    that contains it, so its pairs need no canonical-cell filter. The bbox
+    filter then drops the candidates a cell is too coarse to reject; it runs
+    in the JVM, below any refine, so they never pay an Arrow transfer.
+
+    n_salts > 0 splits each cell's a rows across n_salts shuffle keys (a
+    hash of a_box[0] + a_box[3]) and replicates the b rows per salt — the
+    hotspot-cell lever. A hot cell's candidate PRODUCT is one join key,
+    invisible to AQE's byte-keyed skew split, so the salted partitioning is
+    pinned with an explicit numPartitions repartition on the join keys: AQE
+    coalescing (measured at sf1) otherwise merges the salted keys straight
+    back onto one task, and the join reuses the co-partitioning. A pair
+    still meets once (its a row hashes to one salt). n_salts=None decides
+    the fan: bbox_salts on the driver from `bboxes` (the two sides' (n, 4)
+    bbox arrays) when given, else the probe_salts job.
+
+    No forced broadcast: an index-sized side is an in-memory relation whose
+    exact size lets the planner broadcast it up front; over the gate, AQE
+    converts the shuffle join to broadcast at runtime when a side IS small
+    (a forced hint errors outright once a side passes Spark's 8 GB
+    broadcast cap, as the exploded label side of the scene join does at
+    sf1+)."""
+    points = a_box[0] == a_box[2] and a_box[1] == a_box[3]
+    if points:
+        a_cells = with_point_cell(a, a_box[0], a_box[1], out="_cell", cell_deg=cell_deg)
+    else:
+        a_cells = with_cover_cells(a, *a_box, out="_cell", cell_deg=cell_deg)
+    b_cells = with_cover_cells(b, *b_box, out="_cell", cell_deg=cell_deg)
+    if n_salts is None:
+        par = a.sparkSession.sparkContext.defaultParallelism
+        n_salts = bbox_salts(*bboxes, cell_deg, par) if bboxes is not None else probe_salts(a_cells, b_cells)
+    on = ["_cell"]
+    if n_salts > 0:
+        on.append("_salt")
+        p = salted_partitions(a, n_salts)
+        a_cells = with_salt(a_cells, "_cell", n_salts, F.col(a_box[0]) + F.col(a_box[3]), out="_salt")
+        a_cells = a_cells.repartition(p, *on)
+        b_cells = replicate_salts(b_cells, n_salts, out="_salt").repartition(p, *on)
+    cand = a_cells.join(b_cells, on=on, how="inner")
+    ax0, ay0, ax1, ay1 = (F.col(c) for c in a_box)
+    bx0, by0, bx1, by1 = (F.col(c) for c in b_box)
+    if not points:
+        cand = cand.filter(F.col("_cell") == cell_id(F.greatest(ax0, bx0), F.greatest(ay0, by0), cell_deg))
+    cand = cand.filter((ax1 >= bx0) & (ax0 <= bx1) & (ay1 >= by0) & (ay0 <= by1))
+    return cand.drop(*on)
 
 
 def cell_pip_join(
@@ -75,14 +126,17 @@ def cell_pip_join(
     `vertices`, which the output never carries).
 
     cell_deg=None (default) picks the grid from MEASURED point density via
-    adaptive_cell_deg — the round-4 sf1 lesson promoted to the default
-    path (round-4 verdict item 3). A fixed grid that is right at sf0.1 is
-    4x too coarse at sf1's hotspot density; the selector tracks it the way
-    H3/S2 resolution selection does. Set TERRAKIT_ADAPTIVE_CELLS=0 (or
-    pass cell_deg explicitly) for the fixed FIXED_CELL_DEG grid. The grid
-    is a candidate-generation device: every resolution yields the same
-    refined output (the shared oracle across spatial_join_pip/_salted/
-    _adaptive is the invariance proof).
+    adaptive_cell_deg — the round-4 sf1 lesson: a fixed grid that is right
+    at sf0.1 is 4x too coarse at sf1's hotspot density; the selector tracks
+    it the way H3/S2 resolution selection does. An explicit cell_deg
+    overrides it. The grid is a candidate-generation device: every
+    resolution yields the same refined output (spatial_join_pip and
+    spatial_join_pip_salted share one oracle, and
+    test_adaptive_cell_join_exactness pins the adaptive grid to a fixed one).
+
+    The candidates come from cell_pair_join with the points as its a side;
+    candidate_filter, a predicate over both sides' columns, runs on them
+    before the refine (the sampled join's key hash).
 
     verts_via picks where the refine reads geometry: "broadcast" from the
     layer's GeomIndex (the Arrow transfer per candidate is key, px, py and
@@ -90,45 +144,19 @@ def cell_pip_join(
     vertices column per row, "auto" (default) the index when geom_index
     admits the layer."""
     if cell_deg is None:
-        cell_deg = (
-            adaptive_cell_deg(points, px, py, polys) if _adaptive_default() else FIXED_CELL_DEG
-        )
+        cell_deg = adaptive_cell_deg(points, px, py, polys)
     geo, bcast, rel = geom_index(polys, verts_key, verts_via, vertices)
     if geo is not None:
         polys = rel
-    p = with_point_cell(points, px, py, out="_cell", cell_deg=cell_deg)
-    g = with_cover_cells(polys, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
-    if n_salts > 0:
-        p = with_salt(p, "_cell", n_salts, F.col(px), out="_salt")
-        g = replicate_salts(g, n_salts, out="_salt")
-        on = ["_cell", "_salt"]
-    else:
-        on = ["_cell"]
-    # No forced broadcast: an index-sized polygon side is an in-memory
-    # relation whose exact size lets the planner broadcast it up front;
-    # over the gate, AQE converts the shuffle join to broadcast at runtime
-    # when the exploded polygon side IS small.
-    cand = p.join(g, on=on, how="inner")
+    cand = cell_pair_join(points, polys, (px, py, px, py), BBOX, cell_deg, n_salts)
     if candidate_filter is not None:
-        # join-key-only predicate applied BEFORE the refine: the sampled
-        # join skips the ray-cast (and the output) for unsampled pairs
         cand = cand.filter(candidate_filter)
-    # JVM-side point-in-bbox prefilter BEFORE the Arrow refine: a cell is
-    # coarser than a polygon's bbox, so cell-candidates include points the
-    # bbox alone rejects — filtering them in whole-stage codegen means the
-    # Arrow transfer never pays for them.
-    cand = cand.filter(
-        (F.col(px) >= F.col("xmin"))
-        & (F.col(px) <= F.col("xmax"))
-        & (F.col(py) >= F.col("ymin"))
-        & (F.col(py) <= F.col("ymax"))
-    )
     # exact refine: Arrow-batched ray-cast UDF. (A pure-SQL higher-order
     # ray-cast was measured 4x SLOWER — Spark HOFs don't codegen; the Arrow
     # round-trip beats interpreted per-edge lambdas.)
     geom = geom_ref(bcast, verts_key, vertices)
     hit = cand.filter(refine_udf(pip_kernel, "boolean", [geom], F.col(px), F.col(py)))
-    return hit.drop("_cell", "_salt", vertices)
+    return hit.drop(vertices)
 
 
 def _diamond_polys(spark: SparkSession) -> DataFrame:
@@ -631,38 +659,6 @@ def stored_layer(spark: SparkSession, name: str) -> DataFrame:
     return layer if rel is None else rel
 
 
-def spatial_join_pip_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME join with the cell size chosen by adaptive_cell_deg —
-    pinned to the IDENTICAL oracle as spatial_join_pip, because the cell
-    grid is a candidate-generation device and must be invisible in the
-    output at ANY resolution (a wrong cover-cell enumeration drops or
-    duplicates pairs — exactly what the shared value-hash would catch)."""
-    _register_views(spark, sf_dir)
-    points = spark.table("media").select("media_ref", "mx", "my")
-    polys = _diamond_polys(spark).select("label_id", "xmin", "ymin", "xmax", "ymax", "vertices")
-    deg = adaptive_cell_deg(points, "mx", "my", polys)
-    return cell_pip_join(points, polys, cell_deg=deg).select("media_ref", "label_id")
-
-
-register_df("spatial_join_pip_adaptive", spatial_join_pip_adaptive, oracle=_ORACLE)
-
-
-def spatial_join_pip_bcastverts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME join with the polygon geometry broadcast into the refine
-    (verts_via="broadcast"): the Arrow transfer per candidate is (key, px,
-    py) — three scalars — instead of the nested vertex array, which is the
-    measured dominant cost of the refine at sf1. Pinned to the IDENTICAL
-    oracle as spatial_join_pip: geometry routing is a physical device and
-    must be invisible in the output."""
-    _register_views(spark, sf_dir)
-    points = spark.table("media").select("media_ref", "mx", "my")
-    polys = _diamond_polys(spark).select("label_id", "xmin", "ymin", "xmax", "ymax", "vertices")
-    return cell_pip_join(points, polys, verts_via="broadcast").select("media_ref", "label_id")
-
-
-register_df("spatial_join_pip_bcastverts", spatial_join_pip_bcastverts, oracle=_ORACLE)
-
-
 SAMPLE_MOD = 7  # keep ~1/7 of join-output pairs
 
 
@@ -738,39 +734,25 @@ def convex_overlap_join(
     with (xmin, ymin, xmax, ymax, vertices) columns; the b side's columns
     come back suffixed `_b`.
 
-    Plan shape mirrors cell_pip_join: both sides explode to cover cells,
-    cell equi-join generates candidates, then two JVM-side filters run
-    before the Arrow SAT refine —
+    The candidates come from cell_pair_join (both sides explode to cover
+    cells; canonical-cell dedup and the bbox-overlap prefilter run in the
+    JVM), then one Arrow SAT refine keeps pairs with separation depth > eps:
+    strictly interior-overlapping pairs, with a documented tolerance band
+    instead of a float-equality knife edge at tangency (the synthetic layer
+    genuinely contains edge-tangent diamond pairs). The bbox prefilter is
+    non-strict; the refine decides boundary semantics.
 
-    1. canonical-cell dedup: a pair whose bboxes overlap meets in every
-       shared cover cell; only the cell containing the intersection bbox's
-       lower-left corner (greatest(xmin), greatest(ymin)) emits it. That
-       corner lies inside both bboxes, so the pair survives exactly once —
-       no distinct shuffle needed.
-    2. bbox-overlap prefilter (non-strict; the SAT refine decides
-       boundary semantics) so bbox-disjoint candidates never pay the
-       Arrow transfer of two vertex arrays.
-
-    The refine keeps pairs with SAT separation depth > eps: strictly
-    interior-overlapping pairs, with a documented tolerance band instead
-    of a float-equality knife edge at tangency (the synthetic layer
-    genuinely contains edge-tangent diamond pairs).
-
-    n_salts > 0 splits each cell's a-side across n_salts shuffle keys and
-    replicates the b-side per salt — the hotspot-cell lever. A dense
+    n_salts > 0 salts the candidate join — the hotspot-cell lever. A dense
     region at diameter-scale cells is a SINGLE join key whose candidate
     product lands on one task (measured at sf1: 1 of 32 cores busy for
     >20 min while the refine is minutes of parallel work); unlike the
     point join, nearly every hotspot candidate is a genuine match, so
-    finer cells cannot shrink the work — salting spreads it. A pair still
-    meets exactly once (its a-row hashes to one salt), so the canonical-
-    cell dedup is untouched and the output provably salt-invariant (same
-    oracle as the unsalted query).
-
-    n_salts=None (default) decides from the probe_salts density probe —
-    the measured hottest-cell candidate product, same pattern as
-    adaptive_cell_deg — decided on the driver by bbox_salts when both
-    layers have a GeomIndex. Pass 0 to force unsalted, >0 to force a fan.
+    finer cells cannot shrink the work — salting spreads it, and the
+    output is provably salt-invariant (same oracle as the unsalted query).
+    n_salts=None (default) decides from the measured hottest-cell candidate
+    product: on the driver by bbox_salts when both layers have a GeomIndex,
+    else by the probe_salts job. Pass 0 to force unsalted, >0 to force a
+    fan.
 
     verts_via applies per side as in cell_pip_join: with both indexes the
     Arrow transfer per candidate pair is two int64 keys. The output never
@@ -782,46 +764,12 @@ def convex_overlap_join(
     if geo_b is not None:
         polys_b = rel_b
     b = polys_b.select([F.col(c).alias(f"{c}_b") for c in polys_b.columns])
-    a_cells = with_cover_cells(polys_a, "xmin", "ymin", "xmax", "ymax", out="_cell", cell_deg=cell_deg)
-    b_cells = with_cover_cells(b, "xmin_b", "ymin_b", "xmax_b", "ymax_b", out="_cell", cell_deg=cell_deg)
-    if n_salts is None:
-        n_salts = (
-            bbox_salts(geo_a.bbox, geo_b.bbox, cell_deg, polys_a.sparkSession.sparkContext.defaultParallelism)
-            if geo_a is not None and geo_b is not None
-            else probe_salts(a_cells, b_cells)
-        )
-    if n_salts > 0:
-        a_cells = with_salt(a_cells, "_cell", n_salts, F.col("xmin") + F.col("ymax"), out="_salt")
-        b_cells = replicate_salts(b_cells, n_salts, out="_salt")
-        # PIN the salted partitioning: AQE's coalescing merges post-shuffle
-        # partitions by INPUT bytes, and a combinatorial join (small x small
-        # -> huge product) is invisible to it — measured at sf1, it merged
-        # the 16 salted hot keys straight back onto one task. An explicit
-        # numPartitions repartition on the join keys is exempt from AQE
-        # coalescing, and the join reuses the co-partitioning (no further
-        # exchange), so each (cell, salt) key keeps its own task.
-        p = salted_partitions(polys_a, n_salts)
-        a_cells = a_cells.repartition(p, "_cell", "_salt")
-        b_cells = b_cells.repartition(p, "_cell", "_salt")
-        cand = a_cells.join(b_cells, on=["_cell", "_salt"], how="inner").drop("_salt")
-    else:
-        cand = a_cells.join(b_cells, on="_cell", how="inner")
-
-    canonical = cell_id(
-        F.greatest(F.col("xmin"), F.col("xmin_b")),
-        F.greatest(F.col("ymin"), F.col("ymin_b")),
-        cell_deg,
-    )
-    cand = cand.filter(F.col("_cell") == canonical)
-    cand = cand.filter(
-        (F.col("xmin") <= F.col("xmax_b"))
-        & (F.col("xmin_b") <= F.col("xmax"))
-        & (F.col("ymin") <= F.col("ymax_b"))
-        & (F.col("ymin_b") <= F.col("ymax"))
-    )
+    bboxes = (geo_a.bbox, geo_b.bbox) if geo_a is not None and geo_b is not None else None
+    b_box = tuple(f"{c}_b" for c in BBOX)
+    cand = cell_pair_join(polys_a, b, BBOX, b_box, cell_deg, n_salts, bboxes)
     geoms = [geom_ref(bcast_a, verts_key, "vertices"), geom_ref(bcast_b, f"{verts_key}_b", "vertices_b")]
     depth = refine_udf(sat_kernel, "double", geoms)
-    return cand.filter(depth > F.lit(eps)).drop("_cell", "vertices", "vertices_b")
+    return cand.filter(depth > F.lit(eps)).drop("vertices", "vertices_b")
 
 
 def polygon_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -83,9 +83,10 @@ def test_schema_and_rows_do_not_depend_on_verts_via(layers, spark):
         col, bc = join("column"), join("broadcast")
         assert col.schema == bc.schema, name
         assert not any(c.startswith("vertices") for c in col.columns), name
-    # the coverage kernel's contained/crossing split runs in both modes
-    got = _rows(cases["coverage"]("column"))
-    assert got == _rows(cases["coverage"]("broadcast")) and got
+        # every refine returns the same rows from either geometry source (for
+        # coverage, the kernel's contained/crossing split runs in both modes)
+        got = _rows(col)
+        assert got == _rows(bc) and got, name
 
 
 def test_one_arrow_refine_per_plan(layers, spark, sf_dir):
@@ -223,7 +224,6 @@ def test_byte_gate_low_takes_column_and_probe_paths(synth, spark, sf_dir, duck, 
 
     monkeypatch.setattr(sj, "INDEX_MAX_BYTES", 0)
     monkeypatch.setattr(sj, "probe_salts", counted)
-    monkeypatch.setattr(cv, "probe_salts", counted)
     for q in ("polygon_overlap_join", "tile_label_coverage"):
         df = QUERIES[q](spark, sf_dir)
         plan = executed_plan(df)

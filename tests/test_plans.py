@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 from collections import OrderedDict
 
@@ -437,3 +438,6 @@ def test_zonal_stats_shares_burn_join_shape(synth, spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "FlatMapGroupsInPandas" in plan  # the per-scene burn+stats kernel
+    # scene_label_pairs emits each pair once by canonical cell: no distinct
+    # aggregate (and its shuffle) over the (scene, label) pairs
+    assert not re.search(r"HashAggregate\(keys=\[scene_id#\d+L?, label_id#", plan), plan

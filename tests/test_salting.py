@@ -63,11 +63,27 @@ def test_salted_fan_tracks_cluster_parallelism(synth, spark, sf_dir):
 
     _register_views(spark, sf_dir)
     d = _diamond_polys(spark).select("label_id", "xmin", "ymin", "xmax", "ymax", "vertices")
-    j = convex_overlap_join(d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1"), n_salts=4)
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    fans = re.findall(r"hashpartitioning\([^)]*_salt[^)]*,\s*(\d+)\)", plan)
-    assert fans, "salted exchange missing from the plan"
-    assert all(int(x) == 4 * dp for x in fans), (fans, dp)
+    points = spark.table("media").select("media_ref", "mx", "my")
+    joins = {
+        "overlap": lambda: convex_overlap_join(d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1"), n_salts=4),
+        "point": lambda: cell_pip_join(points, d, n_salts=4),
+    }
+    for name, join in joins.items():
+        plan = join()._jdf.queryExecution().executedPlan().toString()
+        fans = re.findall(r"hashpartitioning\([^)]*_salt[^)]*,\s*(\d+)\)", plan)
+        assert fans, f"salted exchange missing from the {name} plan"
+        assert all(int(x) == 4 * dp for x in fans), (name, fans, dp)
+    # a shuffled join reuses the pinned partitioning of both sides: no
+    # further exchange on the salt (e.g. on a cast of one side's salt key)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for name, join in joins.items():
+            plan = join()._jdf.queryExecution().executedPlan().toString()
+            salted = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln and "_salt" in ln]
+            assert len(salted) == 2 and all("REPARTITION_BY_NUM" in ln for ln in salted), (name, salted)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def test_probe_salts_decision(synth, spark, sf_dir):
