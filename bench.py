@@ -32,7 +32,7 @@ def _build_session(n_cpus: str):
     # materialize the synthetic input tables once (outside all timings):
     # the bench measures the engine against stored tables, as a real
     # deployment reads Iceberg — not the synthetic derivation itself
-    from terrakit_spark.operators.spatial_join import materialize_synth
+    from terrakit_spark.catalog import materialize_synth
 
     work = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".work", f"bench_synth_{os.path.basename(SF_DIR)}")
     materialize_synth(spark, SF_DIR, work)

@@ -37,7 +37,7 @@ def extract_hot_scene() -> None:
     input for ONE scene is a plain predicate scan). The hottest sf1 scene
     (30088380, ~100k overlapping polys) was identified by the round-4
     density profile; HOT_SCENE overrides."""
-    from terrakit_spark.operators.spatial_join import _register_views, materialize_synth
+    from terrakit_spark.catalog import _register_views, materialize_synth
     from terrakit_spark.session import get_spark
 
     spark = get_spark(master="local[32]", app_name="hot_scene_extract", shuffle_partitions=32)

@@ -24,7 +24,7 @@ REPS = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "1"))
 
 
 def run_level(cores: int) -> float:
-    from terrakit_spark.operators.spatial_join import materialize_synth
+    from terrakit_spark.catalog import materialize_synth
     from terrakit_spark.pipeline import chip_pipeline
     from terrakit_spark.session import get_spark
 

@@ -26,7 +26,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from terrakit_spark.operators.spatial_join import _register_views, stored_layer
+from terrakit_spark.catalog import _register_views
+from terrakit_spark.operators.spatial_join import stored_layer
 from terrakit_spark.plans.snapshots import SnapshotTable
 from terrakit_spark.session import get_spark
 from terrakit_spark.validate import validate_date_range

@@ -30,8 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import DUCK, SPARK
-from terrakit_spark.operators.spatial_join import _register_views
 from terrakit_spark.registry import register_df, with_synth
 from terrakit_spark.sources.raster import scene_pixels, with_pixels
 from terrakit_spark.synth import CHIP, NODATA_EVERY, PIXEL_BASE, PIXEL_MOD

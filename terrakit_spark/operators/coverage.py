@@ -35,12 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import DUCK
 from terrakit_spark.functions.geometry import geom_ref, rect_cover_area, refine_udf
 from terrakit_spark.operators.spatial_join import (
     BBOX,
     _diamond_polys,
-    _register_views,
     cell_pair_join,
     geom_index,
     layer_bboxes,

@@ -9,8 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import DUCK
-from terrakit_spark.operators.spatial_join import _diamond_polys, _register_views
+from terrakit_spark.operators.spatial_join import _diamond_polys
 from terrakit_spark.operators.spatial_join import _ORACLE as _PAIRS_ORACLE  # noqa: F401
 from terrakit_spark.operators.spatial_join import cell_pip_join
 from terrakit_spark.registry import register_df, with_synth

@@ -15,6 +15,7 @@
 
 from __future__ import annotations
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import SPARK, D
 from terrakit_spark.registry import register_sql
 
@@ -172,7 +173,6 @@ def _quadkey_query(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from terrakit_spark.functions.cells import QK_LEVEL, quadkey, quadkey_parent, quadkey_str
-    from terrakit_spark.operators.spatial_join import _register_views
 
     _register_views(spark, sf_dir)
     pts = spark.table("media").filter("doc_num % 20 = 0").select("media_ref", "mx", "my")

@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import DUCK
-from terrakit_spark.operators.spatial_join import _register_views
 from terrakit_spark.registry import register_df, with_synth
 
 K = 5

@@ -14,6 +14,7 @@
 
 from __future__ import annotations
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import D
 from terrakit_spark.registry import register_sql
 
@@ -104,7 +105,6 @@ def _wkb_roundtrip(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from terrakit_spark.functions.wkb import wkb_decode_polygon, wkb_encode_polygon
-    from terrakit_spark.operators.spatial_join import _register_views
 
     _register_views(spark, sf_dir)
     polys = spark.sql(
@@ -192,8 +192,6 @@ def _shp_roundtrip(spark, sf_dir):
     headers, ring closure/orientation, dbf cell padding) breaks equality.
     Distributed: mapInPandas, one shapefile per Arrow batch, no driver
     involvement."""
-    from terrakit_spark.operators.spatial_join import _register_views
-
     _register_views(spark, sf_dir)
     src = spark.sql(
         "SELECT label_id, datetime, labelclass, filename, "

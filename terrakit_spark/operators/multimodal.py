@@ -23,8 +23,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import DUCK, SPARK, D
-from terrakit_spark.operators.spatial_join import _register_views
 from terrakit_spark.registry import register_df, register_sql, with_synth
 
 PATCH = 16

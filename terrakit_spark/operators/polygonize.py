@@ -19,9 +19,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.operators.chips import SMALL_PRED_SQL
 from terrakit_spark.operators.rasterize import burn_image
-from terrakit_spark.operators.spatial_join import _register_views
 
 
 def connected_components(img: np.ndarray) -> tuple[np.ndarray, int]:

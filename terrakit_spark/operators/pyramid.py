@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import DUCK, D
 from terrakit_spark.functions.cells import QK_LEVEL, quadkey, quadkey_parent
-from terrakit_spark.operators.spatial_join import _register_views
 from terrakit_spark.registry import register_df, with_synth
 
 PYRAMID_LEVELS = (QK_LEVEL, 10, 8, 6, 4)  # finest first; parents by shift

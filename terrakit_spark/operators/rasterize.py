@@ -23,10 +23,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import DUCK
 from terrakit_spark.functions.geometry import ray_cast
 from terrakit_spark.operators.chips import SMALL_PRED_SQL
-from terrakit_spark.operators.spatial_join import BBOX, _register_views, adaptive_cell_deg, cell_pair_join
+from terrakit_spark.operators.spatial_join import BBOX, adaptive_cell_deg, cell_pair_join
 from terrakit_spark.registry import register_df, with_synth
 from terrakit_spark.synth import RES, RES_SQL
 
@@ -34,16 +35,6 @@ BACKGROUND = 0  # /root/reference/terrakit/download/download_data.py:369
 
 
 BURN_EDGE_MIN_POLYS = 24  # below this the painter's fixed numpy cost wins
-
-
-def _edge_kernel_enabled() -> bool:
-    """A/B gate for scaling studies: TERRAKIT_EDGE_KERNEL=0 forces the
-    per-polygon painter (core-bound) so the two-level scaling pair can be
-    measured on both sides of the compute->bandwidth boundary. Read per
-    call (executors see the env via spark.executorEnv / inherited fork)."""
-    import os
-
-    return os.environ.get("TERRAKIT_EDGE_KERNEL", "1") != "0"
 
 
 def burn_image(
@@ -67,7 +58,7 @@ def burn_image(
     sf1 profile's named upgrade (hot sf1 scenes carry ~10^5 overlapping
     polygons => ~14 s/scene in the painter's per-poly loop; the edge
     kernel amortizes everything into whole-array numpy passes)."""
-    if len(polys) >= BURN_EDGE_MIN_POLYS and _edge_kernel_enabled():
+    if len(polys) >= BURN_EDGE_MIN_POLYS:
         out = _burn_image_edges(width, height, xmin, ymax, polys, classes, res, fill)
         if out is not None:
             return out

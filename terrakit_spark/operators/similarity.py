@@ -20,8 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import ensure_base_views
 from terrakit_spark.dialect import DUCK, SPARK, D
-from terrakit_spark.registry import ensure_base_views, register_df, register_sql
+from terrakit_spark.registry import register_df, register_sql
 
 TOPK = 10
 QUERY_PRED = "(vec_id % 50) = 0"

@@ -15,11 +15,7 @@ bbox prefilter. Each operator adds its own refine."""
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import threading
-from collections import OrderedDict
 from typing import NamedTuple
 
 import numpy as np
@@ -27,11 +23,12 @@ from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# _MATERIALIZED and materialize_synth are re-exported: perfbench/ reads them here
+from terrakit_spark.catalog import _MATERIALIZED, _register_views, materialize_synth, memoized  # noqa: F401
 from terrakit_spark.dialect import DUCK, SPARK, D
 from terrakit_spark.functions.cells import _ny, cell_id, replicate_salts, with_cover_cells, with_point_cell, with_salt
 from terrakit_spark.functions.geometry import GeomIndex, geom_ref, pip_kernel, refine_udf, sat_kernel
-from terrakit_spark.registry import _BASE_TABLES, _active_base, ensure_base_views, read_parquet, register_df, with_synth
-from terrakit_spark.synth import ALL_TABLES
+from terrakit_spark.registry import register_df, with_synth
 
 
 def salted_partitions(df: DataFrame, n_salts: int) -> int:
@@ -177,117 +174,6 @@ def _diamond_polys(spark: SparkSession) -> DataFrame:
     )
 
 
-_MATERIALIZED: dict[tuple[str, str], str] = {}  # (applicationId, sf_dir) -> work_dir
-_active_synth: dict[str, str] = {}  # applicationId -> sf_dir the synth views serve
-
-# Partition layout for the stored tables: (date column, lon column).
-# Each partitioned table gets derived p_date + p_cx (30-degree lon band)
-# partition keys alongside the unchanged data columns, so date-range and
-# spatial-band predicates prune at the FILE level (Iceberg-style partition
-# pruning on plain parquet; SURVEY §4). ~60 dates x 12 bands keeps the
-# partition count bounded at any scale factor.
-_PARTITION_SPEC: dict[str, tuple[str, str]] = {
-    "scenes": ("scene_date_str", "xmin"),
-    "labels": ("datetime", "cx"),
-    "media": ("media_date_str", "mx"),
-}
-
-
-# materialize_synth's record of the views it registered: view name ->
-# the schema Spark inferred on read-back (StructType.jsonValue()).
-_CATALOG = "_catalog.json"
-
-
-def _read_catalog(work_dir: str | None) -> dict:
-    """The work dir's catalog, or {} when there is none."""
-    if work_dir is None:
-        return {}
-    try:
-        with open(os.path.join(work_dir, _CATALOG)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return {}
-
-
-def _register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Point the base AND derived-synth views at sf_dir. Memoized on the
-    ACTIVE sf_dir per session (not ever-registered): a session that
-    materialized one scale factor and is then queried at another must
-    re-point, not silently serve the old tables (measured: an sf1 query
-    returning sf0.1 rows). Switching back re-points at the already
-    materialized parquet — no rewrite.
-
-    An application that materialized sf_dir (`_MATERIALIZED`) attaches the
-    stored tables from the work dir's catalog: the base views and each
-    stored table are read with their recorded schemas, the stored tables
-    with their files listed on the driver for that read only, so attaching
-    launches no Spark job. A view missing from the catalog, or a work dir
-    without one (written before the catalog existed), is inferred."""
-    app = spark.sparkContext.applicationId
-    if _active_base.get(app) == sf_dir and _active_synth.get(app) == sf_dir:
-        return
-    work = _MATERIALIZED.get((app, sf_dir))
-    catalog = _read_catalog(work)
-    # Base views FIRST, before the synth early-return: ensure_base_views is
-    # called directly by other operator families (dedup/similarity/registry),
-    # so the base views can have been re-pointed at another sf_dir since this
-    # memo last ran — returning early on _active_synth alone would serve
-    # synth views over mixed-scale base tables.
-    ensure_base_views(spark, sf_dir, catalog)
-    if _active_synth.get(app) == sf_dir:
-        return
-    if work is not None:
-        for name in ALL_TABLES:
-            read_parquet(spark, os.path.join(work, name), catalog.get(name)).createOrReplaceTempView(name)
-    else:
-        for name, fn in ALL_TABLES.items():
-            spark.sql(fn(SPARK)).createOrReplaceTempView(name)
-    _active_synth[app] = sf_dir
-
-
-def materialize_synth(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
-    """Write the derived synthetic tables to parquet once and re-point the
-    views at them — the bench measures the engine against stored tables
-    (as a real deployment reads Iceberg), not the on-the-fly derivation.
-    Tables in _PARTITION_SPEC are written partitionBy(p_date, p_cx).
-
-    Last, it writes work_dir/_catalog.json, which maps every view it
-    registered (the stored tables and the base tables) to the schema Spark
-    inferred on read-back; _register_views attaches from it without a job.
-    The catalog holds names and schemas only, no paths, so a renamed work
-    dir stays valid. It is deleted first and written last (tmp +
-    os.replace): a materialize that fails midway leaves no catalog, and a
-    catalog never describes files rewritten after it."""
-    catalog = os.path.join(work_dir, _CATALOG)
-    if os.path.exists(catalog):
-        os.remove(catalog)
-    ensure_base_views(spark, sf_dir)
-    schemas = {t: spark.table(t).schema.jsonValue() for t in _BASE_TABLES}
-    for name, fn in ALL_TABLES.items():
-        path = os.path.join(work_dir, name)
-        df = spark.sql(fn(SPARK))
-        if name in _PARTITION_SPEC:
-            date_col, lon_col = _PARTITION_SPEC[name]
-            df = df.withColumn("p_date", F.col(date_col)).withColumn(
-                "p_cx", F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(30.0)).cast("int")
-            )
-            df.write.mode("overwrite").partitionBy("p_date", "p_cx").parquet(path)
-        else:
-            df.write.mode("overwrite").parquet(path)
-        stored = spark.read.parquet(path)
-        stored.createOrReplaceTempView(name)
-        schemas[name] = stored.schema.jsonValue()
-    # the tables were rewritten in place (same paths, same plans): layers
-    # pulled before now would serve the old rows
-    release_layers(spark)
-    app = spark.sparkContext.applicationId
-    _MATERIALIZED[(app, sf_dir)] = work_dir
-    _active_synth[app] = sf_dir
-    with open(catalog + ".tmp", "w") as fh:
-        json.dump(schemas, fh)
-    os.replace(catalog + ".tmp", catalog)
-
-
 def spatial_join_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media-span points joined to label polygons: exact (media_ref,
     label_id) pair set — the join-output-rows parity gate."""
@@ -351,9 +237,6 @@ def spatial_join_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 register_df("spatial_join_pip_salted", spatial_join_pip_salted, oracle=_ORACLE)
 
 
-_DEG_CACHE: dict = {}
-
-
 def adaptive_cell_deg(
     points: DataFrame,
     px: str,
@@ -396,46 +279,29 @@ def adaptive_cell_deg(
     same tables — a bench repeat, a pipeline stage re-run — pay the scan
     once. At 100 TB the probe is one map-combinable aggregate per distinct
     input, amortized across every join that reuses it."""
-    try:
-        key = (
-            points.sparkSession.sparkContext.applicationId,
-            points._jdf.queryExecution().analyzed().semanticHash(),
-            polys._jdf.queryExecution().analyzed().semanticHash(),
-            px, py, target_per_cell, min_deg, max_deg,
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _DEG_CACHE:
-        return _DEG_CACHE[key]
 
-    probe = 1.0
-    occ_df = (
-        points.groupBy(
-            F.floor(F.col(px) / probe).alias("_ox"), F.floor(F.col(py) / probe).alias("_oy")
+    def measure() -> float:
+        probe = 1.0
+        occ_df = (
+            points.groupBy(
+                F.floor(F.col(px) / probe).alias("_ox"), F.floor(F.col(py) / probe).alias("_oy")
+            )
+            .agg(F.count("*").alias("n"))
+            .agg(F.max("n").alias("hot"))
         )
-        .agg(F.count("*").alias("n"))
-        .agg(F.max("n").alias("hot"))
-    )
-    ext_df = polys.agg(F.avg((F.col("xmax") - F.col("xmin")) / 2.0).alias("r"))
-    row = occ_df.crossJoin(ext_df).collect()[0]
-    if not row.hot:
-        deg = max_deg
-    else:
+        ext_df = polys.agg(F.avg((F.col("xmax") - F.col("xmin")) / 2.0).alias("r"))
+        row = occ_df.crossJoin(ext_df).collect()[0]
+        if not row.hot:
+            return max_deg
         density = row.hot / (probe * probe)
         raw = math.sqrt(target_per_cell / density)
         r_floor = (row.r or 0.0) / 4.0
         if r_floor > 0:
             r_floor = 2.0 ** math.ceil(math.log2(r_floor))
         snapped = 2.0 ** math.floor(math.log2(max(raw, 1e-9)))
-        deg = min(max(snapped, r_floor, min_deg), max_deg)
-    if key is not None:
-        if len(_DEG_CACHE) > 256:
-            _DEG_CACHE.clear()
-        _DEG_CACHE[key] = deg
-    return deg
+        return min(max(snapped, r_floor, min_deg), max_deg)
 
-
-_SALT_CACHE: dict = {}
+    return memoized((points, polys), ("cell_deg", px, py, target_per_cell, min_deg, max_deg), measure)
 
 
 def probe_salts(a_cells: DataFrame, b_cells: DataFrame, max_salts: int = 64) -> int:
@@ -459,32 +325,19 @@ def probe_salts(a_cells: DataFrame, b_cells: DataFrame, max_salts: int = 64) -> 
     the same layers — a bench repeat — pay the probe once. Layers that
     geom_index admits skip this job: bbox_salts makes the same decision
     from the pulled bboxes on the driver."""
-    try:
-        key = (
-            a_cells.sparkSession.sparkContext.applicationId,
-            a_cells._jdf.queryExecution().analyzed().semanticHash(),
-            b_cells._jdf.queryExecution().analyzed().semanticHash(),
-            max_salts,
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _SALT_CACHE:
-        return _SALT_CACHE[key]
 
-    a_cnt = a_cells.groupBy("_cell").agg(F.count("*").alias("_na"))
-    b_cnt = b_cells.groupBy("_cell").agg(F.count("*").alias("_nb"))
-    row = (
-        a_cnt.join(b_cnt, on="_cell", how="inner")
-        .select((F.col("_na") * F.col("_nb")).alias("_p"))
-        .agg(F.max("_p").alias("hot"), F.sum("_p").alias("total"))
-        .collect()[0]
-    )
-    n = _salt_fan(row.hot, row.total, a_cells.sparkSession.sparkContext.defaultParallelism, max_salts)
-    if key is not None:
-        if len(_SALT_CACHE) > 256:
-            _SALT_CACHE.clear()
-        _SALT_CACHE[key] = n
-    return n
+    def measure() -> int:
+        a_cnt = a_cells.groupBy("_cell").agg(F.count("*").alias("_na"))
+        b_cnt = b_cells.groupBy("_cell").agg(F.count("*").alias("_nb"))
+        row = (
+            a_cnt.join(b_cnt, on="_cell", how="inner")
+            .select((F.col("_na") * F.col("_nb")).alias("_p"))
+            .agg(F.max("_p").alias("hot"), F.sum("_p").alias("total"))
+            .collect()[0]
+        )
+        return _salt_fan(row.hot, row.total, a_cells.sparkSession.sparkContext.defaultParallelism, max_salts)
+
+    return memoized((a_cells, b_cells), ("salts", max_salts), measure)
 
 
 def _salt_fan(hot: int, total: int, par: int, max_salts: int) -> int:
@@ -531,9 +384,6 @@ def bbox_salts(bbox_a: np.ndarray, bbox_b: np.ndarray, cell_deg: float, par: int
 # stored table the same way (rows only, no value, no broadcast).
 INDEX_MAX_BYTES = 128 << 20  # padded vertex cube (rows x max vertices x 16)
 BBOX = ("xmin", "ymin", "xmax", "ymax")
-_LAYERS: OrderedDict = OrderedDict()  # memo -> Pulled
-_LAYERS_MAX = 16
-_LAYERS_LOCK = threading.Lock()
 
 
 class Pulled(NamedTuple):
@@ -561,52 +411,23 @@ def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float, keep: list
     the whole layer and its `keep` columns also become `rel`, a DataFrame
     over the pulled Arrow table with layer.select(*keep)'s schema (column
     order and types); without it, the pull reads `cols` only. A built value
-    is broadcast once; the least recently used entries beyond _LAYERS_MAX
-    are unpersisted and their relations dropped. The memo keys on the plan,
-    not the data: a layer's inputs must not be rewritten in place while its
-    application runs (materialize_synth releases its application's entries)."""
+    is broadcast once; the catalog's plan memo unpersists it on eviction or
+    release."""
     df = layer if keep is not None else layer.select(*cols)
     spark = layer.sparkSession
-    sc = spark.sparkContext
-    qe = df._jdf.queryExecution()
-    memo = (sc.applicationId, qe.analyzed().semanticHash(), tuple(cols), tuple(keep or ()), max_bytes)
-    with _LAYERS_LOCK:
-        if memo not in _LAYERS:
-            est = int(qe.optimizedPlan().stats().sizeInBytes())
-            t = df.toArrow() if est <= max_bytes else None
-            value = None if t is None or build is None else build(t.select(cols), max_bytes)
-            admitted = value is not None or (build is None and t is not None and t.nbytes <= max_bytes)
-            _LAYERS[memo] = _NOT_PULLED if not admitted else Pulled(
-                value,
-                None if value is None else sc.broadcast(value),
-                None if keep is None else spark.createDataFrame(t.select(keep), schema=layer.select(*keep).schema),
-            )
-            for k in [k for k in _LAYERS if k[0] != memo[0]]:
-                del _LAYERS[k]  # a stopped application's broadcasts went with it
-            while len(_LAYERS) > _LAYERS_MAX:
-                _release(next(iter(_LAYERS)))
-        _LAYERS.move_to_end(memo)
-        return _LAYERS[memo]
 
+    def pull() -> Pulled:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        t = df.toArrow() if est <= max_bytes else None
+        value = None if t is None or build is None else build(t.select(cols), max_bytes)
+        admitted = value is not None or (build is None and t is not None and t.nbytes <= max_bytes)
+        return _NOT_PULLED if not admitted else Pulled(
+            value,
+            None if value is None else spark.sparkContext.broadcast(value),
+            None if keep is None else spark.createDataFrame(t.select(keep), schema=layer.select(*keep).schema),
+        )
 
-def _release(memo) -> None:
-    """Drop a _LAYERS entry, relation included, and unpersist its broadcast."""
-    old = _LAYERS.pop(memo).bcast
-    if old is not None:
-        old.unpersist()
-
-
-def release_layers(spark: SparkSession) -> None:
-    """Forget every layer this application pulled, and the cell sizes and
-    salt fans it probed: its tables were rewritten in place, at the same
-    plans."""
-    app = spark.sparkContext.applicationId
-    with _LAYERS_LOCK:
-        for k in [k for k in _LAYERS if k[0] == app]:
-            _release(k)
-    for memo in (_DEG_CACHE, _SALT_CACHE):
-        for k in [k for k in memo if k[0] == app]:
-            del memo[k]
+    return memoized((df,), ("pull", tuple(cols), tuple(keep or ()), max_bytes), pull)
 
 
 def geom_index(layer: DataFrame, key: str, verts_via: str = "auto", vertices: str = "vertices") -> Pulled:

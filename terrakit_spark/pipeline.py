@@ -29,9 +29,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.operators.asof import _asof_join
 from terrakit_spark.operators.rasterize import burn_image, scene_label_pairs
-from terrakit_spark.operators.spatial_join import _pull, _register_views, stored_layer
+from terrakit_spark.operators.spatial_join import _pull, stored_layer
 from terrakit_spark.sources.raster import scene_pixels
 from terrakit_spark.synth import CHIP
 

@@ -30,6 +30,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 
+from terrakit_spark.catalog import _register_views
+
 FORECAST_HORIZONS = [3, 5, 7, 10, 15]  # theweathercompany.py:42
 
 
@@ -143,8 +145,6 @@ def _rest_query(spark, sf_dir):
     subset through the full connector plumbing (URL build -> transport ->
     response parse -> clamp -> flatten); the synthetic transport's payload
     formula is replicated exactly by the DuckDB oracle."""
-    from terrakit_spark.operators.spatial_join import _register_views
-
     _register_views(spark, sf_dir)
     pts = spark.sql(
         "SELECT media_ref AS point_id, my AS lat, mx AS lon FROM media WHERE doc_num % 200 = 0"

@@ -27,6 +27,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
+from terrakit_spark.catalog import _register_views
 from terrakit_spark.sinks.geotiff import parse_geotiff
 from terrakit_spark.synth import RES
 
@@ -204,7 +205,6 @@ def vrt_window_stats(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from terrakit_spark.dialect import SPARK
-    from terrakit_spark.operators.spatial_join import _register_views
     from terrakit_spark.registry import with_synth
 
     _register_views(spark, sf_dir)

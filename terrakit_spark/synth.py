@@ -32,7 +32,7 @@ media) exercises skew handling (salting + AQE skew join).
 
 from __future__ import annotations
 
-from terrakit_spark.dialect import DUCK, SPARK, D
+from terrakit_spark.dialect import SPARK, D
 
 # ---------------------------------------------------------------- constants
 # Bump when any derived table's CONTENT changes: disk fixtures built from the
@@ -252,28 +252,3 @@ ALL_TABLES = {
     "emb_aug": emb_aug_sql,
 }
 
-
-def register_synth_views(spark, sf_dir: str) -> None:
-    """Register testdata parquet + derived synthetic tables as temp views."""
-    for t in (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    for name, fn in ALL_TABLES.items():
-        spark.sql(fn(SPARK)).createOrReplaceTempView(name)
-
-
-def duck_ctes(names: list[str] | None = None) -> str:
-    """WITH-clause body for the DuckDB oracle (testdata views are
-    pre-registered by the driver)."""
-    names = names or list(ALL_TABLES)
-    return ", ".join(f"{n} AS ({ALL_TABLES[n](DUCK)})" for n in names)

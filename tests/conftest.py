@@ -25,9 +25,9 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def synth(spark, sf_dir):
-    from terrakit_spark.synth import register_synth_views
+    from terrakit_spark.catalog import _register_views
 
-    register_synth_views(spark, sf_dir)
+    _register_views(spark, sf_dir)
     return spark
 
 

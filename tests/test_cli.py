@@ -141,7 +141,7 @@ def test_stages_pull_each_stored_layer_once(synth, spark, sf_dir, tmp_path, monk
     """labels -> download -> chip in one application reads each stored
     layer from its source exactly once (one Arrow pull) and broadcasts only
     the chipper's label arrays; a second labels stage pulls nothing."""
-    from terrakit_spark.operators.spatial_join import release_layers
+    from terrakit_spark.catalog import release_layers
 
     pulls, broadcasts = [], []
     sc = spark.sparkContext

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from terrakit_spark import catalog
 from terrakit_spark.functions.geometry import GeomIndex, pip_kernel, refine_udf
 from terrakit_spark.operators import coverage as cv
 from terrakit_spark.operators import spatial_join as sj
@@ -21,7 +22,7 @@ from tests.util import executed_plan
 
 @pytest.fixture
 def layers(synth, spark, sf_dir):
-    sj._register_views(spark, sf_dir)
+    catalog._register_views(spark, sf_dir)
     d = sj._diamond_polys(spark).select("label_id", "labelclass", "xmin", "ymin", "xmax", "ymax", "vertices")
     tiles = cv._geo_tiles(spark, cv.COVERAGE_SCENE_PRED)
     return d, tiles
@@ -127,16 +128,16 @@ def test_evicted_layer_is_released_and_repulled(layers, spark, monkeypatch):
 
     d, _ = layers
     points = spark.table("media").select("media_ref", "mx", "my")
-    monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
-    monkeypatch.setattr(sj, "_LAYERS_MAX", 1)
+    monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
+    monkeypatch.setattr(catalog, "_MEMO_MAX", 1)
     join = lambda: sj.cell_pip_join(points, d, cell_deg=0.125)  # noqa: E731
     first = _rows(join())
-    ((memo, pulled),) = sj._LAYERS.items()
+    ((memo, pulled),) = catalog._MEMO.items()
     unpersisted, real = [], pulled.bcast.unpersist
     monkeypatch.setattr(pulled.bcast, "unpersist", lambda *a: unpersisted.append(a) or real(*a))
     assert sj.geom_index(d.filter("label_id % 2 = 0"), "label_id").rel is not None
-    assert unpersisted and memo not in sj._LAYERS
-    assert all(p.rel is not pulled.rel for p in sj._LAYERS.values())
+    assert unpersisted and memo not in catalog._MEMO
+    assert all(p.rel is not pulled.rel for p in catalog._MEMO.values())
     df, jobs = jobs_launched(spark, join)
     assert jobs == 1 and first and _rows(df) == first
 
@@ -145,31 +146,28 @@ def test_materialize_synth_releases_the_applications_layers(layers, spark, sf_di
     """materialize_synth rewrites tables in place, at the same plans: no
     layer, cell size or salt fan the application probed before may survive
     it; another application's choices do."""
-    from terrakit_spark.synth import register_synth_views
-
     d, tiles = layers
     app = spark.sparkContext.applicationId
-    monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
-    monkeypatch.setattr(sj, "_DEG_CACHE", {(app, 1, 2): 0.5, ("other", 1, 2): 0.5})
-    monkeypatch.setattr(sj, "_SALT_CACHE", {(app, 1, 2, 64): 8, ("other", 1, 2, 64): 8})
+    monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
     sj.geom_index(d, "label_id")
     sj.layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax"))
     unpersisted = []
-    for p in sj._LAYERS.values():
+    for p in catalog._MEMO.values():
         monkeypatch.setattr(p.bcast, "unpersist", lambda *a, real=p.bcast.unpersist: unpersisted.append(a) or real(*a))
-    assert len(unpersisted) == 0 and len(sj._LAYERS) == 2
-    monkeypatch.setattr(sj, "ALL_TABLES", {"labels": sj.ALL_TABLES["labels"]})
+    assert len(unpersisted) == 0 and len(catalog._MEMO) == 2
+    # probed cell sizes and salt fans, this application's and another's
+    catalog._MEMO.update({(app, 1, 2): 0.5, ("other", 1, 2): 0.5, (app, 1, 2, 64): 8, ("other", 1, 2, 64): 8})
+    monkeypatch.setattr(catalog, "ALL_TABLES", {"labels": catalog.ALL_TABLES["labels"]})
     try:
-        sj.materialize_synth(spark, sf_dir, str(tmp_path / "stored"))
-        assert not any(k[0] == app for k in sj._LAYERS)
+        catalog.materialize_synth(spark, sf_dir, str(tmp_path / "stored"))
+        assert not any(k[0] == app for k in catalog._MEMO)
         assert len(unpersisted) == 2
-        assert list(sj._DEG_CACHE) == [("other", 1, 2)]
-        assert list(sj._SALT_CACHE) == [("other", 1, 2, 64)]
+        assert list(catalog._MEMO) == [("other", 1, 2), ("other", 1, 2, 64)]
     finally:
         # re-point the views at the on-the-fly synth derivations
-        sj._MATERIALIZED.pop((app, sf_dir), None)
-        sj._active_synth.pop(app, None)
-        register_synth_views(spark, sf_dir)
+        catalog._MATERIALIZED.pop((app, sf_dir), None)
+        catalog._active_synth.pop(app, None)
+        catalog._register_views(spark, sf_dir)
 
 
 def test_planning_jobs_cold_then_warm(layers, monkeypatch):
@@ -177,7 +175,7 @@ def test_planning_jobs_cold_then_warm(layers, monkeypatch):
     (the salt fan is decided on the driver). Warm: no job at all."""
     d, tiles = layers
     sc = d.sparkSession.sparkContext
-    monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
+    monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
     calls = {
         "overlap": lambda: sj.convex_overlap_join(d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1")),
         "coverage": lambda: cv.tile_coverage_join(tiles, d),
@@ -191,6 +189,47 @@ def test_planning_jobs_cold_then_warm(layers, monkeypatch):
                 assert len(sc.statusTracker().getJobIdsForGroup(group)) <= most, (name, phase)
     finally:
         sc.setJobGroup("", "")
+
+
+def test_probes_drop_other_applications_entries(layers, spark, monkeypatch):
+    """Cell sizes and salt fans memoized under another applicationId are
+    gone once this application memoizes a probe, as layer entries are."""
+    d, _ = layers
+    a, b = d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1")
+    points = spark.table("media").select("media_ref", "mx", "my")
+    cells = lambda df: sj.with_cover_cells(df, *sj.BBOX, out="_cell", cell_deg=1.0)  # noqa: E731
+    app = spark.sparkContext.applicationId
+    probes = {
+        "cell_deg": lambda: sj.adaptive_cell_deg(points, "mx", "my", d),
+        "salts": lambda: sj.probe_salts(cells(a), cells(b)),
+    }
+    for tag, probe in probes.items():
+        stale = {("other", 1, 2, "cell_deg", "mx", "my", 64.0): 0.5, ("other", 1, 2, "salts", 64): 8}
+        monkeypatch.setattr(catalog, "_MEMO", OrderedDict(stale))
+        value = probe()
+        ((key, memo),) = catalog._MEMO.items()
+        assert key[0] == app and tag in key and memo == value, (tag, key)
+
+
+def test_probe_and_layer_evict_each_other(layers, spark, monkeypatch):
+    """Pulls and probes share one LRU: with room for one entry, a probe
+    evicts a pulled layer and unpersists its broadcast, and re-pulling the
+    layer (one job) evicts the probe."""
+    from tests.util import jobs_launched
+
+    d, _ = layers
+    points = spark.table("media").select("media_ref", "mx", "my")
+    monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
+    monkeypatch.setattr(catalog, "_MEMO_MAX", 1)
+    pulled = sj.geom_index(d, "label_id")
+    ((layer_key, _),) = catalog._MEMO.items()
+    unpersisted, real = [], pulled.bcast.unpersist
+    monkeypatch.setattr(pulled.bcast, "unpersist", lambda *a: unpersisted.append(a) or real(*a))
+    deg = sj.adaptive_cell_deg(points, "mx", "my", d)
+    ((probe_key, memo),) = catalog._MEMO.items()
+    assert unpersisted and "cell_deg" in probe_key and memo == deg
+    again, jobs = jobs_launched(spark, lambda: sj.geom_index(d, "label_id"))
+    assert jobs == 1 and again.rel is not pulled.rel and list(catalog._MEMO) == [layer_key]
 
 
 @pytest.mark.parametrize("cell_deg", [0.25, 1.0, 2.0])

@@ -11,7 +11,8 @@ from terrakit_spark.registry import QUERIES
 
 
 def test_overlap_join_matches_brute_force(synth, spark, sf_dir):
-    from terrakit_spark.operators.spatial_join import OVERLAP_EPS, _diamond_polys, _register_views
+    from terrakit_spark.catalog import _register_views
+    from terrakit_spark.operators.spatial_join import OVERLAP_EPS, _diamond_polys
 
     _register_views(spark, sf_dir)
     rows = _diamond_polys(spark).select("label_id", "vertices").collect()
@@ -63,7 +64,8 @@ def test_tile_label_coverage_matches_numpy(synth, spark, sf_dir):
     contained fast path the query uses), round to the same integer
     micro-deg^2 unit, and compare counts and integer sums exactly."""
     from terrakit_spark.functions.geometry import clip_area
-    from terrakit_spark.operators.spatial_join import _diamond_polys, _register_views
+    from terrakit_spark.catalog import _register_views
+    from terrakit_spark.operators.spatial_join import _diamond_polys
 
     _register_views(spark, sf_dir)
     scenes = spark.sql(

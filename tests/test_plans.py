@@ -16,10 +16,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, IntegerType
 
 import terrakit_spark.operators  # noqa: F401
-from terrakit_spark import registry
+from terrakit_spark import catalog
 from terrakit_spark.operators import spatial_join as sj
 from terrakit_spark.registry import QUERIES
-from terrakit_spark.synth import ALL_TABLES, register_synth_views
+from terrakit_spark.synth import ALL_TABLES
 from tests.util import job_ids_launched, jobs_launched
 
 
@@ -82,11 +82,8 @@ def test_partition_pruning_on_stored_tables(synth, spark, sf_dir, tmp_path):
     partitioned by (p_date, p_cx); a bbox+date predicate must prune at the
     FILE level (PartitionFilters in the scan), and the pruned scan must
     return the same rows as the unpartitioned view."""
-    from terrakit_spark.operators.spatial_join import materialize_synth
-    from terrakit_spark.synth import register_synth_views
-
     work = str(tmp_path / "stored")
-    materialize_synth(spark, sf_dir, work)
+    catalog.materialize_synth(spark, sf_dir, work)
     try:
         stored = spark.read.parquet(f"{work}/scenes")
         q = stored.filter("p_date = '2024-01-05' AND p_cx = 6 AND xmin < 40")
@@ -113,23 +110,16 @@ def test_partition_pruning_on_stored_tables(synth, spark, sf_dir, tmp_path):
         n_all = len(glob.glob(f"{work}/scenes/p_date=*/p_cx=*/*.parquet"))
         assert 0 < n_part < n_all
     finally:
-        # re-point views back at the on-the-fly synth derivations so later
-        # tests in this session see the canonical schemas
-        from terrakit_spark.operators import spatial_join as sj
-
-        app = spark.sparkContext.applicationId
-        sj._MATERIALIZED.pop((app, sf_dir), None)
-        sj._active_synth.pop(app, None)
-        register_synth_views(spark, sf_dir)
+        _restore_views(spark, sf_dir)
 
 
 def _restore_views(spark, sf_dir) -> None:
     """Re-point the views at the on-the-fly synth derivations, so later
     tests in this session see the canonical schemas."""
     app = spark.sparkContext.applicationId
-    sj._MATERIALIZED.pop((app, sf_dir), None)
-    sj._active_synth.pop(app, None)
-    register_synth_views(spark, sf_dir)
+    catalog._MATERIALIZED.pop((app, sf_dir), None)
+    catalog._active_synth.pop(app, None)
+    catalog._register_views(spark, sf_dir)
 
 
 @pytest.fixture(scope="module")
@@ -138,7 +128,7 @@ def stored(synth, spark, sf_dir, tmp_path_factory):
     then renamed, as perfbench builds its cache; the views are restored."""
     root = tmp_path_factory.mktemp("catalog")
     try:
-        sj.materialize_synth(spark, sf_dir, str(root / "a"))
+        catalog.materialize_synth(spark, sf_dir, str(root / "a"))
         os.replace(root / "a", root / "b")
     finally:
         _restore_views(spark, sf_dir)
@@ -148,15 +138,15 @@ def stored(synth, spark, sf_dir, tmp_path_factory):
 def _attach(spark, sf_dir, work) -> int:
     """Jobs launched attaching work's tables as a new application does."""
     app = spark.sparkContext.applicationId
-    sj._active_synth.pop(app, None)
-    registry._active_base.pop(app, None)
-    sj._MATERIALIZED[(app, sf_dir)] = work
-    return jobs_launched(spark, lambda: sj._register_views(spark, sf_dir))[1]
+    catalog._active_synth.pop(app, None)
+    catalog._active_base.pop(app, None)
+    catalog._MATERIALIZED[(app, sf_dir)] = work
+    return jobs_launched(spark, lambda: catalog._register_views(spark, sf_dir))[1]
 
 
 def _inferred(spark, sf_dir, work) -> dict:
     """view -> the schema spark.read.parquet infers from its files."""
-    paths = {t: f"{sf_dir}/{t}.parquet" for t in registry._BASE_TABLES}
+    paths = {t: f"{sf_dir}/{t}.parquet" for t in catalog._BASE_TABLES}
     paths.update({n: os.path.join(work, n) for n in ALL_TABLES})
     return {v: spark.read.parquet(p).schema for v, p in paths.items()}
 
@@ -176,10 +166,10 @@ def test_attach_from_catalog_launches_no_job(stored, spark, sf_dir):
     the schema inference would give (partition columns typed), reads the
     renamed dir's files and the same rows, and the listing threshold is
     left as it was."""
-    before = spark.conf.get(registry._LISTING_THRESHOLD, None)
+    before = spark.conf.get(catalog._LISTING_THRESHOLD, None)
     try:
         assert _attach(spark, sf_dir, stored) == 0
-        assert spark.conf.get(registry._LISTING_THRESHOLD, None) == before
+        assert spark.conf.get(catalog._LISTING_THRESHOLD, None) == before
         inferred = _inferred(spark, sf_dir, stored)
         assert len(inferred) == 16 and _views(spark, inferred) == inferred
         for name in ("labels", "scenes", "media"):
@@ -229,7 +219,7 @@ def test_failed_materialize_leaves_no_catalog(stored, spark, sf_dir, tmp_path, m
         with monkeypatch.context() as m:
             m.setitem(ALL_TABLES, "scenes", lambda d: "SELECT no_such_column FROM labels")
             with pytest.raises(AnalysisException):
-                sj.materialize_synth(spark, sf_dir, str(work))
+                catalog.materialize_synth(spark, sf_dir, str(work))
         assert (work / "labels").is_dir()  # it wrote a table before it raised
         assert not (work / "_catalog.json").exists()
     finally:
@@ -272,7 +262,7 @@ def test_cold_pass_reads_each_stored_table_once(stored, spark, sf_dir, duck, mon
     run = lambda: [QUERIES[q](spark, sf_dir).count() for q in queries]  # noqa: E731
     try:
         assert _attach(spark, sf_dir, stored) == 0
-        monkeypatch.setattr(sj, "_LAYERS", OrderedDict())
+        monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
         assert _stored_scans(spark, stored, run) == {"labels": 1, "scenes": 1}
         assert _stored_scans(spark, stored, run) == {"labels": 0, "scenes": 0}
         monkeypatch.setattr(sj, "INDEX_MAX_BYTES", 0)
@@ -281,6 +271,23 @@ def test_cold_pass_reads_each_stored_table_once(stored, spark, sf_dir, duck, mon
         assert scans["labels"] >= 2 and scans["scenes"] >= 1, scans
     finally:
         _restore_views(spark, sf_dir)
+
+
+def test_spatial_join_pip_planning_jobs_cold_then_warm(synth, spark, sf_dir, monkeypatch):
+    """Planned cold, spatial_join_pip runs adaptive_cell_deg's probe (one
+    collect, which AQE runs as a job per stage) and the polygon pulls (the
+    stored `labels` layer and the GeomIndex over its diamonds, one toArrow
+    each); planned warm, it runs no job: all three sit in the plan memo."""
+    monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
+    st = spark.sparkContext.statusTracker()
+    plan = lambda: QUERIES["spatial_join_pip"](spark, sf_dir)  # noqa: E731
+    _, cold = job_ids_launched(spark, plan)
+    actions = [
+        {st.getStageInfo(s).name.split(" at ")[0] for s in st.getJobInfo(j).stageIds if st.getStageInfo(s)}
+        for j in cold
+    ]
+    assert actions.count({"toArrow"}) == 2 and actions.count({"collect"}) == len(actions) - 2 > 0, actions
+    assert job_ids_launched(spark, plan)[1] == []
 
 
 def test_new_joins_are_equi_hash(synth, spark, sf_dir):
@@ -331,6 +338,7 @@ def test_bucketed_join_avoids_shuffle(synth, spark, sf_dir, tmp_path):
     stats = spark.sql("SELECT scene_id, xmin, ymax FROM scenes")
     for name, df in ((a, scenes), (b, stats)):
         df.write.bucketBy(8, "scene_id").sortBy("scene_id").mode("overwrite").saveAsTable(name)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = spark.table(a).join(spark.table(b), "scene_id")
@@ -340,7 +348,7 @@ def test_bucketed_join_avoids_shuffle(synth, spark, sf_dir, tmp_path):
         assert "Exchange" not in plan, plan[:2000]
         assert joined.count() == scenes.count()
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
         spark.sql(f"DROP TABLE IF EXISTS {a}")
         spark.sql(f"DROP TABLE IF EXISTS {b}")
 
@@ -379,7 +387,7 @@ def test_sf_dir_switch_repoints_views(spark):
     the second's tables — and switching BACK must restore the first's
     (regression: the ever-registered memo served sf0.1 synth views to an
     sf1 query; measured as an sf1 spatial join returning sf0.1 rows)."""
-    from terrakit_spark.operators.spatial_join import _register_views
+    from terrakit_spark.catalog import _register_views
 
     counts = {}
     for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.001"):

@@ -4,7 +4,8 @@ the shuffle, never the result."""
 
 from __future__ import annotations
 
-from terrakit_spark.operators.spatial_join import _diamond_polys, _register_views, cell_pip_join
+from terrakit_spark.catalog import _register_views
+from terrakit_spark.operators.spatial_join import _diamond_polys, cell_pip_join
 
 
 def test_salted_join_exactness(synth, spark, sf_dir):
