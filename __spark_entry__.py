@@ -32,7 +32,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # r4 go FIRST so the capped driver pass re-reaches them — led by the query
 # whose code changed THIS round (tile_label_coverage: new closed-form
 # oracle + rect-clip fast path; polygon_overlap_join: probe-driven salting;
-# chip_pipeline_*: labels_via auto-select), then the untouched r4 cohort
+# chip_pipeline_*: label path picked by the byte gate), then the untouched r4 cohort
 # (similarity/ANN family first — its SQL was untouched in rounds 5 and 6),
 # then the r5-green queries.
 _PRIORITY = [
@@ -47,7 +47,7 @@ _PRIORITY = [
     "polygon_overlap_join",  # salting now probe-driven
     "polygon_overlap_join_unsalted",  # same oracle: salt-invariance proof
     "spatial_join_pip",
-    "chip_pipeline_full",  # labels_via auto probe
+    "chip_pipeline_full",  # label broadcast or join, by the byte gate
     "pipeline_summary_small",
     "dataset_package",  # r4 + tortilla fixture re-keyed this round
     "dataset_package_counts",

@@ -59,7 +59,6 @@ def tile_coverage_join(
     polys: DataFrame,
     cell_deg: float = TILE_CELL_DEG,
     n_salts: int | None = None,
-    verts_via: str = "auto",
     verts_key: str = "label_id",
 ) -> DataFrame:
     """tiles(txmin..tymax axis-aligned rects) x polys(xmin..ymax bbox,
@@ -77,9 +76,9 @@ def tile_coverage_join(
     Arrow refine. Its kernel splits on containment: a polygon whose
     vertices all lie inside the tile takes its own area (from the
     GeomIndex, or one shoelace pass on the column path), so only
-    boundary-crossing pairs pay clip_area_rect. verts_via is as in
-    cell_pip_join; both modes return the same rows."""
-    geo, bcast, rel = geom_index(polys, verts_key, verts_via)
+    boundary-crossing pairs pay clip_area_rect. Geometry is read as in
+    cell_pip_join; both paths return the same rows."""
+    geo, bcast, rel = geom_index(polys, verts_key)
     tb = None
     if geo is not None:
         polys = rel

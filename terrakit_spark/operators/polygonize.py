@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from terrakit_spark.catalog import _register_views
 from terrakit_spark.operators.chips import SMALL_PRED_SQL
-from terrakit_spark.operators.rasterize import burn_image
+from terrakit_spark.operators.rasterize import burn_scene
 
 
 def connected_components(img: np.ndarray) -> tuple[np.ndarray, int]:
@@ -253,14 +253,8 @@ def polygonize_components(
     if with_rings:
         schema += ", rings array<array<array<int>>>"
 
-    def poly_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("geom_seq")
-        w, h = int(pdf["width"].iloc[0]), int(pdf["height"].iloc[0])
-        polys = [
-            np.array([[cx - rx, cy], [cx, cy - ry], [cx + rx, cy], [cx, cy + ry]], dtype=np.float64)
-            for cx, cy, rx, ry in zip(pdf["cx"], pdf["cy"], pdf["rx"], pdf["ry"])
-        ]
-        img = burn_image(w, h, float(pdf["xmin"].iloc[0]), float(pdf["ymax"].iloc[0]), polys, list(pdf["labelclass"]))
+    def poly_group(key, pdf):
+        img = burn_scene(pdf)
         comp, n = connected_components(img)
         rows = []
         for cid in range(1, n + 1):

@@ -42,14 +42,15 @@ def burn_image(
     height: int,
     xmin: float,
     ymax: float,
-    polys: list[np.ndarray],
+    polys: list[np.ndarray] | np.ndarray,
     classes: list[int],
     res: float = RES,
     fill: int = BACKGROUND,
 ) -> np.ndarray:
-    """Burn polygons (pre-sorted by geom_seq) over the pixel grid; later
-    polygons overwrite earlier. Pixel center (x,y) = (xmin + (x+0.5)*res,
-    ymax - (y+0.5)*res), north-up.
+    """Burn polygons (pre-sorted by geom_seq; a list of (V, 2) arrays or
+    one (n, V, 2) cube) over the pixel grid; later polygons overwrite
+    earlier. Pixel center (x,y) = (xmin + (x+0.5)*res, ymax - (y+0.5)*res),
+    north-up.
 
     Dispatches between two bit-identical kernels: the per-polygon
     occlusion-culled painter (below) for small polygon counts, and the
@@ -63,6 +64,26 @@ def burn_image(
         if out is not None:
             return out
     return _burn_image_painter(width, height, xmin, ymax, polys, classes, res, fill)
+
+
+def diamond_cube(cx, cy, rx, ry) -> np.ndarray:
+    """(n, 4, 2) float64 vertices of the label diamonds, in _diamond_polys'
+    order: (cx - rx, cy), (cx, cy - ry), (cx + rx, cy), (cx, cy + ry)."""
+    cx, cy, rx, ry = (np.asarray(a, dtype=np.float64) for a in (cx, cy, rx, ry))
+    xs = np.stack([cx - rx, cx, cx + rx, cx], axis=1)
+    ys = np.stack([cy, cy - ry, cy, cy + ry], axis=1)
+    return np.stack([xs, ys], axis=2)
+
+
+def burn_scene(pdf: pd.DataFrame, fill: int = BACKGROUND) -> np.ndarray:
+    """The label image of one scene from its scene_label_pairs rows, burned
+    in geom_seq order."""
+    pdf = pdf.sort_values("geom_seq")
+    polys = diamond_cube(pdf["cx"], pdf["cy"], pdf["rx"], pdf["ry"])
+    return burn_image(
+        int(pdf["width"].iloc[0]), int(pdf["height"].iloc[0]), float(pdf["xmin"].iloc[0]),
+        float(pdf["ymax"].iloc[0]), polys, list(pdf["labelclass"]), fill=fill,
+    )
 
 
 def _burn_image_edges(
@@ -439,19 +460,8 @@ def burn_histogram(spark: SparkSession, sf_dir: str, fill: int = BACKGROUND) -> 
     pairs = scene_label_pairs(spark, SMALL_PRED_SQL)
     scenes = spark.sql(f"SELECT scene_id, width, height, xmin, ymax FROM scenes WHERE {SMALL_PRED_SQL}")
 
-    def burn_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("geom_seq")
-        w = int(pdf["width"].iloc[0])
-        h = int(pdf["height"].iloc[0])
-        polys = [
-            np.array([[cx - rx, cy], [cx, cy - ry], [cx + rx, cy], [cx, cy + ry]], dtype=np.float64)
-            for cx, cy, rx, ry in zip(pdf["cx"], pdf["cy"], pdf["rx"], pdf["ry"])
-        ]
-        img = burn_image(
-            w, h, float(pdf["xmin"].iloc[0]), float(pdf["ymax"].iloc[0]),
-            polys, list(pdf["labelclass"]), fill=fill,
-        )
-        cls, cnt = np.unique(img, return_counts=True)
+    def burn_group(key, pdf):
+        cls, cnt = np.unique(burn_scene(pdf, fill), return_counts=True)
         return pd.DataFrame(
             {"scene_id": key[0], "label_class": cls.astype(np.int32), "n_px": cnt.astype(np.int64)}
         )
@@ -555,21 +565,11 @@ def zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     _register_views(spark, sf_dir)
     pairs = scene_label_pairs(spark, SMALL_PRED_SQL)
 
-    def zonal_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def zonal_group(key, pdf):
         from terrakit_spark.sources.raster import scene_pixels
 
-        pdf = pdf.sort_values("geom_seq")
-        w = int(pdf["width"].iloc[0])
-        h = int(pdf["height"].iloc[0])
-        polys = [
-            np.array([[cx - rx, cy], [cx, cy - ry], [cx + rx, cy], [cx, cy + ry]], dtype=np.float64)
-            for cx, cy, rx, ry in zip(pdf["cx"], pdf["cy"], pdf["rx"], pdf["ry"])
-        ]
-        img = burn_image(
-            w, h, float(pdf["xmin"].iloc[0]), float(pdf["ymax"].iloc[0]),
-            polys, list(pdf["labelclass"]),
-        )
-        vals = scene_pixels(int(key[0]), 1, h, w)[0].astype(np.int64)
+        img = burn_scene(pdf)
+        vals = scene_pixels(int(key[0]), 1, *img.shape)[0].astype(np.int64)
         valid = vals != -9999
         rows = []
         for cls in np.unique(img):

@@ -115,7 +115,6 @@ def cell_pip_join(
     n_salts: int = 0,
     cell_deg: float | None = None,
     candidate_filter=None,
-    verts_via: str = "auto",
     verts_key: str = "label_id",
 ) -> DataFrame:
     """points(px, py, ...) x polys(xmin..ymax bbox cols, vertices flat
@@ -135,14 +134,13 @@ def cell_pip_join(
     candidate_filter, a predicate over both sides' columns, runs on them
     before the refine (the sampled join's key hash).
 
-    verts_via picks where the refine reads geometry: "broadcast" from the
-    layer's GeomIndex (the Arrow transfer per candidate is key, px, py and
-    the vertex bytes never ride the explode or shuffle), "column" from the
-    vertices column per row, "auto" (default) the index when geom_index
-    admits the layer."""
+    The refine reads geometry from the layer's GeomIndex when geom_index
+    admits the layer (the Arrow transfer per candidate is key, px, py and
+    the vertex bytes never ride the explode or shuffle), else from the
+    vertices column per row."""
     if cell_deg is None:
         cell_deg = adaptive_cell_deg(points, px, py, polys)
-    geo, bcast, rel = geom_index(polys, verts_key, verts_via, vertices)
+    geo, bcast, rel = geom_index(polys, verts_key, vertices)
     if geo is not None:
         polys = rel
     cand = cell_pair_join(points, polys, (px, py, px, py), BBOX, cell_deg, n_salts)
@@ -226,12 +224,7 @@ def spatial_join_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     _register_views(spark, sf_dir)
     points = spark.table("media").select("media_ref", "mx", "my")
     polys = _diamond_polys(spark).select("label_id", "xmin", "ymin", "xmax", "ymax", "vertices")
-    # verts_via pinned to "column": keeps the per-row vertex-shipping
-    # refine driver-proven now that the auto default broadcasts geometry
-    # (this variant therefore exercises salted shuffle + column refine)
-    return cell_pip_join(points, polys, n_salts=8, verts_via="column").select(
-        "media_ref", "label_id"
-    )
+    return cell_pip_join(points, polys, n_salts=8).select("media_ref", "label_id")
 
 
 register_df("spatial_join_pip_salted", spatial_join_pip_salted, oracle=_ORACLE)
@@ -400,9 +393,11 @@ class Pulled(NamedTuple):
 _NOT_PULLED = Pulled(None, None, None)
 
 
-def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float, keep: list[str] | None = None) -> Pulled:
-    """Memoized Pulled of build(layer[cols] as Arrow, max_bytes); value is
-    None when the layer is over max_bytes. Spark's own plan size estimate
+def _pull(layer: DataFrame, cols: list[str], build, keep: list[str] | None = None) -> Pulled:
+    """Memoized Pulled of build(layer[cols] as Arrow, max_bytes), where
+    max_bytes is INDEX_MAX_BYTES read at call time and kept in the memo key
+    (a changed gate never reuses a pull admitted under the old one); value
+    is None when the layer is over max_bytes. Spark's own plan size estimate
     (the one it trusts before collecting a broadcast-join side) screens out
     layers too big to pull; `build` applies the exact gate to the pulled
     arrays and keeps numpy only. build=None builds no value: the exact gate
@@ -415,6 +410,7 @@ def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float, keep: list
     release."""
     df = layer if keep is not None else layer.select(*cols)
     spark = layer.sparkSession
+    max_bytes = INDEX_MAX_BYTES
 
     def pull() -> Pulled:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -430,13 +426,12 @@ def _pull(layer: DataFrame, cols: list[str], build, max_bytes: float, keep: list
     return memoized((df,), ("pull", tuple(cols), tuple(keep or ()), max_bytes), pull)
 
 
-def geom_index(layer: DataFrame, key: str, verts_via: str = "auto", vertices: str = "vertices") -> Pulled:
+def geom_index(layer: DataFrame, key: str, vertices: str = "vertices") -> Pulled:
     """Pulled(GeomIndex, its broadcast, the layer without `vertices`) of a
-    polygon layer, or all None for the per-row path: verts_via="column", no
-    `key` column, keys that are null or not unique, or — under "auto" — an
-    estimated cube over INDEX_MAX_BYTES."""
+    polygon layer, or all None for the per-row path: no `key` column, keys
+    that are null or not unique, or a cube over INDEX_MAX_BYTES."""
     columns = layer.columns
-    if verts_via == "column" or key not in columns:
+    if key not in columns:
         return _NOT_PULLED
 
     def build(t, max_bytes):
@@ -450,9 +445,8 @@ def geom_index(layer: DataFrame, key: str, verts_via: str = "auto", vertices: st
         bbox = np.column_stack([t.column(c).to_numpy() for c in BBOX])
         return GeomIndex.build(keys, bbox, v.flatten().to_numpy(), counts)
 
-    cap = math.inf if verts_via == "broadcast" else INDEX_MAX_BYTES
     keep = [c for c in columns if c != vertices]
-    return _pull(layer, [key, *BBOX, vertices], build, cap, keep)
+    return _pull(layer, [key, *BBOX, vertices], build, keep)
 
 
 def layer_bboxes(layer: DataFrame, cols: tuple[str, str, str, str]) -> Pulled:
@@ -466,7 +460,7 @@ def layer_bboxes(layer: DataFrame, cols: tuple[str, str, str, str]) -> Pulled:
             return None
         return np.column_stack([t.column(c).to_numpy() for c in cols])
 
-    return _pull(layer, list(cols), build, INDEX_MAX_BYTES, layer.columns)
+    return _pull(layer, list(cols), build, layer.columns)
 
 
 def stored_layer(spark: SparkSession, name: str) -> DataFrame:
@@ -476,7 +470,7 @@ def stored_layer(spark: SparkSession, name: str) -> DataFrame:
     and the spatial joins' derived layers (`_diamond_polys`, `_geo_tiles`)
     plan over it instead of re-reading the table's files."""
     layer = spark.table(name)
-    rel = _pull(layer, [], None, INDEX_MAX_BYTES, layer.columns).rel
+    rel = _pull(layer, [], None, layer.columns).rel
     return layer if rel is None else rel
 
 
@@ -548,7 +542,6 @@ def convex_overlap_join(
     cell_deg: float = OVERLAP_CELL_DEG,
     eps: float = OVERLAP_EPS,
     n_salts: int | None = None,
-    verts_via: str = "auto",
     verts_key: str = "label_id",
 ) -> DataFrame:
     """Exact interiors-intersect join of two convex-polygon layers, each
@@ -575,11 +568,11 @@ def convex_overlap_join(
     else by the probe_salts job. Pass 0 to force unsalted, >0 to force a
     fan.
 
-    verts_via applies per side as in cell_pip_join: with both indexes the
+    Each side reads geometry as in cell_pip_join: with both indexes the
     Arrow transfer per candidate pair is two int64 keys. The output never
     carries `vertices`/`vertices_b`."""
-    geo_a, bcast_a, rel_a = geom_index(polys_a, verts_key, verts_via)
-    geo_b, bcast_b, rel_b = geom_index(polys_b, verts_key, verts_via)
+    geo_a, bcast_a, rel_a = geom_index(polys_a, verts_key)
+    geo_b, bcast_b, rel_b = geom_index(polys_b, verts_key)
     if geo_a is not None:
         polys_a = rel_a
     if geo_b is not None:
@@ -617,10 +610,7 @@ def _polygon_overlap_join_unsalted(spark: SparkSession, sf_dir: str) -> DataFram
     d = _diamond_polys(spark).select("label_id", "xmin", "ymin", "xmax", "ymax", "vertices")
     a = d.filter("label_id % 2 = 0")
     b = d.filter("label_id % 2 = 1")
-    # verts_via pinned to "column" (like spatial_join_pip_salted): with the
-    # auto default broadcasting geometry, this variant keeps the per-row
-    # vertex-shipping SAT refine driver-proven on the identical oracle
-    return convex_overlap_join(a, b, n_salts=0, verts_via="column").select(
+    return convex_overlap_join(a, b, n_salts=0).select(
         F.col("label_id").alias("label_a"), F.col("label_id_b").alias("label_b")
     )
 

@@ -21,7 +21,6 @@ mapInPandas stages so one fat-dim scene run doesn't serialize a thread."""
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -31,7 +30,7 @@ from pyspark.sql import functions as F
 
 from terrakit_spark.catalog import _register_views
 from terrakit_spark.operators.asof import _asof_join
-from terrakit_spark.operators.rasterize import burn_image, scene_label_pairs
+from terrakit_spark.operators.rasterize import burn_image, diamond_cube, scene_label_pairs
 from terrakit_spark.operators.spatial_join import _pull, stored_layer
 from terrakit_spark.sources.raster import scene_pixels
 from terrakit_spark.synth import CHIP
@@ -121,42 +120,34 @@ def chip_pipeline(
     scene_pred: str = "true",
     shuffle_parts: int | None = None,
     transforms: list[str] | None = None,
-    labels_via: str = "auto",
     skip_zero_scenes: bool = False,
     memoize_burns: bool = True,
     scenes_df: DataFrame | None = None,
-    broadcast_max_bytes: int = 64 << 20,
     matched_dates: list[str] | None = None,
 ) -> DataFrame:
     """Returns the chip table: one row per (scene, window) with data chip,
     label chip, and per-band integer stat partials. matched_dates: the
     scenes are already matched (see matched_scenes).
 
-    labels_via:
-      - "auto" (default): broadcast the label layer when it fits
-        broadcast_max_bytes, else join. The label arrays are pulled once per
-        (application, semantic plan, budget) by the memoized `_pull` from
-        the application's pulled label layer (`stored_layer`, in memory when
-        it fits, so no file is re-read): Spark's plan size estimate screens
-        it, then the exact rows x 48 B gate — no count probe, and a second
-        call pulls and broadcasts nothing.
-      - "broadcast": the label layer is the small dimension — it
-        ships to every chipper task as numpy arrays (sorted by geom_seq) and
+    The label layer takes one of two paths, picked by its size alone:
+      - broadcast, when rows x 48 B fits INDEX_MAX_BYTES: the layer ships to
+        every chipper task as numpy arrays (sorted by geom_seq) and
         candidate selection is a vectorized bbox overlap inside the UDF.
         This removes the (scene x label) pair join entirely; with hotspot
         skew that join is quadratic (measured 17.5M pairs at sf0.1) while
-        the label table itself is ~2 MB.
-      - "join": cover-cell equi-join + per-scene collect_list — the path
-        for a label side too big to broadcast (salted/AQE at scale)."""
+        the label table itself is ~2 MB. The arrays are pulled once per
+        (application, semantic plan, gate) by the memoized `_pull` from the
+        application's pulled label layer (`stored_layer`, so no file is
+        re-read): Spark's plan size estimate screens it, then the exact
+        gate — no count probe, and a second call pulls and broadcasts
+        nothing.
+      - join, over the gate: cover-cell equi-join + per-scene
+        collect_list (salted/AQE at scale)."""
     _register_views(spark, sf_dir)
     scenes = matched_scenes(spark, scene_pred, scenes_df=scenes_df, matched_dates=matched_dates)
     n_parts = shuffle_parts or spark.sparkContext.defaultParallelism
 
-    bc = None
-    if labels_via != "join":
-        cap = math.inf if labels_via == "broadcast" else broadcast_max_bytes
-        labels = stored_layer(spark, "labels")
-        bc = _pull(labels, ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"], _label_arrays, cap).bcast
+    bc = _pull(stored_layer(spark, "labels"), ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"], _label_arrays).bcast
 
     if bc is not None:
         # cost-striped partitioning: order scenes by pixel cost desc and
@@ -243,15 +234,7 @@ def chip_pipeline(
                             & (L["cy"] + L["ry"] >= float(r.ymin))
                         )
                         idx = np.nonzero(sel)[0]
-                        polys = [
-                            np.array(
-                                [[cx - rx, cy], [cx, cy - ry], [cx + rx, cy], [cx, cy + ry]],
-                                dtype=np.float64,
-                            )
-                            for cx, cy, rx, ry in zip(
-                                L["cx"][idx], L["cy"][idx], L["rx"][idx], L["ry"][idx]
-                            )
-                        ]
+                        polys = diamond_cube(L["cx"][idx], L["cy"][idx], L["rx"][idx], L["ry"][idx])
                         classes = [int(c) for c in L["cls"][idx]]
                         label_img = burn_image(w, h, float(r.xmin), float(r.ymax), polys, classes)
                         if MEMO_MAX:
@@ -259,16 +242,9 @@ def chip_pipeline(
                                 burn_memo.pop(next(iter(burn_memo)))
                             burn_memo[key] = label_img
                 elif r.polys is not None and len(r.polys) > 0:
-                    polys = [
-                        np.array(
-                            [[g["cx"] - g["rx"], g["cy"]], [g["cx"], g["cy"] - g["ry"]],
-                             [g["cx"] + g["rx"], g["cy"]], [g["cx"], g["cy"] + g["ry"]]],
-                            dtype=np.float64,
-                        )
-                        for g in r.polys
-                    ]
-                    classes = [int(g["labelclass"]) for g in r.polys]
-                    label_img = burn_image(w, h, float(r.xmin), float(r.ymax), polys, classes)
+                    g = pd.DataFrame(list(r.polys))
+                    polys = diamond_cube(g["cx"], g["cy"], g["rx"], g["ry"])
+                    label_img = burn_image(w, h, float(r.xmin), float(r.ymax), polys, list(g["labelclass"]))
                 else:
                     label_img = np.zeros((h, w), dtype=np.int32)
                 for win_index, x, y in _windows(w, h):

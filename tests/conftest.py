@@ -10,6 +10,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    # applyInPandas warns, then falls back to the grouped-map eval type, when
+    # a group function's hints are partial (e.g. `pdf` annotated, `key` not):
+    # a group function carries full hints or none
+    config.addinivalue_line("filterwarnings", "error:Cannot infer the eval type from type hints:UserWarning")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from terrakit_spark.session import get_spark

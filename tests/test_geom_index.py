@@ -64,30 +64,38 @@ def test_missing_key_raises_in_the_action(layers):
     """A candidate whose key was filtered out of the layer after the index
     was built must fail the action, not resolve to a neighbour's polygon."""
     d, _ = layers
-    bcast = sj.geom_index(d.filter("label_id % 3 != 0"), "label_id", "broadcast").bcast
+    bcast = sj.geom_index(d.filter("label_id % 3 != 0"), "label_id").bcast
     ref = (bcast, F.col("label_id"))
     hit = d.filter(refine_udf(pip_kernel, "boolean", [ref], F.col("xmin"), F.col("ymin")))
     with pytest.raises(Exception, match="GeomIndex holds no geometry"):
         hit.collect()
 
 
-def test_schema_and_rows_do_not_depend_on_verts_via(layers, spark):
+def test_schema_and_rows_do_not_depend_on_the_byte_gate(layers, spark, monkeypatch):
+    """The default gate admits every layer here (the refine reads the
+    GeomIndex), a gate of 0 none (it reads the vertices column): the same
+    schema, without `vertices`, and the same non-empty rows."""
     d, tiles = layers
     a, b = d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1")
     points = spark.table("media").select("media_ref", "mx", "my")
     cases = {
-        "pip": lambda via: sj.cell_pip_join(points, d, cell_deg=0.125, verts_via=via),
-        "overlap": lambda via: sj.convex_overlap_join(a, b, verts_via=via),
-        "coverage": lambda via: cv.tile_coverage_join(tiles, d, verts_via=via),
+        "pip": lambda: sj.cell_pip_join(points, d, cell_deg=0.125),
+        "overlap": lambda: sj.convex_overlap_join(a, b),
+        "coverage": lambda: cv.tile_coverage_join(tiles, d),
     }
+    pulled = {}
     for name, join in cases.items():
-        col, bc = join("column"), join("broadcast")
-        assert col.schema == bc.schema, name
-        assert not any(c.startswith("vertices") for c in col.columns), name
+        df = join()
+        pulled[name] = (df.schema, _rows(df))
+    monkeypatch.setattr(sj, "INDEX_MAX_BYTES", 0)
+    for name, join in cases.items():
+        scanned = join()
+        assert scanned.schema == pulled[name][0], name
+        assert not any(c.startswith("vertices") for c in scanned.columns), name
         # every refine returns the same rows from either geometry source (for
-        # coverage, the kernel's contained/crossing split runs in both modes)
-        got = _rows(col)
-        assert got == _rows(bc) and got, name
+        # coverage, the kernel's contained/crossing split runs on both paths)
+        got = _rows(scanned)
+        assert got == pulled[name][1] and got, name
 
 
 def test_one_arrow_refine_per_plan(layers, spark, sf_dir):

@@ -65,49 +65,30 @@ def test_zero_scene_guard(synth, sf_dir, spark):
     assert zeroed == 0
 
 
-def test_labels_via_join_matches_broadcast(synth, spark, sf_dir):
-    """The non-broadcastable-labels fallback (cover-cell equi-join +
-    per-scene collect_list) must produce the identical chip table as the
-    broadcast path — the path a 100 TB label layer takes."""
-    from terrakit_spark.pipeline import chip_pipeline
+def test_chip_table_does_not_depend_on_the_byte_gate(synth, spark, sf_dir, monkeypatch):
+    """The label layer's size picks its path: under the default gate the
+    small synthetic layer is broadcast; at a gate of 0 the chip job takes
+    the cover-cell join + per-scene collect_list (the path a 100 TB label
+    layer takes), asserted by making any broadcast build unreachable. Both
+    return the identical chip table."""
+    from terrakit_spark.operators import spatial_join as sj
 
     pred = "(scene_id % 25) IN (15, 20)"
     cols = ["scene_id", "win_index", "px_sum", "px_sumsq", "label_mass"]
 
-    def rows(via):
-        df = chip_pipeline(spark, sf_dir, scene_pred=pred, labels_via=via).select(*cols)
+    def rows():
+        df = chip_pipeline(spark, sf_dir, scene_pred=pred).select(*cols)
         return sorted((r.scene_id, r.win_index, tuple(r.px_sum), tuple(r.px_sumsq), r.label_mass) for r in df.collect())
 
-    assert rows("broadcast") == rows("join")
-
-
-def test_labels_via_auto_probes_size(synth, spark, sf_dir, monkeypatch):
-    """'auto' picks the path from the MEASURED label-side size: under a
-    forced-tiny broadcast budget it must take the join path (asserted by
-    the absence of any driver-side broadcast build) and still produce the
-    identical chip table."""
-    import terrakit_spark.pipeline as P
-
-    pred = "(scene_id % 25) = 15"
-    cols = ["scene_id", "win_index", "label_mass"]
-
-    def rows(**kw):
-        df = P.chip_pipeline(spark, sf_dir, scene_pred=pred, **kw).select(*cols)
-        return sorted((r.scene_id, r.win_index, r.label_mass) for r in df.collect())
-
-    expected = rows(labels_via="broadcast")
-    # a zero budget forces the join path; prove it by making the broadcast
-    # build unreachable
+    pulls = _spy_pull(monkeypatch)
+    expected = rows()
+    assert pulls and pulls[-1].bcast is not None
+    monkeypatch.setattr(sj, "INDEX_MAX_BYTES", 0)
     monkeypatch.setattr(
         spark.sparkContext, "broadcast",
-        lambda *_: (_ for _ in ()).throw(AssertionError("auto took the broadcast path")),
+        lambda *_: (_ for _ in ()).throw(AssertionError("a gate of 0 built a broadcast")),
     )
-    assert rows(labels_via="auto", broadcast_max_bytes=0) == expected
-    monkeypatch.undo()
-    # the default budget keeps the small synthetic layer on the broadcast path
-    pulls = _spy_pull(monkeypatch)
-    assert rows(labels_via="auto") == expected
-    assert pulls and pulls[-1][1] is not None
+    assert rows() == expected and expected
 
 
 def _spy_pull(monkeypatch) -> list:

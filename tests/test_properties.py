@@ -1,16 +1,18 @@
-"""Property-based tests (hypothesis) for the pure numpy kernels — the
-reference has no property testing (SURVEY §5); these pin the geometry and
-tiling invariants under randomized inputs."""
+"""Property-based tests (hypothesis) for the pure numpy kernels and the
+cell-pair candidate join — the reference has no property testing
+(SURVEY §5); these pin the geometry, tiling and join invariants under
+randomized inputs."""
 
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from terrakit_spark.functions.geometry import ray_cast
 from terrakit_spark.functions.raster_kernels import impute_nodata_nearest
 from terrakit_spark.operators.polygonize import connected_components
+from terrakit_spark.operators.spatial_join import _salt_fan, cell_pair_join
 from terrakit_spark.pipeline import _windows
 from terrakit_spark.synth import CHIP
 
@@ -183,3 +185,75 @@ def test_sat_depth_and_clip_area_agree_on_random_convex_pairs():
     a_clip = clip_area(tiny, np.full(B, 4), big, np.full(B, 6))
     assert (a_clip <= a_t + 1e-12).all()
     assert (np.abs(a_clip - a_t) < 1e-12).mean() > 0.9
+
+
+# --------------------------------------------------------- cell_pair_join
+_A_BOX = ("ax0", "ay0", "ax1", "ay1")
+_B_BOX = ("bx0", "by0", "bx1", "by1")
+
+
+@st.composite
+def _box_layers(draw):
+    """(cell_deg, n_salts, points, a rows, b rows): two small box layers on a
+    lattice of quarter cells, so edges land on cell lines as often as not.
+    Both layers sit in one 4 x 4-cell window whose anchor may touch
+    ±180/±90; a side may be empty, may lie inside the window's first cell,
+    and may carry a planted hotspot (one box repeated). With points, the a
+    side is its boxes' lower-left corners."""
+    cell = draw(st.sampled_from([1.0 / 256, 1.0 / 8, 1.0]))
+    n_salts = draw(st.sampled_from([0, 2, 8]))
+    nx, ny = int(round(360 / cell)), int(round(180 / cell))
+    cx = draw(st.integers(0, nx - 4) | st.sampled_from([0, nx - 4]))
+    cy = draw(st.integers(0, ny - 4) | st.sampled_from([0, ny - 4]))
+    q = cell / 4
+
+    def layer(first_id):
+        span = 3 if draw(st.booleans()) else 16  # inside one cell, or across the window
+        boxes = []
+        for _ in range(draw(st.integers(0, 8))):
+            x0, y0 = draw(st.integers(0, span)), draw(st.integers(0, span))
+            x1, y1 = draw(st.integers(x0, span)), draw(st.integers(y0, span))
+            boxes.append((-180 + (4 * cx + x0) * q, -90 + (4 * cy + y0) * q, -180 + (4 * cx + x1) * q, -90 + (4 * cy + y1) * q))
+        if boxes and draw(st.booleans()):
+            boxes += [boxes[0]] * draw(st.integers(8, 24))
+        return [(first_id + i, *b) for i, b in enumerate(boxes)]
+
+    return cell, n_salts, draw(st.booleans()), layer(0), layer(1000)
+
+
+def _brute_pairs(a, b) -> list[tuple[int, int]]:
+    """Every (a id, b id) whose boxes overlap as closed intervals."""
+    if not a or not b:
+        return []
+    A, B = np.array(a, dtype=np.float64), np.array(b, dtype=np.float64)
+    hit = (
+        (A[:, None, 3] >= B[None, :, 1]) & (A[:, None, 1] <= B[None, :, 3])
+        & (A[:, None, 4] >= B[None, :, 2]) & (A[:, None, 2] <= B[None, :, 4])
+    )
+    ia, ib = np.nonzero(hit)
+    return sorted(zip(A[ia, 0].astype(int).tolist(), B[ib, 0].astype(int).tolist()))
+
+
+@settings(max_examples=14, deadline=None)
+@given(_box_layers())
+# an empty side, and two boxes sharing only the corner (+180, +90)
+@example((1.0, 2, False, [], [(1000, 0.0, 0.0, 1.0, 1.0)]))
+@example((1.0 / 8, 8, False, [(0, 179.875, 89.875, 180.0, 90.0)], [(1000, 180.0, 90.0, 180.0, 90.0)]))
+def test_cell_pair_join_matches_brute_force(spark, layers):
+    """cell_pair_join returns each closed-interval box overlap exactly once,
+    at every cell size and salt fan, for box and point a sides."""
+    cell, n_salts, points, a, b = layers
+    if points:
+        a = [(i, x, y, x, y) for i, x, y, _, _ in a]
+    da = spark.createDataFrame(a, "aid long, ax0 double, ay0 double, ax1 double, ay1 double")
+    db = spark.createDataFrame(b, "bid long, bx0 double, by0 double, bx1 double, by1 double")
+    a_box = ("ax0", "ay0", "ax0", "ay0") if points else _A_BOX
+    got = sorted(tuple(r) for r in cell_pair_join(da, db, a_box, _B_BOX, cell, n_salts).select("aid", "bid").collect())
+    assert got == _brute_pairs(a, b)
+
+
+def test_salt_fan_boundary():
+    """Salting starts only above two fair task shares: need == 2.0 keeps
+    the join unsalted, the next representable need fans out to 4."""
+    assert _salt_fan(1024, 4096, 8, 64) == 0  # need = 1024 * 8 / 4096 = 2.0
+    assert _salt_fan(1025, 4096, 8, 64) == 4  # need = 2.001953125
