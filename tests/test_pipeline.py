@@ -65,12 +65,11 @@ def test_zero_scene_guard(synth, sf_dir, spark):
     assert zeroed == 0
 
 
-def test_chip_table_does_not_depend_on_the_byte_gate(synth, spark, sf_dir, monkeypatch):
-    """The label layer's size picks its path: under the default gate the
-    small synthetic layer is broadcast; at a gate of 0 the chip job takes
-    the cover-cell join + per-scene collect_list (the path a 100 TB label
-    layer takes), asserted by making any broadcast build unreachable. Both
-    return the identical chip table."""
+def test_labels_via_join_matches_broadcast(synth, spark, sf_dir, monkeypatch):
+    """The non-broadcastable-labels path (cover-cell equi-join + per-scene
+    collect_list, the path a 100 TB label layer takes) must produce the
+    identical chip table as the broadcast path. The label layer's size picks
+    the path, so a gate of 0 stands in for a layer too large to broadcast."""
     from terrakit_spark.operators import spatial_join as sj
 
     pred = "(scene_id % 25) IN (15, 20)"
@@ -80,9 +79,31 @@ def test_chip_table_does_not_depend_on_the_byte_gate(synth, spark, sf_dir, monke
         df = chip_pipeline(spark, sf_dir, scene_pred=pred).select(*cols)
         return sorted((r.scene_id, r.win_index, tuple(r.px_sum), tuple(r.px_sumsq), r.label_mass) for r in df.collect())
 
+    broadcast = rows()
+    monkeypatch.setattr(sj, "INDEX_MAX_BYTES", 0)
+    assert rows() == broadcast and broadcast
+
+
+def test_labels_via_auto_probes_size(synth, spark, sf_dir, monkeypatch):
+    """The path is picked from the MEASURED label-side size: at a gate of 0
+    the chip job must take the join path (asserted by the absence of any
+    driver-side broadcast build) and still produce the identical chip table;
+    under the default gate the small synthetic layer is broadcast."""
+    from terrakit_spark.operators import spatial_join as sj
+
+    pred = "(scene_id % 25) = 15"
+    cols = ["scene_id", "win_index", "label_mass"]
+
+    def rows():
+        df = chip_pipeline(spark, sf_dir, scene_pred=pred).select(*cols)
+        return sorted((r.scene_id, r.win_index, r.label_mass) for r in df.collect())
+
     pulls = _spy_pull(monkeypatch)
     expected = rows()
+    # the default gate keeps the small synthetic layer on the broadcast path
     assert pulls and pulls[-1].bcast is not None
+    # a zero gate forces the join path; prove it by making the broadcast
+    # build unreachable
     monkeypatch.setattr(sj, "INDEX_MAX_BYTES", 0)
     monkeypatch.setattr(
         spark.sparkContext, "broadcast",
