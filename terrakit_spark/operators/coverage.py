@@ -13,13 +13,14 @@ equi-join to labels -> canonical-cell dedup + bbox prefilter (JVM-side) ->
 ONE Arrow refine per candidate, whose kernel (rect_cover_area) gives a
 polygon lying inside its tile its own area, precomputed once per polygon
 by the layer's GeomIndex, and sends only boundary-crossing pairs through
-the rect clip -> per-tile aggregate. When both layers fit the byte gate,
-each is pulled once per application and that pull serves everything: the
-salt fan is decided on the driver from the pulled bboxes, and the join
-reads both sides from the pulled rows (in-memory relations the planner
-broadcasts by their exact size) instead of re-scanning the scenes and
-labels files on every call. Over the gate, the join scans the layers and
-the probe_salts job decides the fan.
+the rect clip -> per-tile aggregate. Both layers derive from the stored
+`scenes` and `labels` tables, each pulled once per application into an
+in-memory relation (`stored_layer`), so no call re-scans their files; the
+tile explode runs as a Generate over the pulled scenes. When both layers
+fit the byte gate, the polygon layer's GeomIndex and the tiles' bboxes are
+pulled once more as arrays: the salt fan is decided on the driver from
+those bboxes. Over the gate, the join scans the layers and the
+probe_salts job decides the fan.
 
 Cross-engine determinism: per-pair areas are scaled to exact integer
 micro-deg^2 (round(area * 1e6)) before the rollup, so the group sums are
@@ -69,8 +70,8 @@ def tile_coverage_join(
     skew class as convex_overlap_join (a hot cell's tile x label product is
     ONE join key). None (default) decides on the driver (bbox_salts) when
     the polygon layer has a GeomIndex and the tiles' bboxes fit the same
-    byte cap, else by the probe_salts job. Each layer that fits is read from
-    its pull, not re-scanned.
+    byte cap, else by the probe_salts job. The join plans over `tiles` as
+    given and `polys` without `vertices` when it has a GeomIndex.
 
     One candidate join (cell_pair_join, tiles as its a side) feeds one
     Arrow refine. Its kernel splits on containment: a polygon whose
@@ -78,13 +79,11 @@ def tile_coverage_join(
     GeomIndex, or one shoelace pass on the column path), so only
     boundary-crossing pairs pay clip_area_rect. Geometry is read as in
     cell_pip_join; both paths return the same rows."""
-    geo, bcast, rel = geom_index(polys, verts_key)
+    geo, bcast = geom_index(polys, verts_key)
     tb = None
     if geo is not None:
-        polys = rel
-        tb, _, tiles_rel = layer_bboxes(tiles, TILE_BOX)
-        if tb is not None:
-            tiles = tiles_rel
+        polys = polys.drop("vertices")
+        tb = layer_bboxes(tiles, TILE_BOX).value
     bboxes = None if tb is None else (tb, geo.bbox)
     cand = cell_pair_join(tiles, polys, TILE_BOX, BBOX, cell_deg, n_salts, bboxes)
     rect = [F.col(c) for c in TILE_BOX]

@@ -28,7 +28,6 @@ from terrakit_spark.dialect import DUCK, SPARK, D
 from terrakit_spark.registry import register_df, register_sql, with_synth
 
 PATCH = 16
-HMOD = 1000000007
 
 
 def decode_real(media_bytes: bytes) -> np.ndarray:

@@ -27,7 +27,7 @@ from terrakit_spark.catalog import _register_views
 from terrakit_spark.dialect import DUCK
 from terrakit_spark.functions.geometry import ray_cast
 from terrakit_spark.operators.chips import SMALL_PRED_SQL
-from terrakit_spark.operators.spatial_join import BBOX, adaptive_cell_deg, cell_pair_join
+from terrakit_spark.operators.spatial_join import BBOX, adaptive_cell_deg, cell_pair_join, stored_layer
 from terrakit_spark.registry import register_df, with_synth
 from terrakit_spark.synth import RES, RES_SQL
 
@@ -431,16 +431,19 @@ def scene_label_pairs(spark: SparkSession, scenes_sql_pred: str) -> DataFrame:
     as the density side, scenes as the extent floor — scene bboxes are the
     big geometry, so the floor keeps their cover-cell replication bounded);
     cell size is a pruning knob only, every resolution yields the same
-    refined pairs (burn_histogram's oracle is the invariance proof)."""
+    refined pairs (burn_histogram's oracle is the invariance proof). Both
+    sides read the pulled stored tables (`stored_layer`), not their files."""
     scenes = spark.sql(
-        f"SELECT scene_id, width, height, xmin, ymin, xmax, ymax FROM scenes WHERE {scenes_sql_pred}"
+        f"SELECT scene_id, width, height, xmin, ymin, xmax, ymax FROM {{scenes}} WHERE {scenes_sql_pred}",
+        scenes=stored_layer(spark, "scenes"),
     )
     labels = spark.sql(
         """
         SELECT label_id, labelclass, geom_seq, cx, cy, rx, ry,
                cx - rx AS lxmin, cy - ry AS lymin, cx + rx AS lxmax, cy + ry AS lymax
-        FROM labels
-        """
+        FROM {labels}
+        """,
+        labels=stored_layer(spark, "labels"),
     )
     deg = adaptive_cell_deg(labels, "cx", "cy", scenes, target_per_cell=256.0)
     pairs = cell_pair_join(scenes, labels, BBOX, ("lxmin", "lymin", "lxmax", "lymax"), deg)
@@ -458,7 +461,7 @@ def burn_histogram(spark: SparkSession, sf_dir: str, fill: int = BACKGROUND) -> 
     download_data.py:369,387-388), which frees class 0 for real labels."""
     _register_views(spark, sf_dir)
     pairs = scene_label_pairs(spark, SMALL_PRED_SQL)
-    scenes = spark.sql(f"SELECT scene_id, width, height, xmin, ymax FROM scenes WHERE {SMALL_PRED_SQL}")
+    scenes = stored_layer(spark, "scenes").filter(SMALL_PRED_SQL).select("scene_id", "width", "height", "xmin", "ymax")
 
     def burn_group(key, pdf):
         cls, cnt = np.unique(burn_scene(pdf, fill), return_counts=True)

@@ -75,12 +75,13 @@ def cell_pair_join(
     the fan: bbox_salts on the driver from `bboxes` (the two sides' (n, 4)
     bbox arrays) when given, else the probe_salts job.
 
-    No forced broadcast: an index-sized side is an in-memory relation whose
-    exact size lets the planner broadcast it up front; over the gate, AQE
-    converts the shuffle join to broadcast at runtime when a side IS small
-    (a forced hint errors outright once a side passes Spark's 8 GB
-    broadcast cap, as the exploded label side of the scene join does at
-    sf1+)."""
+    No forced broadcast: an index-sized side derives from a pulled stored
+    table (`stored_layer`), and Spark folds a projection or filter over
+    that relation into a LocalRelation whose exact size lets the planner
+    broadcast it up front; over the gate, AQE converts the shuffle join to
+    broadcast at runtime when a side IS small (a forced hint errors outright
+    once a side passes Spark's 8 GB broadcast cap, as the exploded label
+    side of the scene join does at sf1+)."""
     points = a_box[0] == a_box[2] and a_box[1] == a_box[3]
     if points:
         a_cells = with_point_cell(a, a_box[0], a_box[1], out="_cell", cell_deg=cell_deg)
@@ -140,9 +141,9 @@ def cell_pip_join(
     vertices column per row."""
     if cell_deg is None:
         cell_deg = adaptive_cell_deg(points, px, py, polys)
-    geo, bcast, rel = geom_index(polys, verts_key, vertices)
+    geo, bcast = geom_index(polys, verts_key, vertices)
     if geo is not None:
-        polys = rel
+        polys = polys.drop(vertices)
     cand = cell_pair_join(points, polys, (px, py, px, py), BBOX, cell_deg, n_salts)
     if candidate_filter is not None:
         cand = cand.filter(candidate_filter)
@@ -368,109 +369,97 @@ def bbox_salts(bbox_a: np.ndarray, bbox_b: np.ndarray, cell_deg: float, par: int
 
 # ------------------------------------------------------ driver-side layers
 # A layer small enough for the driver is pulled ONCE per (application,
-# semantic plan, byte cap) with one Arrow job. The same pull feeds the
-# join's salt fan and refine geometry (numpy) AND becomes the join's input:
-# an in-memory relation of the pulled rows, so a warm call neither probes,
-# collects nor re-reads the layer's files. Spark plans that relation as a
+# semantic plan, byte cap) with one Arrow job, of just the columns a build
+# reads. The same pull feeds the join's salt fan and refine geometry
+# (numpy), so a warm call neither probes nor collects. `stored_layer` is the
+# one pull that builds a relation: each stored table's rows, read once per
+# application. The joins plan over the layers they are given, which derive
+# from those relations; Spark folds a projection or filter over one into a
 # LocalRelation with exact size statistics, so its own planner picks the
-# broadcast side of the candidate join. `stored_layer` serves a whole
-# stored table the same way (rows only, no value, no broadcast).
+# broadcast side of the candidate join and no file is re-read.
 INDEX_MAX_BYTES = 128 << 20  # padded vertex cube (rows x max vertices x 16)
 BBOX = ("xmin", "ymin", "xmax", "ymax")
 
 
 class Pulled(NamedTuple):
-    """A memoized layer pull: the built value (None when over the cap or
-    nothing was built), its broadcast (None without a value), and the pulled
-    rows as an in-memory DataFrame (None when the caller asked for no
-    relation or the layer is over the cap)."""
+    """A memoized layer pull: the built value (None when over the cap) and,
+    for a value executors read, its broadcast."""
 
     value: object
-    bcast: Broadcast | None
-    rel: DataFrame | None
+    bcast: Broadcast | None = None
 
 
-_NOT_PULLED = Pulled(None, None, None)
+_NOT_PULLED = Pulled(None)
 
 
-def _pull(layer: DataFrame, cols: list[str], build, keep: list[str] | None = None) -> Pulled:
-    """Memoized Pulled of build(layer[cols] as Arrow, max_bytes), where
+def _pull(layer: DataFrame, cols: list[str], build) -> Pulled:
+    """Memoized build(layer[cols] as Arrow, max_bytes), a Pulled, where
     max_bytes is INDEX_MAX_BYTES read at call time and kept in the memo key
-    (a changed gate never reuses a pull admitted under the old one); value
-    is None when the layer is over max_bytes. Spark's own plan size estimate
-    (the one it trusts before collecting a broadcast-join side) screens out
-    layers too big to pull; `build` applies the exact gate to the pulled
-    arrays and keeps numpy only. build=None builds no value: the exact gate
-    is the pulled Arrow table's nbytes <= max_bytes, and an admitted pull
-    yields `rel` only (no value, no broadcast). With `keep`, the pull reads
-    the whole layer and its `keep` columns also become `rel`, a DataFrame
-    over the pulled Arrow table with layer.select(*keep)'s schema (column
-    order and types); without it, the pull reads `cols` only. A built value
-    is broadcast once; the catalog's plan memo unpersists it on eviction or
+    (a changed gate never reuses a pull admitted under the old one). Spark's
+    own plan size estimate (the one it trusts before collecting a
+    broadcast-join side) screens out layers too big to pull; `build` applies
+    the exact gate to the pulled table and returns _NOT_PULLED over it. The
+    catalog's plan memo unpersists a built broadcast on eviction or
     release."""
-    df = layer if keep is not None else layer.select(*cols)
-    spark = layer.sparkSession
     max_bytes = INDEX_MAX_BYTES
 
     def pull() -> Pulled:
+        df = layer.select(*cols)
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        t = df.toArrow() if est <= max_bytes else None
-        value = None if t is None or build is None else build(t.select(cols), max_bytes)
-        admitted = value is not None or (build is None and t is not None and t.nbytes <= max_bytes)
-        return _NOT_PULLED if not admitted else Pulled(
-            value,
-            None if value is None else spark.sparkContext.broadcast(value),
-            None if keep is None else spark.createDataFrame(t.select(keep), schema=layer.select(*keep).schema),
-        )
+        return build(df.toArrow(), max_bytes) if est <= max_bytes else _NOT_PULLED
 
-    return memoized((df,), ("pull", tuple(cols), tuple(keep or ()), max_bytes), pull)
+    return memoized((layer,), ("pull", tuple(cols), max_bytes), pull)
 
 
 def geom_index(layer: DataFrame, key: str, vertices: str = "vertices") -> Pulled:
-    """Pulled(GeomIndex, its broadcast, the layer without `vertices`) of a
-    polygon layer, or all None for the per-row path: no `key` column, keys
-    that are null or not unique, or a cube over INDEX_MAX_BYTES."""
-    columns = layer.columns
-    if key not in columns:
+    """Pulled(GeomIndex, its broadcast) of a polygon layer, or all None for
+    the per-row path: no `key` column, keys that are null or not unique, or
+    a cube over INDEX_MAX_BYTES."""
+    if key not in layer.columns:
         return _NOT_PULLED
 
     def build(t, max_bytes):
         v, k = t.column(vertices).combine_chunks(), t.column(key)
         counts = v.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
         if v.null_count or k.null_count or len(counts) * (counts.max(initial=0) // 2) * 16 > max_bytes:
-            return None
+            return _NOT_PULLED
         keys = k.to_numpy().astype(np.int64)
         if len(np.unique(keys)) < len(keys):
-            return None
+            return _NOT_PULLED
         bbox = np.column_stack([t.column(c).to_numpy() for c in BBOX])
-        return GeomIndex.build(keys, bbox, v.flatten().to_numpy(), counts)
+        geo = GeomIndex.build(keys, bbox, v.flatten().to_numpy(), counts)
+        return Pulled(geo, layer.sparkSession.sparkContext.broadcast(geo))
 
-    keep = [c for c in columns if c != vertices]
-    return _pull(layer, [key, *BBOX, vertices], build, keep)
+    return _pull(layer, [key, *BBOX, vertices], build)
 
 
 def layer_bboxes(layer: DataFrame, cols: tuple[str, str, str, str]) -> Pulled:
-    """Pulled((n, 4) float64 bboxes, their broadcast, the whole layer) of a
-    layer without geometry, e.g. tiles (cols = xmin, ymin, xmax, ymax), or
-    all None over INDEX_MAX_BYTES. The bboxes are the salt-decision input
-    for that side."""
+    """Pulled((n, 4) float64 bboxes) of a layer without geometry, e.g. tiles
+    (cols = xmin, ymin, xmax, ymax), or None over INDEX_MAX_BYTES: the
+    driver's salt-decision input for that side (bbox_salts). Nothing is
+    broadcast."""
 
     def build(t, max_bytes):
         if t.num_rows * 32 > max_bytes:
-            return None
-        return np.column_stack([t.column(c).to_numpy() for c in cols])
+            return _NOT_PULLED
+        return Pulled(np.column_stack([t.column(c).to_numpy() for c in cols]))
 
-    return _pull(layer, list(cols), build, layer.columns)
+    return _pull(layer, list(cols), build)
 
 
 def stored_layer(spark: SparkSession, name: str) -> DataFrame:
     """The stored table `name` as pulled rows (an in-memory relation with
-    the view's schema) when it fits INDEX_MAX_BYTES, else the view itself.
-    Pulled on first use, once per application; the staged chip job's stages
-    and the spatial joins' derived layers (`_diamond_polys`, `_geo_tiles`)
-    plan over it instead of re-reading the table's files."""
+    the view's schema) when its Arrow table fits INDEX_MAX_BYTES, else the
+    view itself. Pulled on first use, once per application: the one pull
+    that builds a relation. The staged chip job's stages, the scene-label
+    join and the spatial joins' derived layers (`_diamond_polys`,
+    `_geo_tiles`) plan over it instead of re-reading the table's files."""
     layer = spark.table(name)
-    rel = _pull(layer, [], None, layer.columns).rel
+
+    def build(t, max_bytes):
+        return Pulled(spark.createDataFrame(t, schema=layer.schema)) if t.nbytes <= max_bytes else _NOT_PULLED
+
+    rel = _pull(layer, layer.columns, build).value
     return layer if rel is None else rel
 
 
@@ -571,12 +560,12 @@ def convex_overlap_join(
     Each side reads geometry as in cell_pip_join: with both indexes the
     Arrow transfer per candidate pair is two int64 keys. The output never
     carries `vertices`/`vertices_b`."""
-    geo_a, bcast_a, rel_a = geom_index(polys_a, verts_key)
-    geo_b, bcast_b, rel_b = geom_index(polys_b, verts_key)
+    geo_a, bcast_a = geom_index(polys_a, verts_key)
+    geo_b, bcast_b = geom_index(polys_b, verts_key)
     if geo_a is not None:
-        polys_a = rel_a
+        polys_a = polys_a.drop("vertices")
     if geo_b is not None:
-        polys_b = rel_b
+        polys_b = polys_b.drop("vertices")
     b = polys_b.select([F.col(c).alias(f"{c}_b") for c in polys_b.columns])
     bboxes = (geo_a.bbox, geo_b.bbox) if geo_a is not None and geo_b is not None else None
     b_box = tuple(f"{c}_b" for c in BBOX)
@@ -594,25 +583,20 @@ def polygon_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (591 vs 2501 s) — the hotspot product dominates this join at every
     density tried, and unsalted it rides one task; the probe encodes that
     trigger instead of a hand-flipped constant."""
-    _register_views(spark, sf_dir)
-    d = _diamond_polys(spark).select("label_id", "xmin", "ymin", "xmax", "ymax", "vertices")
-    b = d.filter("label_id % 2 = 1")
-    a = d.filter("label_id % 2 = 0")
-    return convex_overlap_join(a, b).select(
-        F.col("label_id").alias("label_a"), F.col("label_id_b").alias("label_b")
-    )
+    return _even_odd_overlap(spark, sf_dir, None)
 
 
 def _polygon_overlap_join_unsalted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unsalted physical variant pinned to the IDENTICAL oracle — the
     salt-invariance proof (same pattern as spatial_join_pip/_salted)."""
+    return _even_odd_overlap(spark, sf_dir, 0)
+
+
+def _even_odd_overlap(spark: SparkSession, sf_dir: str, n_salts: int | None) -> DataFrame:
     _register_views(spark, sf_dir)
     d = _diamond_polys(spark).select("label_id", "xmin", "ymin", "xmax", "ymax", "vertices")
-    a = d.filter("label_id % 2 = 0")
-    b = d.filter("label_id % 2 = 1")
-    return convex_overlap_join(a, b, n_salts=0).select(
-        F.col("label_id").alias("label_a"), F.col("label_id_b").alias("label_b")
-    )
+    pairs = convex_overlap_join(d.filter("label_id % 2 = 0"), d.filter("label_id % 2 = 1"), n_salts=n_salts)
+    return pairs.select(F.col("label_id").alias("label_a"), F.col("label_id_b").alias("label_b"))
 
 
 def _sat_gap(ax: str, ay: str) -> str:

@@ -22,6 +22,7 @@ mapInPandas stages so one fat-dim scene run doesn't serialize a thread."""
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 from terrakit_spark.catalog import _register_views
 from terrakit_spark.operators.asof import _asof_join
 from terrakit_spark.operators.rasterize import burn_image, diamond_cube, scene_label_pairs
-from terrakit_spark.operators.spatial_join import _pull, stored_layer
+from terrakit_spark.operators.spatial_join import _NOT_PULLED, Pulled, _pull, stored_layer
 from terrakit_spark.sources.raster import scene_pixels
 from terrakit_spark.synth import CHIP
 
@@ -103,15 +104,16 @@ def register_transform(name: str, fn) -> None:
 _LABEL_ROW_BYTES = 48  # 6 numeric cols x 8 B: the broadcast dict's payload
 
 
-def _label_arrays(t, max_bytes: float) -> dict | None:
-    """The broadcast label layer: numpy columns in geom_seq order, or None
-    when rows x _LABEL_ROW_BYTES is over max_bytes."""
+def _label_arrays(spark: SparkSession, t, max_bytes: float) -> Pulled:
+    """The broadcast label layer: numpy columns in geom_seq order and their
+    broadcast, or _NOT_PULLED when rows x _LABEL_ROW_BYTES is over
+    max_bytes."""
     if t.num_rows * _LABEL_ROW_BYTES > max_bytes:
-        return None
+        return _NOT_PULLED
     order = np.argsort(t.column("geom_seq").to_numpy(), kind="stable")
     out = {c: t.column(c).to_numpy()[order].astype(np.float64) for c in ("cx", "cy", "rx", "ry")}
     out["cls"] = t.column("labelclass").to_numpy()[order].astype(np.int32)
-    return out
+    return Pulled(out, spark.sparkContext.broadcast(out))
 
 
 def chip_pipeline(
@@ -147,7 +149,8 @@ def chip_pipeline(
     scenes = matched_scenes(spark, scene_pred, scenes_df=scenes_df, matched_dates=matched_dates)
     n_parts = shuffle_parts or spark.sparkContext.defaultParallelism
 
-    bc = _pull(stored_layer(spark, "labels"), ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"], _label_arrays).bcast
+    label_cols = ["geom_seq", "labelclass", "cx", "cy", "rx", "ry"]
+    bc = _pull(stored_layer(spark, "labels"), label_cols, partial(_label_arrays, spark)).bcast
 
     if bc is not None:
         # cost-striped partitioning: order scenes by pixel cost desc and

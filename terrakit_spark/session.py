@@ -47,6 +47,13 @@ def iceberg_jar() -> str | None:
         return None
 
 
+def _driver_memory() -> str:
+    """Half of physical RAM, capped at 48g: a heap sized past the box lets
+    the driver JVM grow instead of collecting until the kernel kills it."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(ram_mb // 2, 48 << 10)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "terrakit_spark",
@@ -84,7 +91,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")

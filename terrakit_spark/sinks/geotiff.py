@@ -28,7 +28,6 @@ import numpy as np
 _SHORT, _LONG, _ASCII, _DOUBLE = 3, 4, 2, 12
 
 _SAMPLE_FORMAT = {"float32": 3, "int32": 2}
-_DTYPE = {"float32": np.float32, "int32": np.int32}
 
 
 def geotiff_bytes(

@@ -32,6 +32,7 @@ serializes one partition's features per file (foreachPartition-friendly),
 
 from __future__ import annotations
 
+import math
 import struct
 from datetime import date
 
@@ -42,9 +43,12 @@ SHAPE_POLYGON = 5
 
 # --------------------------------------------------------------------- rings
 def _signed_area2(ring: np.ndarray) -> float:
-    """Twice the signed area (positive = counter-clockwise)."""
+    """Twice the signed area (positive = counter-clockwise). The per-edge
+    terms are summed exactly (math.fsum), so the sign does not depend on the
+    array's memory layout (np.dot's rounding does) and a reversed ring reads
+    exactly the negated value."""
     x, y = ring[:, 0], ring[:, 1]
-    return float(np.dot(x, np.roll(y, -1)) - np.dot(np.roll(x, -1), y))
+    return math.fsum(x * np.roll(y, -1) - np.roll(x, -1) * y)
 
 
 def _close_cw(ring: np.ndarray) -> np.ndarray:

@@ -52,8 +52,6 @@ NODATA_EVERY = 997  # every 997th pixel (by linear index) is a nodata hole
 
 # (width, height) cycle; covers all reference chip fixture shapes
 DIMS = [(256, 256), (512, 768), (700, 300), (10, 10), (64, 48)]
-# dims small enough for the per-pixel SQL oracle
-SMALL_DIM_IDX = (3, 4)  # (10,10) and (64,48)
 
 
 # ---------------------------------------------------------------- labels

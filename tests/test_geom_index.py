@@ -1,8 +1,9 @@
 """The driver-side geometry index and the plan shape it buys: one Arrow
-pull per index-sized layer (none when warm) that is also the join's input,
-one Arrow refine per candidate, loud lookups, a size-independent output
-schema, released layers, and the same rows whichever path (index or per-row
-vertices, driver or Spark salt decision) the byte gate picks."""
+pull per index-sized layer (none when warm), joins that plan over the
+pulled stored tables, one Arrow refine per candidate, loud lookups, a
+size-independent output schema, released layers, and the same rows
+whichever path (index or per-row vertices, driver or Spark salt decision)
+the byte gate picks."""
 
 from __future__ import annotations
 
@@ -130,8 +131,8 @@ def test_pulled_layers_are_the_join_input(layers, spark, sf_dir):
 
 def test_evicted_layer_is_released_and_repulled(layers, spark, monkeypatch):
     """With room for one layer, pulling a second unpersists the first one's
-    broadcast and drops its relation; the first join then re-pulls with one
-    job and returns the same rows."""
+    broadcast and drops it; the first join then re-pulls with one job and
+    returns the same rows."""
     from tests.util import jobs_launched
 
     d, _ = layers
@@ -143,9 +144,9 @@ def test_evicted_layer_is_released_and_repulled(layers, spark, monkeypatch):
     ((memo, pulled),) = catalog._MEMO.items()
     unpersisted, real = [], pulled.bcast.unpersist
     monkeypatch.setattr(pulled.bcast, "unpersist", lambda *a: unpersisted.append(a) or real(*a))
-    assert sj.geom_index(d.filter("label_id % 2 = 0"), "label_id").rel is not None
+    assert sj.geom_index(d.filter("label_id % 2 = 0"), "label_id").bcast is not None
     assert unpersisted and memo not in catalog._MEMO
-    assert all(p.rel is not pulled.rel for p in catalog._MEMO.values())
+    assert all(p.bcast is not pulled.bcast for p in catalog._MEMO.values())
     df, jobs = jobs_launched(spark, join)
     assert jobs == 1 and first and _rows(df) == first
 
@@ -158,10 +159,11 @@ def test_materialize_synth_releases_the_applications_layers(layers, spark, sf_di
     app = spark.sparkContext.applicationId
     monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
     sj.geom_index(d, "label_id")
-    sj.layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax"))
+    assert sj.layer_bboxes(tiles, ("txmin", "tymin", "txmax", "tymax")).bcast is None
     unpersisted = []
     for p in catalog._MEMO.values():
-        monkeypatch.setattr(p.bcast, "unpersist", lambda *a, real=p.bcast.unpersist: unpersisted.append(a) or real(*a))
+        if p.bcast is not None:
+            monkeypatch.setattr(p.bcast, "unpersist", lambda *a, real=p.bcast.unpersist: unpersisted.append(a) or real(*a))
     assert len(unpersisted) == 0 and len(catalog._MEMO) == 2
     # probed cell sizes and salt fans, this application's and another's
     catalog._MEMO.update({(app, 1, 2): 0.5, ("other", 1, 2): 0.5, (app, 1, 2, 64): 8, ("other", 1, 2, 64): 8})
@@ -169,7 +171,7 @@ def test_materialize_synth_releases_the_applications_layers(layers, spark, sf_di
     try:
         catalog.materialize_synth(spark, sf_dir, str(tmp_path / "stored"))
         assert not any(k[0] == app for k in catalog._MEMO)
-        assert len(unpersisted) == 2
+        assert len(unpersisted) == 1
         assert list(catalog._MEMO) == [("other", 1, 2), ("other", 1, 2, 64)]
     finally:
         # re-point the views at the on-the-fly synth derivations
@@ -237,7 +239,7 @@ def test_probe_and_layer_evict_each_other(layers, spark, monkeypatch):
     ((probe_key, memo),) = catalog._MEMO.items()
     assert unpersisted and "cell_deg" in probe_key and memo == deg
     again, jobs = jobs_launched(spark, lambda: sj.geom_index(d, "label_id"))
-    assert jobs == 1 and again.rel is not pulled.rel and list(catalog._MEMO) == [layer_key]
+    assert jobs == 1 and again.bcast is not pulled.bcast and list(catalog._MEMO) == [layer_key]
 
 
 @pytest.mark.parametrize("cell_deg", [0.25, 1.0, 2.0])

@@ -273,6 +273,26 @@ def test_cold_pass_reads_each_stored_table_once(stored, spark, sf_dir, duck, mon
         _restore_views(spark, sf_dir)
 
 
+def test_cold_pass_builds_one_relation_per_stored_table(synth, spark, sf_dir, monkeypatch):
+    """A cold polygon overlap join and tile coverage build one in-memory
+    relation per stored table they read (`labels`, `scenes`); the layers
+    derived from them are pulled as arrays only."""
+    from pyspark.sql import SparkSession
+
+    built, real = [], SparkSession.createDataFrame
+
+    def spy(self, data, schema=None, *args, **kw):
+        built.append(schema)
+        return real(self, data, schema, *args, **kw)
+
+    catalog._register_views(spark, sf_dir)
+    monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
+    monkeypatch.setattr(SparkSession, "createDataFrame", spy)
+    for q in ("polygon_overlap_join", "tile_label_coverage"):
+        QUERIES[q](spark, sf_dir).count()
+    assert built == [spark.table("labels").schema, spark.table("scenes").schema]
+
+
 def test_spatial_join_pip_planning_jobs_cold_then_warm(synth, spark, sf_dir, monkeypatch):
     """Planned cold, spatial_join_pip runs adaptive_cell_deg's probe (one
     collect, which AQE runs as a job per stage) and the polygon pulls (the

@@ -53,3 +53,22 @@ def test_call_site_capture_is_off_by_default(tmp_path, sf_dir):
 def test_spark_conf_turns_call_site_capture_back_on(tmp_path, sf_dir):
     got = _run(tmp_path, sf_dir, {"spark.python.sql.dataFrameDebugging.enabled": "true"}, plan=False)
     assert "DIVIDE_BY_ZERO" in got["error"] and _SITE in got["error"], got["error"]
+
+
+def test_driver_memory_defaults_within_ram():
+    """With SPARK_GRAFT_DRIVER_MEM unset, the conf asks for half of physical
+    RAM (capped at 48g) and the driver JVM's heap limit is within RAM."""
+    code = (
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
+        "from terrakit_spark.session import get_spark\n"
+        "sc = get_spark(master='local[1]', shuffle_partitions=1).sparkContext\n"
+        "print(sc.getConf().get('spark.driver.memory'), sc._jvm.java.lang.Runtime.getRuntime().maxMemory())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DRIVER_MEM"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=300, check=True, env=env
+    ).stdout
+    conf, heap = out.strip().splitlines()[-1].split()
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    assert conf == f"{min(ram_mb // 2, 48 << 10)}m"
+    assert int(heap) < ram_mb << 20
