@@ -10,4 +10,12 @@ quality) — all DataFrame API + Arrow pandas UDFs, zero per-row Python.
 
 __version__ = "0.1.0"
 
-from terrakit_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name):
+    # lazy, so importing the package (as the worker daemon does, before it
+    # fixes its path) does not import pyspark
+    if name == "get_spark":
+        from terrakit_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -16,6 +16,22 @@ spatial joins makes hundreds of such calls. With capture off, an error
 context names a JVM frame instead of the user's line. To get the line back,
 pass `extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`
 to get_spark or set it in spark-defaults.conf.
+
+Python workers, on a local master only. Spark heads every worker's
+`PYTHONPATH` with `pyspark.zip`, `py4j-*.zip` and the spark-core jar, so a
+worker imports pyspark from the zip: compiled from source at every daemon
+start, and each task's `importlib.invalidate_caches()` (pyspark's
+`setup_spark_files`) re-reads every archive's directory, 0.11-0.25 s per
+task on a 4-core box. get_spark therefore selects `terrakit_spark.daemon`
+through Spark's own `spark.python.daemon.module`: it drops those archives
+when the interpreter holds an installed pyspark of the zip's version and an
+installed py4j (see that module), so workers import the driver's
+byte-compiled pyspark. get_spark also puts the engine's root at the head of
+`spark.executorEnv.PYTHONPATH` (merged with one given in `extra_conf`), so
+workers import the engine, and the daemon, whatever the JVM's cwd. A
+cluster master keeps Spark's daemon and worker path: its executors need not
+hold the engine's root or an installed pyspark. For the stock daemon, pass
+`extra_conf={"spark.python.daemon.module": "pyspark.daemon"}`.
 """
 
 from __future__ import annotations
@@ -54,6 +70,72 @@ def _driver_memory() -> str:
     return f"{min(ram_mb // 2, 48 << 10)}m"
 
 
+def spark_conf(
+    master: str,
+    app_name: str = "terrakit_spark",
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The session conf get_spark builds for ``master``; ``extra_conf`` wins,
+    except that a local master's ``spark.executorEnv.PYTHONPATH`` keeps the
+    engine's root at its head."""
+    if shuffle_partitions is None:
+        # match parallelism of the master when local, else a cluster default
+        if master.startswith("local["):
+            inner = master[len("local[") : -1]
+            shuffle_partitions = os.cpu_count() or 32 if inner == "*" else int(inner)
+        else:
+            shuffle_partitions = 200
+
+    conf = {
+        "spark.master": master,
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "32768",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": "1073741824",
+        "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": "1073741824",
+        # call-site capture off (see the module docstring); extra_conf can
+        # turn it back on. PySpark reads the flag once per driver process,
+        # on the first wrapped API call, and caches it: sessions built later
+        # in the same process keep the first one's value.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+    }
+    jar = iceberg_jar()
+    if jar:
+        # real Iceberg catalog (hadoop, warehouse under ./spark-warehouse or
+        # $SPARK_GRAFT_ICEBERG_WAREHOUSE); the snapshot stand-in remains the
+        # default path — callers opt in via writeTo("iceberg.<table>")
+        conf.update(
+            {
+                "spark.jars": jar,
+                "spark.sql.extensions": "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
+                "spark.sql.catalog.iceberg": "org.apache.iceberg.spark.SparkCatalog",
+                "spark.sql.catalog.iceberg.type": "hadoop",
+                "spark.sql.catalog.iceberg.warehouse": os.environ.get(
+                    "SPARK_GRAFT_ICEBERG_WAREHOUSE", "spark-warehouse/iceberg"
+                ),
+            }
+        )
+    conf.update(extra_conf or {})
+    if master.split("[")[0] == "local":
+        # workers run on this host: they import the engine from its root
+        # (whatever the JVM's cwd) and start from the engine daemon (see the
+        # module docstring); a cluster keeps Spark's worker path and daemon
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        own = conf.get("spark.executorEnv.PYTHONPATH")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join([root, own] if own else [root])
+        conf.setdefault("spark.python.daemon.module", "terrakit_spark.daemon")
+    return conf
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "terrakit_spark",
@@ -73,53 +155,9 @@ def get_spark(
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    if shuffle_partitions is None:
-        # match parallelism of the master when local, else a cluster default
-        if master.startswith("local["):
-            inner = master[len("local[") : -1]
-            shuffle_partitions = os.cpu_count() or 32 if inner == "*" else int(inner)
-        else:
-            shuffle_partitions = 200
-
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
-        .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")
-        # call-site capture off (see the module docstring); extra_conf can
-        # turn it back on. PySpark reads the flag once per driver process,
-        # on the first wrapped API call, and caches it: sessions built later
-        # in the same process keep the first one's value.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    )
-    jar = iceberg_jar()
-    if jar:
-        # real Iceberg catalog (hadoop, warehouse under ./spark-warehouse or
-        # $SPARK_GRAFT_ICEBERG_WAREHOUSE); the snapshot stand-in remains the
-        # default path — callers opt in via writeTo("iceberg.<table>")
-        builder = (
-            builder.config("spark.jars", jar)
-            .config("spark.sql.extensions", "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions")
-            .config("spark.sql.catalog.iceberg", "org.apache.iceberg.spark.SparkCatalog")
-            .config("spark.sql.catalog.iceberg.type", "hadoop")
-            .config(
-                "spark.sql.catalog.iceberg.warehouse",
-                os.environ.get("SPARK_GRAFT_ICEBERG_WAREHOUSE", "spark-warehouse/iceberg"),
-            )
-        )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    builder = SparkSession.builder
+    for k, v in spark_conf(master, app_name, shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
